@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries.{DedupQueries, EventQueries, ExtraQueries, GraphQueries, Memo, Prelude, TextQueries}
+
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -37,7 +39,7 @@ object Bench {
     val filter: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => filter.forall(_.contains(n)) }
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -56,15 +58,7 @@ object Bench {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // local-iteration A/B overrides ("k=v;k=v"); the driver never sets
-    // this — committed numbers always come from the defaults above
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm-up: touch every table (footer + first-read paths), then run
@@ -82,12 +76,7 @@ object Bench {
     // drop warm-up state: evict every memo FIRST (clearCache alone
     // unpersists the frames but the memos would keep re-serving them,
     // re-materializing without the intended one-time count)
-    graft.queries.DedupQueries.evictAll(spark)
-    graft.queries.Quantizer.evictAll(spark)
-    graft.queries.TextQueries.evictAll(spark)
-    graft.queries.EventQueries.evictAll(spark)
-    graft.queries.ExtraQueries.evictAll(spark)
-    graft.queries.GraphQueries.evictAll(spark)
+    Memo.evictAll(spark)
     spark.catalog.clearCache()
     System.gc()
 
@@ -170,54 +159,18 @@ object Bench {
     // regression in embedPairsExact): each build times its component
     // materializations separately; the total is their sum, and the
     // component breakdown of the FASTEST build lands in BENCH_local.json
-    // (d00_components / m00_components / t00_components) so the next
-    // prelude regression names its culprit.
-    //   d00: dedup pair builds + Quantizer caches (d- and s-queries)
-    //   m00: the two media near-dup pair frames — stub-decoded
-    //        (m03 presents, m05 clusters) and REAL-codec (m08/m09)
-    //   t00: the bigram-count frame (t14/t21) + trained BPE (t15/t16/t17/t24)
-    final case class PreludeSpec(
-      name: String,
-      appliesTo: String => Boolean,
-      evict: () => Unit,
-      parts: () => Seq[(String, () => Unit)])
-    val preludeSpecs = Seq(
-      PreludeSpec("d00_dedup_prelude",
-        n => n.startsWith("d") || n.startsWith("s"),
-        () => {
-          graft.queries.DedupQueries.evict(spark, sfDir)
-          graft.queries.Quantizer.evict(spark, sfDir)
-        },
-        () => graft.queries.DedupQueries.prewarmParts(spark, sfDir)),
-      PreludeSpec("m00_media_prelude",
-        graft.queries.EventQueries.preludeConsumers.contains,
-        () => graft.queries.EventQueries.evict(spark, sfDir),
-        () => graft.queries.EventQueries.prewarmParts(spark, sfDir)),
-      PreludeSpec("t00_text_prelude",
-        graft.queries.TextQueries.preludeConsumers.contains,
-        () => graft.queries.TextQueries.evict(spark, sfDir),
-        () => graft.queries.TextQueries.prewarmParts(spark, sfDir)),
-      // x00: the memoized x20 .MM.gz artifact (ADVICE r11 — per-session
-      // memoization made x20's min-of-N time the serve only; the build's
-      // write/encode cost stays visible here as its own attributed entry)
-      PreludeSpec("x00_mm_prelude",
-        graft.queries.ExtraQueries.preludeConsumers.contains,
-        () => graft.queries.ExtraQueries.evict(spark, sfDir),
-        () => graft.queries.ExtraQueries.prewarmParts(spark, sfDir)),
-      // g00: the shared graph edge builds (trade pairs, weighted trade
-      // pairs, co-purchase pairs) — r13: every g-row previously re-ran
-      // its base-graph build inside its own timed region
-      PreludeSpec("g00_graph_prelude",
-        graft.queries.GraphQueries.preludeConsumers.contains,
-        () => graft.queries.GraphQueries.evict(spark, sfDir),
-        () => graft.queries.GraphQueries.prewarmParts(spark, sfDir)))
+    // (d00_components / m00_components / ...) so the next prelude
+    // regression names its culprit. Each prelude is declared next to the
+    // memos it fills; the order here is the order of the JSON entries.
+    val preludes = Seq(DedupQueries.prelude, EventQueries.prelude, TextQueries.prelude,
+      ExtraQueries.prelude, GraphQueries.prelude)
 
     val preludeParts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
-    def runPrelude(spec: PreludeSpec): Option[(String, (Double, Double))] = {
-      if (!filter.forall(_.exists(spec.appliesTo))) return None
+    def runPrelude(spec: Prelude): Option[(String, (Double, Double))] = {
+      if (!filter.forall(_.exists(spec.consumedBy))) return None
       def build(): Option[Double] = {
-        spec.evict()
-        val thunks = spec.parts()
+        spec.evict(spark, sfDir)
+        val thunks = spec.parts(spark, sfDir)
         val parts = thunks.flatMap { case (part, body) =>
           timedOnce(s"${spec.name.take(3)}/$part", body()).map(part -> _)
         }
@@ -241,7 +194,7 @@ object Bench {
     }
 
     val results: Seq[(String, (Double, Double))] =
-      (preludeSpecs.flatMap(runPrelude) ++
+      (preludes.flatMap(runPrelude) ++
         selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
           timed(name, fn(spark, sfDir).count()).map(name -> _)
         })

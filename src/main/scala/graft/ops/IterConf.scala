@@ -28,12 +28,9 @@ import org.apache.spark.sql.SparkSession
   * partitioning, never a constant tuned for one deployment):
   * ceil(inputRows / 1M rows) partitions, clamped to the session's
   * shuffle.partitions — so a toy graph runs 1-2-task rounds, while at
-  * 100 TB the clamp keeps the session's production width. Sessions
-  * that want AQE inside rounds regardless (e.g. unknown edge skew
-  * feeding the contribution join) set `graft.iter.keepAqe=true`.
+  * 100 TB the clamp keeps the session's production width.
   *
-  * The toggle is a set/restore around the loop — single-session
-  * assumption, same as the memo locks (documented in DedupQueries).
+  * The toggle is a set/restore around the loop (graft.SessionConf.scoped).
   */
 object IterConf {
 
@@ -50,31 +47,14 @@ object IterConf {
   val RowsPerPartition: Long = 65536L
 
   def scoped[T](s: SparkSession, inputRows: Long)(body: => T): T = {
-    if (s.conf.getOption("graft.iter.keepAqe").contains("true")) return body
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevAqe = s.conf.getOption(aqeKey)
-    val prevPart = s.conf.getOption(partKey)
-    val sessionParts =
-      prevPart.flatMap(p => scala.util.Try(p.toInt).toOption)
-        .getOrElse(s.sparkContext.defaultParallelism)
+    val sessionParts = s.conf.getOption("spark.sql.shuffle.partitions")
+      .flatMap(p => scala.util.Try(p.toInt).toOption)
+      .getOrElse(s.sparkContext.defaultParallelism)
     val p = math.max(1L,
       math.min(sessionParts.toLong,
         (inputRows + RowsPerPartition - 1) / RowsPerPartition)).toInt
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partKey, p.toString)
-    try body finally {
-      prevAqe.fold(s.conf.unset(aqeKey))(s.conf.set(aqeKey, _))
-      prevPart.fold(s.conf.unset(partKey))(s.conf.set(partKey, _))
-    }
-  }
-
-  /** [[scoped]] without a size hint — AQE off, session partitions kept. */
-  def withoutAqe[T](s: SparkSession)(body: => T): T = {
-    if (s.conf.getOption("graft.iter.keepAqe").contains("true")) return body
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    graft.SessionConf.scoped(s, Map(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> p.toString))(body)
   }
 }

@@ -58,12 +58,6 @@ object SkewJoin {
       // splitting only helps if the advisory target is below the skewed
       // partition's size — pin it to the threshold
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> thresholdBytes.toString)
-    val prev = overrides.keys.map(k => k -> s.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+    graft.SessionConf.scoped(s, overrides)(body)
   }
 }

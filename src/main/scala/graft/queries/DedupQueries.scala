@@ -41,47 +41,18 @@ object DedupQueries {
     * 3 s vs 30 s run-to-run variance on identical queries). The persisted
     * frames are a few MB — per-doc signatures, not data-scale objects.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
-  // synchronized: TrieMap.getOrElseUpdate may evaluate the builder in
-  // TWO racing threads and discard one result — leaking the loser's
-  // persisted frame until session end (the media-pair-memo hardening).
-  // Coarse per-memo locking is deliberate for the single-session
-  // bench/verify lifecycle; a multi-session server would memoize a
-  // lazy per-key handle via putIfAbsent instead.
-  private def cached(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
-    memo.synchronized(memo.getOrElseUpdate((System.identityHashCode(s), dir, key), {
-      val df = build.persist()
-      df.count()
-      df
-    }))
+  private[queries] val memo = Memo.frames()
 
-  /** Unpersist and drop every memoized frame for (session, dir). Without
-    * this, a blanket `catalog.clearCache()` unpersists the frames but the
-    * memo would keep re-serving them — re-materializing the full plan on
-    * every reuse without the intended one-time `count()`. Bench calls
-    * this between its warm-up (sf0.001) and timed (target-SF) sections.
+  /** Unpersist and drop every memoized frame for (session, dir). */
+  def evict(s: SparkSession, dir: String): Unit = memo.evict(s, dir)
+
+  /** d00: the dedup pair builds plus the Quantizer caches, shared by the
+    * d- and s-queries. Timed as its own entry so the d02/d03/d05 timings
+    * measure their own joins, not a shared build attributed to whichever
+    * query ran first.
     */
-  def evict(s: SparkSession, dir: String): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(k => k._1 == sid && k._2 == dir)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-  }
-
-  /** Evict every dir memoized for this session. */
-  def evictAll(s: SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(_._1 == sid)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-  }
-
-  /** Materialize the shared sub-results (signatures, LSH candidates,
-    * shingle sets) for a dir. Bench times this as its own entry so the
-    * d02/d03/d05 timings measure their own joins, not a shared build
-    * attributed to whichever query ran first.
-    */
-  def prewarm(s: SparkSession, dir: String): Unit =
-    prewarmParts(s, dir).foreach(_._2())
+  val prelude: Prelude = Prelude("d00_dedup_prelude",
+    n => n.startsWith("d") || n.startsWith("s"), Seq(memo, Quantizer.memo), prewarmParts)
 
   /** The prelude's component builds, individually invokable so Bench can
     * time each one: r5's single d00 number hid a +11 s regression inside
@@ -142,7 +113,7 @@ object DedupQueries {
     else v.filter(pmod(col("vec_id"), lit((n + bound - 1) / bound)) === 0)
 
   private def embedPairsExact(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "embedpairs") {
+    memo(s, dir, "embedpairs") {
       // the memoized widened norm frame (Quantizer.vecsNorm): the
       // quadratic stage's parallelism = stream-side partitions, so the
       // single-split test file must not reach the join un-widened
@@ -207,7 +178,7 @@ object DedupQueries {
     * config; a few MB, not data-scale.
     */
   private def sweepCandidates(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "sweep") {
+    memo(s, dir, "sweep") {
       // r14: the r=4 config of the sweep IS lshCandidates (same 4-slot
       // banding, same MaxBucket cap, same doc_a < doc_b pairs; a bucket
       // of 1 proposes nothing, so the count filters' 1-vs-2 lower bound
@@ -244,7 +215,7 @@ object DedupQueries {
     * projections — no aggregation needed to regroup k-rows into bands.
     */
   private[queries] def minhashArr(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "sigarr") {
+    memo(s, dir, "sigarr") {
       shingleSets(s, dir)
         .filter(size(col("gs")) > 0)
         .select(col("doc_id"),
@@ -252,7 +223,7 @@ object DedupQueries {
     }
 
   private def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "sig") {
+    memo(s, dir, "sig") {
       minhashArr(s, dir)
         .select(col("doc_id"), posexplode(col("slots")))
         .toDF("doc_id", "k", "v")
@@ -272,7 +243,7 @@ object DedupQueries {
     * at least one full band whose bucket is under MaxBucket.
     */
   private[queries] def lshCandidates(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "cand") {
+    memo(s, dir, "cand") {
       // band signatures SLICED straight from the per-doc slot array
       // (slots are already in k order) — an earlier form posexploded to
       // (doc_id, k, v) and re-grouped with a (doc_id, band) aggregate,
@@ -307,7 +278,7 @@ object DedupQueries {
     * threshold is near-dup-sized — a few MB, never corpus-scale.
     */
   private def neardupPairs(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "neardup") {
+    memo(s, dir, "neardup") {
       val cand = lshCandidates(s, dir)
       val sets = shingleSets(s, dir)
       val a = sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("gs", "gsa")
@@ -331,14 +302,14 @@ object DedupQueries {
     * d00 component ("neardup_cc").
     */
   private def neardupLabels(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "cclabels") {
+    memo(s, dir, "cclabels") {
       graft.ops.ConnectedComponents.minLabel(
         neardupPairs(s, dir).select("doc_a", "doc_b"))._1
     }
 
   /** Per-doc distinct shingle sets: one linear scan, no shuffle. */
   private def shingleSets(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "sets") {
+    memo(s, dir, "sets") {
       // WIDENED as of r13: the historical net-negative (8-way widening
       // taxed d19's CC+PageRank rounds ~+3 s, which re-scheduled every
       // inherited partition per round) no longer holds — cached-plan
@@ -1160,9 +1131,7 @@ object DedupQueries {
     // inside the watermark horizon, evicted as it passes — bounded at
     // any corpus rate.
     "d21_stream_sig_dedup" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = Tables.stream(s, dir, "documents")
       val docs = src.withColumn("ts",
         timestamp_micros(col("doc_id") * 1000000L + lit(86400000000L)))
       val deduped = graft.streaming.Streaming.dedupNearStream(docs)

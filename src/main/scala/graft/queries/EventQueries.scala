@@ -20,22 +20,18 @@ import graft.functions.TextFns.h60
 object EventQueries {
 
   /** Run a live streaming query with shuffle partitions scoped small
-    * (x08 save/restore pattern): each stateful streaming operator opens
+    * (graft.SessionConf.scoped): each stateful streaming operator opens
     * one state store PER shuffle partition, and at the bench's tiny
     * per-partition volume 32 of them are pure fixed init/commit cost
     * (measured ~40% of e17). The conf is read at start() and restored
     * after stop(), so the shared session is untouched; at scale this
     * knob is sized to the stream rate instead.
     */
-  private[queries] def scopedStream[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "8")
-    try body finally { prev.fold(s.conf.unset(key))(s.conf.set(key, _)) }
-  }
+  private[queries] def scopedStream[T](s: SparkSession)(body: => T): T =
+    graft.SessionConf.scoped(s, Map("spark.sql.shuffle.partitions" -> "8"))(body)
 
 
-  /** Session-scoped memo of the media near-dup PAIR frame (the
+  /** Session-scoped memo of the media near-dup PAIR frames (the
     * DedupQueries.memo idiom): m03 presents it and m05's connected
     * components + census consume it, so the decode→LSH→pair pipeline
     * runs once per (session, dir) instead of once per consumer (m05
@@ -44,22 +40,13 @@ object EventQueries {
     * a per-call localCheckpoint). Pair volume is near-dup-sized, never
     * corpus-sized.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
+  private[queries] val memo = Memo.frames()
 
   /** Within-bucket cosine pairs over the stub-decoded media features
     * (media_a, media_b, c at the 0.999 threshold), eagerly persisted.
     */
   private[queries] def mediaPairs(s: SparkSession, dir: String): DataFrame =
-    // synchronized: TrieMap.getOrElseUpdate may evaluate the builder in
-    // two racing threads and discard one — here the loser would be a
-    // fully-persisted frame leaking executor storage for the session.
-    // The lock is deliberately COARSE (whole memo, including the eager
-    // persist+count job): an unrelated (session, dir)'s first call
-    // blocks behind another's build. Acceptable for the single-session
-    // bench/verify lifecycle this serves; a concurrent multi-session
-    // server would memoize a lazy per-key handle via putIfAbsent instead
-    memo.synchronized(memo.getOrElseUpdate((System.identityHashCode(s), dir), {
+    memo(s, dir, "media_pairs") {
       import s.implicits._
       import graft.functions.VecFns._
       // widened (Tables.widenIfNarrow): the per-row decode+feature pass
@@ -76,18 +63,15 @@ object EventQueries {
         .withColumn("bucket", lshBucketN(col("e"), 16))
       val a = v.as("a")
       val b = v.as("b")
-      val df = a.join(b, col("a.bucket") === col("b.bucket") &&
+      a.join(b, col("a.bucket") === col("b.bucket") &&
           col("a.media_id") < col("b.media_id"))
         .select(col("a.media_id").as("media_a"), col("b.media_id").as("media_b"),
           dotSeq(col("a.e"), col("b.e")).as("c"))
         .filter(col("c") >= 0.999)
-        .persist()
-      df.count()
-      df
-    }))
+    }
 
-  /** Session-scoped memo of the REAL-CODEC media near-dup pair frame
-    * (m08 presents it, m09 clusters it — the m03/m05 pipeline shapes
+  /** The REAL-CODEC media near-dup pair frame, memoized beside
+    * [[mediaPairs]] (m08 presents it, m09 clusters it — the m03/m05 pipeline shapes
     * re-run over ACTUALLY-DECODED pixels): a deterministic test-card
     * PNG is rendered per doc (seed = doc_id % 50, so each seed group is
     * pixel-identical — guaranteed exact-dup cliques), the payload goes
@@ -103,12 +87,8 @@ object EventQueries {
     * match). Downstream is m03's exact scale shape: L2-normalize,
     * sign-LSH bucket, within-bucket cosine pairs at 0.999.
     */
-  private val memoReal =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
   private[queries] def realMediaPairs(s: SparkSession, dir: String): DataFrame =
-    // synchronized builder — see mediaPairs
-    memoReal.synchronized(memoReal.getOrElseUpdate((System.identityHashCode(s), dir), {
+    memo(s, dir, "media_real_pairs") {
       import s.implicits._
       import graft.functions.VecFns._
       // widened for the same reason as mediaPairs: the render+decode
@@ -132,43 +112,25 @@ object EventQueries {
         .withColumn("bucket", lshBucketN(col("e"), 16))
       val a = v.as("a")
       val b = v.as("b")
-      val df = a.join(b, col("a.bucket") === col("b.bucket") &&
+      a.join(b, col("a.bucket") === col("b.bucket") &&
           col("a.media_id") < col("b.media_id"))
         .select(col("a.media_id").as("media_a"), col("b.media_id").as("media_b"),
           dotSeq(col("a.e"), col("b.e")).as("c"))
         .filter(col("c") >= 0.999)
-        .persist()
-      df.count()
-      df
-    }))
+    }
 
   /** Unpersist and drop the memoized pair frames for (session, dir). */
-  def evict(s: SparkSession, dir: String): Unit = {
-    val sid = System.identityHashCode(s)
-    Seq(memo, memoReal).foreach { m =>
-      m.keys.filter(k => k._1 == sid && k._2 == dir)
-        .foreach(k => m.remove(k).foreach(_.unpersist(blocking = true)))
-    }
-  }
+  def evict(s: SparkSession, dir: String): Unit = memo.evict(s, dir)
 
-  /** Evict every dir memoized for this session. */
-  def evictAll(s: SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    Seq(memo, memoReal).foreach { m =>
-      m.keys.filter(_._1 == sid)
-        .foreach(k => m.remove(k).foreach(_.unpersist(blocking = true)))
-    }
-  }
-
-  /** The queries consuming the memoized pair builds (Bench's m00 gate). */
-  val preludeConsumers: Set[String] =
+  /** m00: the two media near-dup pair frames — stub-decoded (m03
+    * presents, m05 clusters) and real-codec (m08/m09).
+    */
+  val prelude: Prelude = Prelude("m00_media_prelude",
     Set("m03_media_neardup", "m05_media_clusters",
-      "m08_media_real_neardup", "m09_media_real_clusters")
-
-  /** Prelude component builds for Bench attribution. */
-  def prewarmParts(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
-    "media_pairs" -> (() => { mediaPairs(s, dir); () }),
-    "media_real_pairs" -> (() => { realMediaPairs(s, dir); () }))
+      "m08_media_real_neardup", "m09_media_real_clusters"), Seq(memo),
+    (s, dir) => Seq(
+      "media_pairs" -> (() => { mediaPairs(s, dir); () }),
+      "media_real_pairs" -> (() => { realMediaPairs(s, dir); () })))
 
   private val SessionGapNs: Long = 30L * 60 * 1000 * 1000 * 1000 // 30 min
   private val DayNs: Long = 86400L * 1000 * 1000 * 1000
@@ -692,7 +654,7 @@ object EventQueries {
     // corpus; a production caller uses append mode + a parquet/kafka sink.
     // Window bounds re-emitted as nanos bigints for oracle dtype parity.
     "e05_stream_window" -> { (s, dir) =>
-      val src = Tables.eventsStream(s, dir)
+      val src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
       val agg = graft.streaming.Streaming.windowedTypeStats(src, "1 hour", "2 hours")
       val sink = "e05_stream_window_sink"
@@ -717,7 +679,7 @@ object EventQueries {
     // store round-trips). Oracle = e07's SQL: the streamed answer must
     // equal the batch answer once all input is consumed.
     "e11_stream_topk" -> { (s, dir) =>
-      val src = Tables.eventsStream(s, dir) // registers graft_topk
+      val src = Tables.stream(s, dir, "events") // registers graft_topk
       val agg = src.groupBy("event_type")
         .agg(expr("graft_topk(value, event_id, 3)").as("top"))
       val sink = "e11_stream_topk_sink"
@@ -742,7 +704,7 @@ object EventQueries {
     // streamed answer equal its batch answer once all input is
     // consumed). Oracle = x17's SQL.
     "e13_stream_kmv" -> { (s, dir) =>
-      val src = Tables.eventsStream(s, dir) // registers graft_kmv
+      val src = Tables.stream(s, dir, "events") // registers graft_kmv
       val agg = src.groupBy("event_type")
         .agg(expr("graft_kmv(graft_md5p60(CAST(user_id AS STRING)), 64)").as("sk"))
       val sink = "e13_stream_kmv_sink"
@@ -774,7 +736,7 @@ object EventQueries {
     // final watermark (max event time - delay) — sessions still inside
     // the horizon when input ends are correctly absent from both sides.
     "e10_stream_session" -> { (s, dir) =>
-      val src = Tables.eventsStream(s, dir)
+      val src = Tables.stream(s, dir, "events")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .withWatermark("ts2", "2 hours")
       val agg = src
@@ -806,7 +768,7 @@ object EventQueries {
     // mode), so the streamed answer equals the batch interval join the
     // oracle runs.
     "e17_stream_join" -> { (s, dir) =>
-      def src = Tables.eventsStream(s, dir)
+      def src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .select("user_id", "event_id", "event_type", "ts")
       val clicks = src.filter(col("event_type") === "click")
@@ -841,7 +803,7 @@ object EventQueries {
     // MIN of the two sides' (max event-time − 2 h) marks (each
     // watermark node observes only the rows flowing through it).
     "e24_stream_outer_join" -> { (s, dir) =>
-      def src = Tables.eventsStream(s, dir)
+      def src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .select("user_id", "event_id", "event_type", "ts")
       val clicks = src.filter(col("event_type") === "click")
@@ -876,7 +838,7 @@ object EventQueries {
     // 339<340 emits / 340 doesn't, and 309<310 emits / 310 doesn't);
     // wm = MIN of the two sides' (max event-time − 2 h) marks.
     "e25_stream_full_outer_join" -> { (s, dir) =>
-      def src = Tables.eventsStream(s, dir)
+      def src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .select("user_id", "event_id", "event_type", "ts")
       val clicks = src.filter(col("event_type") === "click")
@@ -908,7 +870,7 @@ object EventQueries {
     // state lives the lag longer and its null row gates on
     // v_ms < wm − 2 h (strict — the same boundary e25's probes pin).
     "e26_stream_right_outer_join" -> { (s, dir) =>
-      def src = Tables.eventsStream(s, dir)
+      def src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .select("user_id", "event_id", "event_type", "ts")
       val clicks = src.filter(col("event_type") === "click")
@@ -945,7 +907,7 @@ object EventQueries {
     "e27_stream_static_enrich" -> { (s, dir) =>
       val dim = broadcast(Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
-      val src = Tables.eventsStream(s, dir)
+      val src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .select("user_id", "value", "ts")
       val agg = src.join(dim, col("user_id") === col("c_custkey"))
@@ -1032,7 +994,7 @@ object EventQueries {
       // flatMapGroupsWithState (a projection dropping it would erase
       // the EventTimeWatermark node); the encoder binds TEvent's fields
       // by name and ignores the extras
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
         .withWatermark("ts2", "2 hours")
@@ -1062,7 +1024,7 @@ object EventQueries {
     // moments as a ROWS window ending 1 PRECEDING.
     "e21_stream_anomaly" -> { (s, dir) =>
       import s.implicits._
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
         .withWatermark("ts2", "2 hours")
@@ -1093,7 +1055,7 @@ object EventQueries {
     // below the final watermark, kept where strictly increasing.
     "e29_stream_funnel" -> { (s, dir) =>
       import s.implicits._
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
         .withWatermark("ts2", "2 hours")
@@ -1125,7 +1087,7 @@ object EventQueries {
     "e30_stream_gaps" -> { (s, dir) =>
       import s.implicits._
       val GapNs = 900000000000L // 15 min
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
         .withWatermark("ts2", "2 hours")
@@ -1167,7 +1129,7 @@ object EventQueries {
       val two53 = 9.007199254740992e15
       val estRaw = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(m.toDouble)) *
         lit(m.toDouble * m) / (col("sk.ssum").cast(DoubleType) / lit(two53))
-      val src = Tables.eventsStream(s, dir)
+      val src = Tables.stream(s, dir, "events")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts")))
         .withWatermark("ts2", "2 hours")
       val agg = src.groupBy(window(col("ts2"), "1 day"), col("event_type"))
@@ -1201,7 +1163,7 @@ object EventQueries {
     // rule. 18th live streaming oracle row.
     "e32_stream_shift" -> { (s, dir) =>
       import s.implicits._
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
         .withWatermark("ts2", "2 hours")
@@ -1232,7 +1194,7 @@ object EventQueries {
     // such views are always themselves final. 19th live streaming row.
     "e33_stream_asof" -> { (s, dir) =>
       import s.implicits._
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .filter(col("event_type").isin("click", "view"))
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
@@ -1268,7 +1230,7 @@ object EventQueries {
     // argmax. 20th live streaming oracle row.
     "e34_stream_asof_full" -> { (s, dir) =>
       import s.implicits._
-      val ev = Tables.eventsStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
         .filter(col("event_type").isin("click", "view"))
         .withColumnRenamed("ts", "ts_ns")
         .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))

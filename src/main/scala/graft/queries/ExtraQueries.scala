@@ -25,96 +25,64 @@ object ExtraQueries {
     * (session, dir) — the ADVICE r10 fix: each invocation used to cut a
     * fresh temp dir, unbounded growth in a long-lived server session).
     * The artifact is immutable once written (the returned frame reads it
-    * lazily), so reuse is safe; dirs are reclaimed at JVM shutdown.
-    */
-  private val mmMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-
-  /** Build (or serve) the memoized x20 .MM.gz artifact for
-    * (session, dir). The build is synchronized on the memo (the same
-    * hardening the media pair memos got): TrieMap.getOrElseUpdate alone
-    * can run two racing builders and leak the loser's temp dir until
-    * JVM exit. Coarse per-memo locking is fine here — one artifact per
-    * bench/verify session, built once.
-    */
-  private def mmArtifact(s: SparkSession, dir: String): String =
-    mmMemo.synchronized {
-      mmMemo.getOrElseUpdate((System.identityHashCode(s), dir), {
-        // persisted: the frame feeds both the 1-row dims aggregate and
-        // the body write — without it the lineitem aggregation runs twice
-        val cells = Tables(s, dir, "lineitem")
-          .select(col("l_orderkey").as("row"),
-            col("l_linenumber").cast(LongType).as("col"),
-            col("l_quantity").cast(LongType).as("value"))
-          .groupBy("row", "col").agg(sum("value").as("value"))
-          .persist()
-        val Seq(maxR, maxC, nnz) = cells
-          .agg(max("row"), max("col"), count(lit(1)))
-          .collect().head.toSeq.map(_.asInstanceOf[Long])
-        val tmp = java.nio.file.Files.createTempDirectory("x20_mm").toString
-        new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sessionState.newHadoopConf())
-          .deleteOnExit(new org.apache.hadoop.fs.Path(tmp))
-        val header = s.range(1).select(lit(0L).as("ord"),
-          lit("%%MatrixMarket matrix coordinate integer general").as("line"))
-          .unionByName(s.range(1).select(lit(1L).as("ord"),
-            lit(s"$maxR $maxC $nnz").as("line")))
-        val body = cells.select((lit(2L) + col("row") * (maxC + 1) + col("col")).as("ord"),
-          concat_ws(" ", col("row"), col("col"), col("value")).as("line"))
-        header.unionByName(body).repartition(1).sortWithinPartitions("ord")
-          .select("line")
-          .write.option("compression", "gzip").text(s"$tmp/txt")
-        val part = new java.io.File(s"$tmp/txt").listFiles()
-          .filter(_.getName.endsWith(".gz")).head
-        val out = s"$tmp/junction.MM.gz"
-        java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(out))
-        cells.unpersist()
-        out
-      })
-    }
-
-  /** Queries that consume the memoized x20 artifact — Bench times its
-    * build as the attributed `x00_mm_prelude` entry (via
-    * [[prewarmParts]]) so the memoization cannot silently hide the
-    * write/encode cost from the min-of-N per-query numbers.
-    */
-  val preludeConsumers: Set[String] = Set("x20_mm_window")
-
-  /** Attributed prelude builds for Bench (the DedupQueries.prewarmParts
-    * pattern): materialize the x20 artifact, timed as its own entry.
-    */
-  def prewarmParts(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
-    "mm_artifact" -> (() => { mmArtifact(s, dir); () }))
-
-  /** Drop (and reclaim) the memoized x20 artifact for (session, dir) —
-    * the eviction hook every other memo in the repo has, so a session
-    * whose source data changed can flush the stale artifact.
+    * lazily), so reuse is safe; dirs are reclaimed at JVM shutdown, or on
+    * evict.
     *
     * CONTRACT: x20 frames read the on-disk artifact LAZILY (that laziness
     * is the row's point — pushdown happens at action time), so callers
     * must not hold a returned x20 frame across an evict of its
-    * (session, dir): the delete below reclaims the directory immediately
+    * (session, dir): evict deletes the artifact's directory immediately
     * and a later action on such a frame fails with file-not-found.
     * Sessions that need stale-frame safety should skip evict and rely on
     * the JVM-shutdown reclamation (deleteOnExit is registered at build).
     */
-  def evict(s: SparkSession, dir: String): Unit = {
-    val sid = System.identityHashCode(s)
-    mmMemo.keys.filter(k => k._1 == sid && k._2 == dir).foreach { k =>
-      mmMemo.remove(k).foreach { mm =>
-        val p = new org.apache.hadoop.fs.Path(mm).getParent
-        try p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
+  private[queries] val mmMemo = Memo[String] { (s, mm) =>
+    val p = new org.apache.hadoop.fs.Path(mm).getParent
+    try { p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true); () }
+    catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Evict every dir memoized for this session. */
-  def evictAll(s: SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    mmMemo.keys.filter(_._1 == sid)
-      .foreach(k => evict(s, k._2))
-  }
+  /** Build (or serve) the memoized x20 .MM.gz artifact for (session, dir). */
+  private[queries] def mmArtifact(s: SparkSession, dir: String): String =
+    mmMemo(s, dir, "mm_artifact") {
+      // persisted: the frame feeds both the 1-row dims aggregate and
+      // the body write — without it the lineitem aggregation runs twice
+      val cells = Tables(s, dir, "lineitem")
+        .select(col("l_orderkey").as("row"),
+          col("l_linenumber").cast(LongType).as("col"),
+          col("l_quantity").cast(LongType).as("value"))
+        .groupBy("row", "col").agg(sum("value").as("value"))
+        .persist()
+      val Seq(maxR, maxC, nnz) = cells
+        .agg(max("row"), max("col"), count(lit(1)))
+        .collect().head.toSeq.map(_.asInstanceOf[Long])
+      val tmp = java.nio.file.Files.createTempDirectory("x20_mm").toString
+      new org.apache.hadoop.fs.Path(tmp)
+        .getFileSystem(s.sessionState.newHadoopConf())
+        .deleteOnExit(new org.apache.hadoop.fs.Path(tmp))
+      val header = s.range(1).select(lit(0L).as("ord"),
+        lit("%%MatrixMarket matrix coordinate integer general").as("line"))
+        .unionByName(s.range(1).select(lit(1L).as("ord"),
+          lit(s"$maxR $maxC $nnz").as("line")))
+      val body = cells.select((lit(2L) + col("row") * (maxC + 1) + col("col")).as("ord"),
+        concat_ws(" ", col("row"), col("col"), col("value")).as("line"))
+      header.unionByName(body).repartition(1).sortWithinPartitions("ord")
+        .select("line")
+        .write.option("compression", "gzip").text(s"$tmp/txt")
+      val part = new java.io.File(s"$tmp/txt").listFiles()
+        .filter(_.getName.endsWith(".gz")).head
+      val out = s"$tmp/junction.MM.gz"
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(out))
+      cells.unpersist()
+      out
+    }
+
+  /** x00: the memoized x20 artifact, timed as its own entry so the
+    * memoization cannot silently hide the write/encode cost from the
+    * min-of-N per-query numbers.
+    */
+  val prelude: Prelude = Prelude("x00_mm_prelude", Set("x20_mm_window"), Seq(mmMemo),
+    (s, dir) => Seq("mm_artifact" -> (() => { mmArtifact(s, dir); () })))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // left-semi: the scale-safe rewrite of the reference's
@@ -190,13 +158,10 @@ object ExtraQueries {
       // tags). Disable the misfiring check, as its own error message
       // suggests; there is no actual self-join here. The override is
       // SCOPED: the check runs at analysis time, which Dataset
-      // construction forces eagerly, so save/restore around the build
-      // leaves the shared session's analyzer behavior untouched for
-      // every other query in the suite.
-      val key = "spark.sql.analyzer.failAmbiguousSelfJoin"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "false")
-      try {
+      // construction forces eagerly, so scoping the build leaves the
+      // shared session's analyzer behavior untouched for every other
+      // query in the suite.
+      graft.SessionConf.scoped(s, Map("spark.sql.analyzer.failAmbiguousSelfJoin" -> "false")) {
         val df = Tables(s, dir, "customer")
           .join(broadcast(Tables(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
           .join(broadcast(Tables(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
@@ -211,9 +176,6 @@ object ExtraQueries {
           .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
         df.queryExecution.assertAnalyzed() // force analysis inside the scope
         df
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
       }
     },
 

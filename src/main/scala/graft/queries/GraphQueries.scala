@@ -26,38 +26,17 @@ object GraphQueries {
     * `g00_graph_prelude` entry via [[prewarmParts]]. All memoized
     * frames are edge lists (pair volume), never corpus-scale payloads.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
+  private[queries] val memo = Memo.frames()
 
-  // synchronized builder — the media-pair-memo hardening (a racing
-  // getOrElseUpdate would leak the losing build's persisted frame)
-  private def cached(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
-    memo.synchronized(memo.getOrElseUpdate((System.identityHashCode(s), dir, key), {
-      val df = build.persist()
-      df.count()
-      df
-    }))
+  def evict(s: SparkSession, dir: String): Unit = memo.evict(s, dir)
 
-  def evict(s: SparkSession, dir: String): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(k => k._1 == sid && k._2 == dir)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-  }
-
-  /** Evict every dir memoized for this session. */
-  def evictAll(s: SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(_._1 == sid)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-  }
-
-  /** Queries consuming the memoized edge builds (Bench's g00 gate). */
-  val preludeConsumers: Set[String] = Set(
+  /** g00: the shared edge builds, consumed by every g-row and x24 (whose
+    * basket support pairs ARE the copurchase memo).
+    */
+  val prelude: Prelude = Prelude("g00_graph_prelude", Set(
     "g01_pagerank", "g02_label_prop", "g03_triangles", "g04_bfs_reach",
     "g05_kcore_peel", "g06_sssp", "g07_ppr", "g08_adamic_adar",
-    "g09_neighbor_jaccard", "g10_hits",
-    // r14: x24's basket support pairs ARE the copurchase memo
-    "x24_assoc_rules")
+    "g09_neighbor_jaccard", "g10_hits", "x24_assoc_rules"), Seq(memo), prewarmParts)
 
   /** Attributed prelude builds for Bench (the DedupQueries.prewarmParts
     * pattern): each shared edge frame timed as its own component.
@@ -79,7 +58,7 @@ object GraphQueries {
     * consumers keep their own narrow cached copy.
     */
   private def tradePairs(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "tpairs") {
+    memo(s, dir, "tpairs") {
       tradePairsW(s, dir).select(col("c"), col("sp"))
     }
 
@@ -87,7 +66,7 @@ object GraphQueries {
     * greatest(1, 6 − co-trade count).
     */
   private def tradePairsW(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "tpairsw") {
+    memo(s, dir, "tpairsw") {
       val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val o = Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       li.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -103,7 +82,7 @@ object GraphQueries {
     * verbatim — guide §2.4); the graph consumers project (u, v).
     */
   private[queries] def copurchasePairs(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "copurchase") {
+    memo(s, dir, "copurchase") {
       val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       li.as("a").join(li.as("b"),

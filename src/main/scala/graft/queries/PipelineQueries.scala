@@ -750,9 +750,7 @@ object PipelineQueries {
     // closed form of the same CDC cut definition (one shared
     // CdcChunkSql with p19/p20).
     "p22_stream_cdc_dedup" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = Tables.stream(s, dir, "documents")
       val docs = src.withColumn("ts",
         timestamp_micros(col("doc_id") * 1000000L + lit(86400000000L)))
       val deduped = graft.streaming.Streaming.dedupCdcChunksStream(docs)
@@ -796,9 +794,7 @@ object PipelineQueries {
         .select("g", "h1", "h2").distinct()
         .agg(expr(s"graft_bloom(h1, h2, $M, $K)").as("bits"))
         .collect()(0).getAs[Array[Byte]]("bits")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val src = Tables.stream(s, dir, "documents")
       val flagged = graft.streaming.Streaming
         .decontaminateStream(src.filter(col("doc_id") % 20 =!= 0), bits, M, K)
         .select(col("doc_id"), col("n_grams"), col("n_bloom"))

@@ -21,32 +21,9 @@ object Quantizer {
   val K = 8
   val Iters = 3
 
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
-  // synchronized: TrieMap.getOrElseUpdate may evaluate the builder in
-  // TWO racing threads and discard one result — leaking the loser's
-  // persisted frame until session end (the media-pair-memo hardening).
-  // Coarse per-memo locking is deliberate for the single-session
-  // bench/verify lifecycle; a multi-session server would memoize a
-  // lazy per-key handle via putIfAbsent instead.
-  private def cached(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
-    memo.synchronized(memo.getOrElseUpdate((System.identityHashCode(s), dir, key), {
-      val df = build.persist()
-      df.count()
-      df
-    }))
+  private[queries] val memo = Memo.frames()
 
-  def evict(s: SparkSession, dir: String): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(k => k._1 == sid && k._2 == dir)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-  }
-
-  def evictAll(s: SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(_._1 == sid)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-  }
+  def evict(s: SparkSession, dir: String): Unit = memo.evict(s, dir)
 
   /** Normalized vectors (vec_id, label, e), memoized per (session, dir)
     * and WIDENED to the session's parallelism when the source scan is
@@ -65,7 +42,7 @@ object Quantizer {
     * cached frame grows by one int column.
     */
   def vecsNorm(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "kmVecs") {
+    memo(s, dir, "kmVecs") {
       Tables.widenIfNarrow(s, Tables(s, dir, "embeddings"))
         .select(col("vec_id"), col("label"),
           l2normalize(toDouble(col("embedding"))).as("e"))
@@ -73,7 +50,7 @@ object Quantizer {
 
   /** Trained centroids (cid, c), cid ∈ 1..K. */
   def centroids(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "kmCent") {
+    memo(s, dir, "kmCent") {
       KMeans.fit(vecsNorm(s, dir), K, Iters, LshDim)
     }
 
@@ -82,7 +59,7 @@ object Quantizer {
     * vectors.
     */
   def assignments(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "kmAsg") {
+    memo(s, dir, "kmAsg") {
       KMeans.assign(vecsNorm(s, dir), centroids(s, dir))
     }
 

@@ -32,19 +32,26 @@ object Tables {
     }
   }
 
-  /** Streaming twin of `apply(_, _, "events")`: a file-stream source over
-    * the events parquet with `ts` normalized to epoch-nanos BIGINT. The
-    * file-stream source monitors a DIRECTORY; the tables are single files,
-    * so stream the sf dir filtered to the events file.
+  /** Streaming twin of `apply`: a file-stream source over the table, with
+    * events `ts` normalized to epoch-nanos BIGINT. The file-stream source
+    * monitors a DIRECTORY: a table stored as one file streams the sf dir
+    * filtered to that file, a table stored as a directory of part files
+    * (as `tools.BlowUp` writes it) streams that directory itself — the
+    * file filter would match none of its part files and the stream would
+    * silently return no rows.
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.expressions.GraftFunctions.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     // one footer read serves both the stream schema and normalization
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    normalizeTs(src)
+    val reader = spark.readStream.schema(spark.read.parquet(path.toString).schema)
+    val isDir = path.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(path).isDirectory
+    val src =
+      if (isDir) reader.parquet(path.toString)
+      else reader.option("pathGlobFilter", path.getName).parquet(dir)
+    if (name == "events") normalizeTs(src) else src
   }
 
   /** Widen a frame to the session's parallelism when its scan is

@@ -32,28 +32,13 @@ object TextQueries {
     * persisted frames are vocabulary/bigram-alphabet bounded —
     * never corpus-scale.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
-  // synchronized: TrieMap.getOrElseUpdate may evaluate the builder in
-  // TWO racing threads and discard one result — leaking the loser's
-  // persisted frame until session end (the media-pair-memo hardening).
-  // Coarse per-memo locking is deliberate for the single-session
-  // bench/verify lifecycle; a multi-session server would memoize a
-  // lazy per-key handle via putIfAbsent instead.
-  private def cached(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
-    memo.synchronized(memo.getOrElseUpdate((System.identityHashCode(s), dir, key), {
-      val df = build.persist()
-      df.count()
-      df
-    }))
+  private[queries] val memo = Memo.frames()
 
   /** Learned merge table rows (rank, l, r, pair_count) — driver-side
     * (8 rows); memoized separately from the frames because the learn
     * loop's cost is its per-round collects, not a materialization.
     */
-  private val bpeMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Seq[(Long, String, String, Long)]]
-
+  private[queries] val bpeMemo = Memo[Seq[(Long, String, String, Long)]]()
 
   /** The (doc_id, bigram, n) corpus frame t14 and t21 share — built by
     * the native one-pass expression (CharBigramsExpr): per doc the
@@ -63,7 +48,7 @@ object TextQueries {
     * counts — CharBigramsSpec pins the two forms row-identical).
     */
   private[queries] def bigramCounts(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "bigram_counts") {
+    memo(s, dir, "bigram_counts") {
       // widened (Tables.widenIfNarrow): the one-pass byte parse otherwise
       // runs on the test file's single parquet split — one core for the
       // whole corpus — and the memoized frame inherits that 1 partition,
@@ -76,7 +61,7 @@ object TextQueries {
 
   /** The one corpus-sized word-count aggregate BPE trains on. */
   private[queries] def bpeWordCounts(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "bpe_word_counts") {
+    memo(s, dir, "bpe_word_counts") {
       // widened: the word-split explode runs pre-exchange — on the test
       // file's single split it was one task over the corpus (r13)
       graft.ops.BpeLearn.wordCounts(
@@ -89,12 +74,11 @@ object TextQueries {
     * train-per-consumer results bit-for-bit.
     */
   private[queries] def bpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    // synchronized like `cached`: the learn loop runs Spark jobs whose
-    // duplicate work a racing getOrElseUpdate would silently discard
-    bpeMemo.synchronized(bpeMemo.getOrElseUpdate((System.identityHashCode(s), dir),
+    bpeMemo(s, dir, "bpe_merges") {
       graft.ops.BpeLearn.learnMerges(bpeWordCounts(s, dir), BpeRounds)
         .orderBy("rank").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4))).toSeq))
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4))).toSeq
+    }
 
   /** t17's corpus tokenization, parameterized by the merge table — ONE
     * implementation serving both lifecycles: t17 passes the in-memory
@@ -126,46 +110,26 @@ object TextQueries {
     // would make t28 pay the corpus sort twice
   }
 
-  /** Unpersist and drop every memoized frame/model for (session, dir) —
-    * Bench evicts between its warm-up and timed sections and between
-    * prelude build samples (the DedupQueries.evict contract).
-    */
-  def evict(s: SparkSession, dir: String): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(k => k._1 == sid && k._2 == dir)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-    bpeMemo.remove((sid, dir))
-    ()
-  }
+  /** Unpersist and drop every memoized frame/model for (session, dir). */
+  def evict(s: SparkSession, dir: String): Unit = prelude.evict(s, dir)
 
-  /** Evict every dir memoized for this session. */
-  def evictAll(s: SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    memo.keys.filter(_._1 == sid)
-      .foreach(k => memo.remove(k).foreach(_.unpersist(blocking = true)))
-    bpeMemo.keys.filter(_._1 == sid).foreach(bpeMemo.remove)
-  }
-
-  /** The queries that consume a memoized build — Bench runs (and
-    * times) the t00 prelude iff one of these is selected.
+  /** t00: the bigram-count frame (t14/t21), the trained BPE
+    * (t15/t16/t17/t24/t28) and the trigram counts of the trained
+    * language-ID family (t23/t26/t27/t29). bpe_merges trains on the
+    * already-memoized word counts, so its part times the 8 learn rounds
+    * alone.
     */
-  val preludeConsumers: Set[String] =
+  val prelude: Prelude = Prelude("t00_text_prelude",
     Set("t14_bigram_typicality", "t15_bpe_merges", "t16_bpe_vocab",
       "t17_bpe_doc_tokens", "t21_bigram_lm", "t24_fertility",
       "t28_bpe_serve",
       "t23_trigram_langid", "t26_langid_persisted", "t27_langid_append",
-      "t29_langid_compacted")
-
-  /** The prelude's component builds, individually invokable so Bench
-    * attributes each materialization (the d00 per-component lesson).
-    * bpe_merges trains on the already-memoized word counts, so its
-    * entry times the 8 learn rounds alone.
-    */
-  def prewarmParts(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
-    "bigram_counts" -> (() => { bigramCounts(s, dir); () }),
-    "bpe_word_counts" -> (() => { bpeWordCounts(s, dir); () }),
-    "bpe_merges" -> (() => { bpeMerges(s, dir); () }),
-    "trigram_counts" -> (() => { trigramCounts(s, dir); () }))
+      "t29_langid_compacted"), Seq(memo, bpeMemo),
+    (s, dir) => Seq(
+      "bigram_counts" -> (() => { bigramCounts(s, dir); () }),
+      "bpe_word_counts" -> (() => { bpeWordCounts(s, dir); () }),
+      "bpe_merges" -> (() => { bpeMerges(s, dir); () }),
+      "trigram_counts" -> (() => { trigramCounts(s, dir); () })))
 
   private val NbLangs = Seq("de", "en", "es", "fr", "zh")
 
@@ -190,7 +154,7 @@ object TextQueries {
     * forms row-identical).
     */
   private[queries] def trigramCounts(s: SparkSession, dir: String): DataFrame =
-    cached(s, dir, "trigram_counts") {
+    memo(s, dir, "trigram_counts") {
       // widened (Tables.widenIfNarrow): measured r13 — the single-split
       // scan ran the whole trigram parse AND every downstream consumer
       // aggregate (t23/t26/t27/t29 train + eval folds) as 1-task jobs;

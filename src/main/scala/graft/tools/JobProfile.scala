@@ -25,7 +25,7 @@ object JobProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val q = args.headOption.getOrElse("d07_dedup_clusters")
     val n = args.lift(1).map(_.toInt).getOrElse(2)
-    val builder = SparkSession.builder().master(s"local[$cpus]")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // parity with Bench: without it cached frames pin 32-partition
@@ -33,14 +33,7 @@ object JobProfile {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // extra session confs for A/B runs: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new ConcurrentLinkedQueue[JobRec]()

@@ -81,4 +81,19 @@ class TsEncodingSpec extends SparkSpec {
       }
     }
   }
+
+  test("a table stored as a directory streams every row (Tables.stream)") {
+    // the layout tools.BlowUp writes: events.parquet is a directory of
+    // part files, not one file
+    val dir = Files.createTempDirectory("stream_layout").toString
+    Tables(spark, srcDir, "events").repartition(3).write.parquet(s"$dir/events.parquet")
+    val batch = Tables(spark, dir, "events").count()
+    val sink = "stream_layout_sink"
+    spark.catalog.dropTempView(sink)
+    val q = Tables.stream(spark, dir, "events").writeStream.format("memory")
+      .queryName(sink).outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(batch > 0)
+    assert(spark.table(sink).count() === batch)
+  }
 }
