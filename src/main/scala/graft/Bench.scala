@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.queries.{DedupQueries, EventQueries, ExtraQueries, GraphQueries, Memo, Prelude, TextQueries}
 
 /** Per-round benchmark: runs every SparkEntry query against
@@ -31,7 +29,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Local-iteration filter (comma-separated query names). The driver
     // never sets it; when set, only the named queries run and the full
     // record goes to BENCH_filtered.json so a partial run can never
@@ -39,27 +36,7 @@ object Bench {
     val filter: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => filter.forall(_.contains(n)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE coalesce post-shuffle partitions for CACHED plans too
-      // (off by default). Without it, every persisted frame in the
-      // iterative engines pins `shuffle.partitions`-many tiny
-      // partitions and each round re-schedules all of them (measured:
-      // g01 ran 52 jobs of 32-task stages over a ~500k-edge graph;
-      // with the setting, node-frame stages shrink to 1-3 tasks).
-      // Scale-independent: coalescing still keys on AQE's data-volume
-      // rule (parallelismFirst + 1 MB min partition), so big frames
-      // keep their parallelism at any core count — deliberately NOT
-      // paired with coalescePartitions.parallelismFirst=false, which
-      // collapsed every sub-64MB build to ONE task and serialized the
-      // heavy prelude builds (measured g00 13.8 s vs 4.5 s).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
 
     // warm-up: touch every table (footer + first-read paths), then run
     // every query once at the smallest scale factor — this compiles and

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.functions.NumFns.round6
 import graft.functions.TextFns._
 import graft.functions.VecFns._
+import graft.streaming.Streaming.drainToMemory
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
   * the LLM-data-pipeline extension surface (SURVEY §0 north star, §2.9
@@ -1136,14 +1137,7 @@ object DedupQueries {
         timestamp_micros(col("doc_id") * 1000000L + lit(86400000000L)))
       val deduped = graft.streaming.Streaming.dedupNearStream(docs)
         .select(col("sig_key"))
-      val sink = "d21_stream_sig_sink"
-      s.catalog.dropTempView(sink)
-      EventQueries.scopedStream(s) {
-        val q = deduped.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("sig_key")
+      drainToMemory(deduped, "append").orderBy("sig_key")
     }
   )
 

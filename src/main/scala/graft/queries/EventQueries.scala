@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.NumFns.round6
 import graft.functions.TextFns.h60
+import graft.streaming.Streaming.{drain, drainToMemory}
 
 /** Event-stream operators over `events` (ts read as bigint nanos — see
   * Tables). Sessionization and running windows are the batch forms of the
@@ -18,18 +19,6 @@ import graft.functions.TextFns.h60
   * global sort except the final presentation ORDER BY.
   */
 object EventQueries {
-
-  /** Run a live streaming query with shuffle partitions scoped small
-    * (graft.SessionConf.scoped): each stateful streaming operator opens
-    * one state store PER shuffle partition, and at the bench's tiny
-    * per-partition volume 32 of them are pure fixed init/commit cost
-    * (measured ~40% of e17). The conf is read at start() and restored
-    * after stop(), so the shared session is untouched; at scale this
-    * knob is sized to the stream rate instead.
-    */
-  private[queries] def scopedStream[T](s: SparkSession)(body: => T): T =
-    graft.SessionConf.scoped(s, Map("spark.sql.shuffle.partitions" -> "8"))(body)
-
 
   /** Session-scoped memo of the media near-dup PAIR frames (the
     * DedupQueries.memo idiom): m03 presents it and m05's connected
@@ -657,14 +646,7 @@ object EventQueries {
       val src = Tables.stream(s, dir, "events")
         .withColumn("ts", graft.streaming.Streaming.tsFromNanos(col("ts")))
       val agg = graft.streaming.Streaming.windowedTypeStats(src, "1 hour", "2 hours")
-      val sink = "e05_stream_window_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(agg, "complete")
         .select((unix_micros(col("window_start")) * 1000L).as("w_start_ns"),
           (unix_micros(col("window_end")) * 1000L).as("w_end_ns"),
           col("event_type"), col("cnt"), col("total_value"))
@@ -682,14 +664,7 @@ object EventQueries {
       val src = Tables.stream(s, dir, "events") // registers graft_topk
       val agg = src.groupBy("event_type")
         .agg(expr("graft_topk(value, event_id, 3)").as("top"))
-      val sink = "e11_stream_topk_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(agg, "complete")
         .select(col("event_type"), posexplode(col("top")))
         .select(col("event_type"), (col("pos") + 1).cast(IntegerType).as("rn"),
           col("col.id").as("event_id"), col("col.value").as("value"))
@@ -707,16 +682,9 @@ object EventQueries {
       val src = Tables.stream(s, dir, "events") // registers graft_kmv
       val agg = src.groupBy("event_type")
         .agg(expr("graft_kmv(graft_md5p60(CAST(user_id AS STRING)), 64)").as("sk"))
-      val sink = "e13_stream_kmv_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
       val K = 64
       val two60 = 1.152921504606846976e18
-      s.table(sink)
+      drainToMemory(agg, "complete")
         .select(col("event_type"),
           col("sk.held").as("held"),
           col("sk.kth").as("kth"),
@@ -742,14 +710,7 @@ object EventQueries {
       val agg = src
         .groupBy(col("user_id"), session_window(col("ts2"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("cnt"), sumMoney(col("value")).as("total_value"))
-      val sink = "e10_stream_session_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(agg, "append")
         .select(col("user_id"),
           (unix_micros(col("w.start")) * 1000L).as("w_start_ns"),
           (unix_micros(col("w.end")) * 1000L).as("w_end_ns"),
@@ -777,14 +738,7 @@ object EventQueries {
         .drop("event_type").withWatermark("ts", "2 hours")
       val joined = graft.streaming.Streaming.streamIntervalJoin(
         clicks, views, "user_id", "2 hours")
-      val sink = "e17_stream_join_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(joined, "append")
         .select(col("user_id"), col("l_event_id").as("click_id"),
           col("r_event_id").as("view_id"),
           (unix_micros(col("l_ts")) - unix_micros(col("r_ts"))).as("gap_us"))
@@ -812,14 +766,7 @@ object EventQueries {
         .drop("event_type").withWatermark("ts", "2 hours")
       val joined = graft.streaming.Streaming.streamIntervalJoin(
         clicks, views, "user_id", "2 hours", "left_outer")
-      val sink = "e24_stream_outer_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(joined, "append")
         .select(col("user_id"), col("l_event_id").as("click_id"),
           col("r_event_id").as("view_id"),
           (unix_micros(col("l_ts")) - unix_micros(col("r_ts"))).as("gap_us"))
@@ -847,14 +794,7 @@ object EventQueries {
         .drop("event_type").withWatermark("ts", "2 hours")
       val joined = graft.streaming.Streaming.streamIntervalJoin(
         clicks, views, "user_id", "2 hours", "full_outer")
-      val sink = "e25_stream_full_outer_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(joined, "append")
         .select(col("user_id"), col("l_event_id").as("click_id"),
           col("r_event_id").as("view_id"),
           (unix_micros(col("l_ts")) - unix_micros(col("r_ts"))).as("gap_us"))
@@ -879,14 +819,7 @@ object EventQueries {
         .drop("event_type").withWatermark("ts", "2 hours")
       val joined = graft.streaming.Streaming.streamIntervalJoin(
         clicks, views, "user_id", "2 hours", "right_outer")
-      val sink = "e26_stream_right_outer_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(joined, "append")
         .select(col("user_id"), col("l_event_id").as("click_id"),
           col("r_event_id").as("view_id"),
           (unix_micros(col("l_ts")) - unix_micros(col("r_ts"))).as("gap_us"))
@@ -916,14 +849,7 @@ object EventQueries {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
         .select(col("w.start").as("window_start"),
           col("c_mktsegment"), col("cnt"), col("total_value"))
-      val sink = "e27_stream_static_enrich_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(agg, "complete")
         .select((unix_micros(col("window_start")) * 1000L).as("w_start_ns"),
           col("c_mktsegment").as("segment"), col("cnt"), col("total_value"))
         .orderBy("w_start_ns", "segment")
@@ -962,11 +888,10 @@ object EventQueries {
           .option("maxFilesPerTrigger", 1)
           .option("pathGlobFilter", "*.parquet")
           .parquet(s"$srcDir/slice*")
-        scopedStream(s) {
-          val q = graft.streaming.Streaming
+        drain(s) {
+          graft.streaming.Streaming
             .upsertAggSink(stream, stateDir, "user_id", "value")
             .option("checkpointLocation", s"$tmp/ckpt").start()
-          try q.processAllAvailable() finally q.stop()
         }
         graft.streaming.Streaming.latestGen(s, stateDir, Long.MaxValue)
           .getOrElse(sys.error("e28: no state generation written"))
@@ -1000,14 +925,7 @@ object EventQueries {
         .withWatermark("ts2", "2 hours")
         .as[graft.streaming.Streaming.TEvent]
       val pairs = graft.streaming.Streaming.transitionsStream(ev)
-      val sink = "e19_stream_transitions_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = pairs.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(pairs.toDF(), "append")
         .groupBy(col("prev"), col("next"))
         .agg(count(lit(1)).as("n"))
         .orderBy("prev", "next")
@@ -1030,14 +948,7 @@ object EventQueries {
         .withWatermark("ts2", "2 hours")
         .as[graft.streaming.Streaming.TEvent]
       val days = graft.streaming.Streaming.anomalyStream(ev)
-      val sink = "e21_stream_anomaly_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = days.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(days.toDF(), "append")
         .select("user_id", "day", "cnt", "z")
         .orderBy("user_id", "day")
     },
@@ -1061,15 +972,8 @@ object EventQueries {
         .withWatermark("ts2", "2 hours")
         .as[graft.streaming.Streaming.TEvent]
       val done = graft.streaming.Streaming.funnelStream(ev)
-      val sink = "e29_stream_funnel_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = done.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
       // us-truncated ns on the way out (the e14/x13 DuckDB parity rule)
-      s.table(sink)
+      drainToMemory(done.toDF(), "append")
         .select(col("user_id"),
           (col("s_ns") - pmod(col("s_ns"), lit(1000L))).as("s_ns"),
           (col("c_ns") - pmod(col("c_ns"), lit(1000L))).as("c_ns"),
@@ -1093,14 +997,7 @@ object EventQueries {
         .withWatermark("ts2", "2 hours")
         .as[graft.streaming.Streaming.TEvent]
       val gaps = graft.streaming.Streaming.gapsStream(ev, GapNs)
-      val sink = "e30_stream_gaps_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = gaps.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(gaps.toDF(), "append")
         .select(col("event_type"),
           (col("gap_start_ns") - pmod(col("gap_start_ns"), lit(1000L)))
             .as("gap_start_ns"),
@@ -1135,14 +1032,7 @@ object EventQueries {
       val agg = src.groupBy(window(col("ts2"), "1 day"), col("event_type"))
         .agg(call_function("graft_hll",
           h60(col("user_id").cast(StringType)), lit(P)).as("sk"))
-      val sink = "e31_stream_hll_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(agg, "append")
         .select((unix_micros(col("window.start")) * 1000L).as("w_start_ns"),
           col("event_type"),
           col("sk.zeros").as("zeros"),
@@ -1169,14 +1059,7 @@ object EventQueries {
         .withWatermark("ts2", "2 hours")
         .as[graft.streaming.Streaming.TEvent]
       val shifts = graft.streaming.Streaming.levelShiftStream(ev)
-      val sink = "e32_stream_shift_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = shifts.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("event_type", "day")
+      drainToMemory(shifts.toDF(), "append").orderBy("event_type", "day")
     },
 
     // LIVE stream-stream AS-OF join — the enrichment shape the e17/e24
@@ -1202,14 +1085,7 @@ object EventQueries {
         .as[graft.streaming.Streaming.TEvent]
       val joined = graft.streaming.Streaming.asofJoinStream(
         ev, "click", "view", 7200000000000L)
-      val sink = "e33_stream_asof_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = joined.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(joined.toDF(), "append")
         .select(col("user_id"), col("probe_id").as("click_id"),
           col("build_id").as("view_id"), col("gap_us"))
         .orderBy("user_id", "click_id")
@@ -1238,14 +1114,7 @@ object EventQueries {
         .as[graft.streaming.Streaming.TEvent]
       val joined = graft.streaming.Streaming.asofFullOuterStream(
         ev, "click", "view", 7200000000000L)
-      val sink = "e34_stream_asof_full_sink"
-      s.catalog.dropTempView(sink)
-      scopedStream(s) {
-        val q = joined.toDF().writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink)
+      drainToMemory(joined.toDF(), "append")
         .select(col("user_id"), col("probe_id").as("click_id"),
           col("build_id").as("view_id"), col("gap_us"))
         .orderBy(col("user_id"), col("click_id").asc_nulls_first,

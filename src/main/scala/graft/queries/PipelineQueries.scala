@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.NumFns.round6
 import graft.functions.TextFns._
+import graft.streaming.Streaming.drainToMemory
 
 /** Composed training-data-prep pipelines: the individual operators
   * (quality scoring t02, exact dedup d01, token counting t03) chained
@@ -756,14 +757,7 @@ object PipelineQueries {
       val deduped = graft.streaming.Streaming.dedupCdcChunksStream(docs)
         .select(col("chunk_key"),
           length(col("chunk")).cast(LongType).as("chunk_chars"))
-      val sink = "p22_stream_cdc_sink"
-      s.catalog.dropTempView(sink)
-      EventQueries.scopedStream(s) {
-        val q = deduped.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("chunk_key")
+      drainToMemory(deduped, "append").orderBy("chunk_key")
     },
 
     // LIVE streaming decontamination — Streaming.decontaminateStream
@@ -798,14 +792,7 @@ object PipelineQueries {
       val flagged = graft.streaming.Streaming
         .decontaminateStream(src.filter(col("doc_id") % 20 =!= 0), bits, M, K)
         .select(col("doc_id"), col("n_grams"), col("n_bloom"))
-      val sink = "p23_stream_decontam_sink"
-      s.catalog.dropTempView(sink)
-      EventQueries.scopedStream(s) {
-        val q = flagged.writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("doc_id")
+      drainToMemory(flagged, "append").orderBy("doc_id")
     }
   )
 

@@ -1043,14 +1043,13 @@ object SimilarityQueries {
         // the server's resident state: centroids read from the artifact
         // once at startup (what a real serving process keeps in memory)
         val centRe = s.read.parquet(s"$tmp/centroids")
-        EventQueries.scopedStream(s) {
-          val qq = probes.writeStream.foreachBatch {
+        graft.streaming.Streaming.drain(s) {
+          probes.writeStream.foreachBatch {
             (batch: Dataset[Row], batchId: Long) =>
               graft.streaming.Streaming.writeBatchIdempotent(
                 serveQuantizerArtifact(s, centRe, s"$tmp/postings", batch.toDF()),
                 batchId, s"$tmp/out")
           }.option("checkpointLocation", s"$tmp/ckpt").start()
-          try qq.processAllAvailable() finally qq.stop()
         }
         s.read.parquet(s"$tmp/out")
           .select("query_id", "rank", "neighbor_id", "cos")

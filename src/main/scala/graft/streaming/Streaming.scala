@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming surface over the `events` stream shape
@@ -18,6 +18,35 @@ import org.apache.spark.sql.types.DecimalType
   * 1000-executor cluster partitions state horizontally.
   */
 object Streaming {
+
+  /** Run a live query to completion: `start` it, process every input
+    * available, then stop it, also when it fails. Shuffle partitions are
+    * scoped small (graft.SessionConf.scoped): each stateful streaming
+    * operator opens one state store PER shuffle partition, and at the
+    * bench's tiny per-partition volume 32 of them are pure fixed
+    * init/commit cost (measured ~40% of e17). The conf is read at start
+    * and restored after stop; at scale this knob is sized to the stream
+    * rate instead.
+    */
+  def drain(s: SparkSession)(start: => StreamingQuery): Unit =
+    graft.SessionConf.scoped(s, Map("spark.sql.shuffle.partitions" -> "8")) {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** [[drain]] `df` into a memory sink in `mode` and return the sink's
+    * rows. The sink is named uniquely per run, and its temp view is
+    * dropped before returning: the frame keeps the sink's rows, the
+    * session catalog keeps nothing.
+    */
+  def drainToMemory(df: DataFrame, mode: String): DataFrame = {
+    val s = df.sparkSession
+    val sink = "graft_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    drain(s)(df.writeStream.format("memory").queryName(sink).outputMode(mode).start())
+    val out = s.table(sink)
+    s.catalog.dropTempView(sink)
+    out
+  }
 
   /** Tumbling- (or, with `slide`, hopping-) window per-type stats with
     * late-data handling. `events` must carry a TimestampType `ts`

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic K× test-data blow-up for the SCALE.md stress run
@@ -34,12 +34,8 @@ object BlowUp {
     val in = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/root/scale10x")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed at 16 task threads: the copies' part-file layout depends on it
+    val spark = graft.Sessions.local(16)
     // events.ts may be NANOS-encoded (see Tables) — surface as bigint
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -22,19 +21,9 @@ object JobProfile {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val q = args.headOption.getOrElse("d07_dedup_clusters")
     val n = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // parity with Bench: without it cached frames pin 32-partition
-      // layouts and the profile shows stage shapes Bench never runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     val jobs = new ConcurrentLinkedQueue[JobRec]()
     val byId = scala.collection.concurrent.TrieMap.empty[Int, JobRec]

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.SparkEntry
@@ -70,13 +69,7 @@ object PlanDump {
         s"filter names not in Picks (add them first): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     val picked = only.fold(Picks)(f => Picks.filter(f))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(8)
     val sections = picked.map { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Print one query's explain output (default "formatted"; pass
@@ -13,12 +12,7 @@ object PrintPlan {
     val q = args.headOption.getOrElse("q01_filter_isin")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val mode = args.lift(2).getOrElse("formatted")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4)
     val df = graft.SparkEntry.queries(q)(spark, dir)
     println(s"===== $q ($mode) =====")
     println(df.queryExecution.explainString(ExplainMode.fromString(mode)))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -17,12 +16,7 @@ object PrintTransformPlan {
     val which = args.headOption.getOrElse("p23")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val mode = args.lift(2).getOrElse("formatted")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4)
     val docs = graft.queries.Tables(spark, dir, "documents")
     val df = which match {
       case "d21" =>

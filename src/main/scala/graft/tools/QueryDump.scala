@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Print a query's full result (ad-hoc oracle cross-checks; not part of
@@ -11,12 +9,7 @@ object QueryDump {
   def main(args: Array[String]): Unit = {
     val q = args.headOption.getOrElse("q01_filter_isin")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(8)
     // collect once: show() then count() would execute the plan twice
     val df = SparkEntry.queries(q)(spark, dir)
     val rows = df.collect()

@@ -1,12 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.SparkEntry
 
-/** Print the static shuffle-exchange count of every query's physical
-  * plan (pre-AQE) — the numbers PlanBudgetSpec pins.
+/** Print the static shuffle-exchange count of each query's physical
+  * plan (pre-AQE) under the PlanBudgetSpec environment (local[4],
+  * sf0.001) — the numbers PlanBudgetSpec pins, and the number a new
+  * row's budget pin comes from.
+  * Usage: runMain graft.tools.ShuffleCount [sfDir] [q1,q2,...]
+  * (no name list: every query).
   */
 object ShuffleCount {
 
@@ -40,12 +43,11 @@ object ShuffleCount {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val names = args.lift(1).map(_.split(",").map(_.trim).toSet)
+    val spark = graft.Sessions.local(4)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => names.forall(_.contains(name)) }
+    selected.foreach { case (name, fn) =>
       try {
         // exchanges are inserted by EnsureRequirements during plan
         // preparation, so count on executedPlan (string form: AQE wraps

@@ -88,12 +88,9 @@ class TsEncodingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("stream_layout").toString
     Tables(spark, srcDir, "events").repartition(3).write.parquet(s"$dir/events.parquet")
     val batch = Tables(spark, dir, "events").count()
-    val sink = "stream_layout_sink"
-    spark.catalog.dropTempView(sink)
-    val q = Tables.stream(spark, dir, "events").writeStream.format("memory")
-      .queryName(sink).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    val streamed = graft.streaming.Streaming.drainToMemory(
+      Tables.stream(spark, dir, "events"), "append")
     assert(batch > 0)
-    assert(spark.table(sink).count() === batch)
+    assert(streamed.count() === batch)
   }
 }

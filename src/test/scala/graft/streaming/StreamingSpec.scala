@@ -1870,4 +1870,34 @@ class StreamingSpec extends SparkSpec {
     assert(genDirs() == Set(3L))
     assert(Streaming.latestGen(spark, stateDir, Long.MaxValue).get.count() == 2)
   }
+
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("drainToMemory: the frame keeps every row, and no temp view is left behind") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Long]
+    mem.addData(0L until 100L)
+    val views = tempViews()
+    val out = Streaming.drainToMemory(mem.toDF(), "append")
+    assert(tempViews() == views, "the memory sink's temp view is dropped")
+    assert(out.count() == 100)
+    assert(out.as[Long].collect().sorted.toSeq == (0L until 100L))
+  }
+
+  test("drain: a failing stream throws, is stopped, and the scoped shuffle conf is restored") {
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before != "8", "the scope must be observable")
+    val mem = MemoryStream[Long]
+    mem.addData(1L, 2L, -3L)
+    val active = spark.streams.active.map(_.id).toSet
+    val failing = mem.toDF().select(assert_true(col("value") > 0).as("ok"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streaming.drainToMemory(failing, "append")
+    }
+    assert(spark.conf.get(key) == before)
+    assert(spark.streams.active.map(_.id).toSet == active, "the failed query is stopped")
+  }
 }
