@@ -1,11 +1,28 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet sinks (S12 — the reference persists nothing but raw cached
   * files; parquet is our canonical tabular sink, SURVEY §2.1).
   */
 object Writers {
+
+  /** Run `body` with a fresh local temp directory (named from `prefix`)
+    * for a row's written artifacts, and delete the directory when `body`
+    * returns or throws, so a failure anywhere in build → write → serve
+    * leaks nothing. Nothing under the directory outlives `body`: a frame
+    * that reads it must be materialized (localCheckpoint) inside.
+    */
+  def withScratchDir[T](s: SparkSession, prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir) finally deleteDir(s, dir)
+  }
+
+  /** Recursively delete `dir` through the session's Hadoop filesystem. */
+  def deleteDir(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+  }
 
   /** Plain parquet write. */
   def parquet(df: DataFrame, path: String, mode: String = "overwrite"): Unit =

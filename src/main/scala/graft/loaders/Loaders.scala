@@ -33,12 +33,15 @@ final class Metadata(
     cachedUrls = Some(urls)
   }
 
-  def load(): DataFrame = {
-    val urls = cachedUrls.getOrElse(
+  /** Mirrored paths of this organism's project metadata files. */
+  private def localPaths(): List[String] =
+    cachedUrls.getOrElse(
       throw new IllegalStateException("Metadata.load() requires cache() first"))
-    val paths = urls
       .filter(u => u.contains(organism) && u.contains(".recount_project."))
       .map(u => downloader.localPath(u).toString)
+
+  def load(): DataFrame = {
+    val paths = localPaths()
     if (paths.isEmpty) spark.emptyDataFrame
     else {
       val df = Readers.tsvAllString(spark, paths)
@@ -54,20 +57,14 @@ final class Metadata(
     * reference's eager read hits: missing file, truncated gzip, bad
     * header) and yields None instead of a deferred task failure.
     */
-  def loadLenient(): Option[DataFrame] = {
-    val urls = cachedUrls.getOrElse(
-      throw new IllegalStateException("Metadata.load() requires cache() first"))
-    val paths = urls
-      .filter(u => u.contains(organism) && u.contains(".recount_project."))
-      .map(u => downloader.localPath(u).toString)
-    paths.find(p => !Metadata.probeReadable(p)) match {
+  def loadLenient(): Option[DataFrame] =
+    localPaths().find(p => !Metadata.probeReadable(p)) match {
       case Some(bad) =>
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"metadata file unreadable, returning None (reference parity): $bad")
         None
       case None => Some(load())
     }
-  }
 }
 
 object Metadata {
@@ -182,18 +179,8 @@ final class Project(
     * full-outer on gene_id, key-ordered.
     */
   def loadGene(): (DataFrame, DataFrame) = {
-    val ann = annotation.getOrElse(
-      throw new IllegalArgumentException("annotation required for GENE"))
-    val annDf = annotationUrl(Dtype.Gene).map(u => Readers.gtfRead(spark, local(u)))
-    val counts = projectIds.flatMap { pid =>
-      urls(Dtype.Gene)
-        .filter(u => u.contains(pid) && u.endsWith(s"${ann.code}.gz"))
-        .map(u => Readers.countsRead(spark, local(u), perProjectSamples(pid)))
-    }
-    if (annDf.isEmpty || counts.isEmpty)
-      throw new RuntimeException("Missing gene annotation or counts file")
-    val key = counts.head.columns.head
-    (annDf.get, Ops.alignConcat(counts, Seq(key)))
+    val (annDf, counts, _) = loadCounts(Dtype.Gene, "gene")
+    (annDf, counts)
   }
 
   /** Exon load (accessor.py:516-570 `ExonLoader`): GTF annotation +
@@ -204,19 +191,27 @@ final class Project(
     * rather than replicate the data loss.
     */
   def loadExon(): (DataFrame, DataFrame) = {
-    val ann = annotation.getOrElse(
-      throw new IllegalArgumentException("annotation required for EXON"))
-    val annDf = annotationUrl(Dtype.Exon).map(u => Readers.gtfRead(spark, local(u)))
+    val (annDf, counts, key) = loadCounts(Dtype.Exon, "exon")
+    (annDf, Ops.exonIdSplit(counts, key))
+  }
+
+  /** The GTF annotation of `dtype` and its per-project counts, each
+    * projected to that project's samples and align-concat'd full-outer
+    * on the counts' first column, whose name is returned as the key.
+    */
+  private def loadCounts(dtype: Dtype, name: String): (DataFrame, DataFrame, String) = {
+    val ann = annotation.getOrElse(throw new IllegalArgumentException(
+      s"annotation required for ${name.toUpperCase}"))
+    val annDf = annotationUrl(dtype).map(u => Readers.gtfRead(spark, local(u)))
     val counts = projectIds.flatMap { pid =>
-      urls(Dtype.Exon)
+      urls(dtype)
         .filter(u => u.contains(pid) && u.endsWith(s"${ann.code}.gz"))
         .map(u => Readers.countsRead(spark, local(u), perProjectSamples(pid)))
     }
     if (annDf.isEmpty || counts.isEmpty)
-      throw new RuntimeException("Missing exon annotation or counts file")
+      throw new RuntimeException(s"Missing $name annotation or counts file")
     val key = counts.head.columns.head
-    val combined = Ops.alignConcat(counts, Seq(key))
-    (annDf.get, Ops.exonIdSplit(combined, key))
+    (annDf.get, Ops.alignConcat(counts, Seq(key)), key)
   }
 
   /** Junction load, long format — the scale path: (project_id, junction

@@ -915,12 +915,10 @@ object DedupQueries {
     "d14_incremental_dedup" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents")
         .withColumn("__key", substring(col("text"), 1, 80))
-      val tmpRoot = java.nio.file.Files.createTempDirectory("d14_index")
-      val indexPath = tmpRoot.toString + "/index"
       // each day's survivors are localCheckpoint'ed inside process(), so
-      // the index is only needed DURING the replay — finally-reclaimed
-      // (a mid-replay failure must not leak the dir, the s23 contract)
-      val days = try {
+      // the index is only needed DURING the replay
+      val days = graft.io.Writers.withScratchDir(s, "d14_index") { tmp =>
+        val indexPath = s"$tmp/index"
         (0 until 3).map { d =>
           val batch = docs.filter(pmod(col("doc_id"), lit(3)) === d)
           val out =
@@ -932,9 +930,6 @@ object DedupQueries {
                 batch, "doc_id", "__key", indexPath)
           out.select(lit(d).as("day"), col("doc_id"))
         }
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmpRoot.toString)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       days.reduce(_ unionByName _).orderBy("day", "doc_id")
     },

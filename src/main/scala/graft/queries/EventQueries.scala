@@ -1,13 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.NumFns.round6
 import graft.functions.TextFns.h60
-import graft.streaming.Streaming.{drain, drainToMemory}
+import graft.streaming.Streaming.{TEvent, drain, drainToMemory, tsFromNanos}
 
 /** Event-stream operators over `events` (ts read as bigint nanos — see
   * Tables). Sessionization and running windows are the batch forms of the
@@ -123,6 +123,24 @@ object EventQueries {
 
   private val SessionGapNs: Long = 30L * 60 * 1000 * 1000 * 1000 // 30 min
   private val DayNs: Long = 86400L * 1000 * 1000 * 1000
+
+  /** `events` as the live, 2 h-watermarked [[TEvent]] stream the ordered
+    * stream rows fold (e19, e21, e29, e30, e32–e34), narrowed to `types`
+    * when any are given. The watermark column `ts2` must survive into
+    * the Dataset handed to flatMapGroupsWithState: a projection dropping
+    * it would erase the EventTimeWatermark node. The encoder binds
+    * TEvent's fields by name and ignores the extras.
+    */
+  private def orderedEvents(s: SparkSession, dir: String,
+      types: String*): Dataset[TEvent] = {
+    import s.implicits._
+    val ev = Tables.stream(s, dir, "events")
+    (if (types.isEmpty) ev else ev.filter(col("event_type").isin(types: _*)))
+      .withColumnRenamed("ts", "ts_ns")
+      .withColumn("ts2", tsFromNanos(col("ts_ns")))
+      .withWatermark("ts2", "2 hours")
+      .as[TEvent]
+  }
 
   /** Exact decimal sum of a 2-decimal double, as double (see CoreQueries). */
   private def sumMoney(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -870,13 +888,8 @@ object EventQueries {
     // exactly what the oracle recomputes (the x28 contract: the gate
     // checks merge-of-generations == recompute).
     "e28_stream_upsert" -> { (s, dir) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_e28").toString
-      val srcDir = s"$tmp/src"; val stateDir = s"$tmp/state"
-      // finally-reclaimed: a failure anywhere in the slice-write →
-      // stream → read-back lifecycle must not leak the temp dir (the
-      // s23 contract); the localCheckpoint makes deletion-before-return
-      // safe on the success path
-      try {
+      graft.io.Writers.withScratchDir(s, "graft_e28") { tmp =>
+        val srcDir = s"$tmp/src"; val stateDir = s"$tmp/state"
         val src = Tables(s, dir, "events").select("user_id", "value", "event_id")
         (0 until 3).foreach { i =>
           src.filter(pmod(col("event_id"), lit(3)) === i).drop("event_id")
@@ -899,9 +912,6 @@ object EventQueries {
             col("total").cast(DoubleType).as("total_value"))
           .orderBy("user_id")
           .localCheckpoint() // materialize before the temp state is reclaimed
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
     },
 
@@ -914,16 +924,7 @@ object EventQueries {
     // later event's millisecond timestamp is at or below the final
     // watermark (max event-time ms − 2 h), then lags over that slice.
     "e19_stream_transitions" -> { (s, dir) =>
-      import s.implicits._
-      // the watermark column must survive into the Dataset handed to
-      // flatMapGroupsWithState (a projection dropping it would erase
-      // the EventTimeWatermark node); the encoder binds TEvent's fields
-      // by name and ignores the extras
-      val ev = Tables.stream(s, dir, "events")
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir)
       val pairs = graft.streaming.Streaming.transitionsStream(ev)
       drainToMemory(pairs.toDF(), "append")
         .groupBy(col("prev"), col("next"))
@@ -941,12 +942,7 @@ object EventQueries {
     // contract (day-end ms ≤ max event ms − 2 h) and the prior-days
     // moments as a ROWS window ending 1 PRECEDING.
     "e21_stream_anomaly" -> { (s, dir) =>
-      import s.implicits._
-      val ev = Tables.stream(s, dir, "events")
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir)
       val days = graft.streaming.Streaming.anomalyStream(ev)
       drainToMemory(days.toDF(), "append")
         .select("user_id", "day", "cnt", "z")
@@ -957,7 +953,7 @@ object EventQueries {
     // chain as a streaming trigger (Streaming.funnelStream): each user
     // emits EXACTLY ONCE, the moment the watermark finalizes the third
     // first-occurrence register and the strict s < c < p order holds.
-    // The buffered-fold recipe (e19/e21) makes the registers immutable
+    // The ordered stream fold (e19/e21) makes the registers immutable
     // once set, so both the completion and its negation are final —
     // no retraction, and a settled user is a tombstone. Output columns
     // are functions of the key under the finality contract, so results
@@ -965,12 +961,7 @@ object EventQueries {
     // replays the contract: per-type min timestamps over events at/
     // below the final watermark, kept where strictly increasing.
     "e29_stream_funnel" -> { (s, dir) =>
-      import s.implicits._
-      val ev = Tables.stream(s, dir, "events")
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir)
       val done = graft.streaming.Streaming.funnelStream(ev)
       // us-truncated ns on the way out (the e14/x13 DuckDB parity rule)
       drainToMemory(done.toDF(), "append")
@@ -983,19 +974,14 @@ object EventQueries {
 
     // LIVE silence monitor — per event_type, every inter-event gap
     // > 15 min emitted the moment its closing event finalizes
-    // (Streaming.gapsStream, the transitionsStream buffered-fold
-    // recipe): the dead-man switch on a feed, as an exactly-once
-    // append stream instead of a polling batch job. The oracle replays
-    // the finality contract as one lag window over the final slice —
-    // a gap row iff the adjacent pair's delta exceeds the threshold.
+    // (Streaming.gapsStream, on the ordered stream fold): the dead-man
+    // switch on a feed, as an exactly-once append stream instead of a
+    // polling batch job. The oracle replays the finality contract as
+    // one lag window over the final slice — a gap row iff the adjacent
+    // pair's delta exceeds the threshold.
     "e30_stream_gaps" -> { (s, dir) =>
-      import s.implicits._
       val GapNs = 900000000000L // 15 min
-      val ev = Tables.stream(s, dir, "events")
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir)
       val gaps = graft.streaming.Streaming.gapsStream(ev, GapNs)
       drainToMemory(gaps.toDF(), "append")
         .select(col("event_type"),
@@ -1052,12 +1038,7 @@ object EventQueries {
     // frames complete — x29/x33's machinery under e10's watermark
     // rule. 18th live streaming oracle row.
     "e32_stream_shift" -> { (s, dir) =>
-      import s.implicits._
-      val ev = Tables.stream(s, dir, "events")
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir)
       val shifts = graft.streaming.Streaming.levelShiftStream(ev)
       drainToMemory(shifts.toDF(), "append").orderBy("event_type", "day")
     },
@@ -1067,7 +1048,7 @@ object EventQueries {
     // single LATEST view ≤ its timestamp within a 2 h lookback, per
     // user, left-outer (trade/quote semantics). "Latest" is an
     // order-sensitive reduction over an unordered stream, so it runs
-    // on the buffered-fold recipe (Streaming.asofJoinStream), not on
+    // on the ordered stream fold (Streaming.asofJoinStream), not on
     // Spark's interval join: builds finalize into the candidate list
     // before probes match, each final probe picks argmax (ts,
     // event_id) in its lookback, emitted exactly once append-only.
@@ -1076,13 +1057,7 @@ object EventQueries {
     // its view is the (ts, id)-max view in [click − 2 h, click] —
     // such views are always themselves final. 19th live streaming row.
     "e33_stream_asof" -> { (s, dir) =>
-      import s.implicits._
-      val ev = Tables.stream(s, dir, "events")
-        .filter(col("event_type").isin("click", "view"))
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir, "click", "view")
       val joined = graft.streaming.Streaming.asofJoinStream(
         ev, "click", "view", 7200000000000L)
       drainToMemory(joined.toDF(), "append")
@@ -1105,13 +1080,7 @@ object EventQueries {
     // (vns + 2 h) ms ≤ final watermark and it is no final click's
     // argmax. 20th live streaming oracle row.
     "e34_stream_asof_full" -> { (s, dir) =>
-      import s.implicits._
-      val ev = Tables.stream(s, dir, "events")
-        .filter(col("event_type").isin("click", "view"))
-        .withColumnRenamed("ts", "ts_ns")
-        .withColumn("ts2", graft.streaming.Streaming.tsFromNanos(col("ts_ns")))
-        .withWatermark("ts2", "2 hours")
-        .as[graft.streaming.Streaming.TEvent]
+      val ev = orderedEvents(s, dir, "click", "view")
       val joined = graft.streaming.Streaming.asofFullOuterStream(
         ev, "click", "view", 7200000000000L)
       drainToMemory(joined.toDF(), "append")

@@ -37,8 +37,7 @@ object ExtraQueries {
     * the JVM-shutdown reclamation (deleteOnExit is registered at build).
     */
   private[queries] val mmMemo = Memo[String] { (s, mm) =>
-    val p = new org.apache.hadoop.fs.Path(mm).getParent
-    try { p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true); () }
+    try graft.io.Writers.deleteDir(s, new org.apache.hadoop.fs.Path(mm).getParent.toString)
     catch { case scala.util.control.NonFatal(_) => () }
   }
 

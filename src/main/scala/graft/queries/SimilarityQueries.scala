@@ -770,11 +770,7 @@ object SimilarityQueries {
       // former per-row normalize + localCheckpoint re-did that work
       // per row; s24 same)
       val v = vecsNorm(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("s23_ivf").toString
-      // finally-reclaimed: a failure anywhere in build→write→serve must
-      // not leak the artifact dir; the final localCheckpoint makes
-      // deletion-before-return safe on the success path too
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s23_ivf") { tmp =>
         graft.io.Writers.parquet(ivfCentroids(v), s"$tmp/centroids")
         graft.io.Writers.parquetPartitioned(
           v.select(col("vec_id"), col("e"), col("label")),
@@ -813,9 +809,6 @@ object SimilarityQueries {
           .filter(col("rank") <= 3)
           .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },
@@ -852,9 +845,7 @@ object SimilarityQueries {
         .select(col("m"), col("b"),
           array((0 until SubDim).map(d =>
             col(s"s$d").cast(DoubleType) / col("n")): _*).as("cb"))
-      val tmp = java.nio.file.Files.createTempDirectory("s24_ivfpq").toString
-      // finally-reclaimed, as in s23
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s24_ivfpq") { tmp =>
         graft.io.Writers.parquet(ivfCentroids(v), s"$tmp/centroids")
         graft.io.Writers.parquet(cbBuild, s"$tmp/codebook")
         graft.io.Writers.parquetPartitioned(
@@ -903,9 +894,6 @@ object SimilarityQueries {
           .filter(col("rank") <= 3)
           .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },
@@ -924,9 +912,7 @@ object SimilarityQueries {
     "s25_kmeans_persisted" -> { (s, dir) =>
       val cent0 = Quantizer.centroids(s, dir)
       val asg0 = Quantizer.assignments(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("s25_km").toString
-      // finally-reclaimed, as in s23
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s25_km") { tmp =>
         graft.io.Writers.parquet(cent0, s"$tmp/centroids")
         graft.io.Writers.parquetPartitioned(
           asg0.select(col("vec_id"), col("e"), col("cid")),
@@ -935,9 +921,6 @@ object SimilarityQueries {
         val q = asg0.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
         serveQuantizerArtifact(s, cent, s"$tmp/postings", q)
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },
@@ -968,9 +951,7 @@ object SimilarityQueries {
     "s26_ivf_append" -> { (s, dir) =>
       val cent0 = Quantizer.centroids(s, dir)
       val asg0 = Quantizer.assignments(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("s26_app").toString
-      // finally-reclaimed, as in s23
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s26_app") { tmp =>
         // 1. build: frozen quantizer + base postings (vec_id % 5 != 0)
         graft.io.Writers.parquet(cent0, s"$tmp/centroids")
         graft.io.Writers.parquetPartitioned(
@@ -992,9 +973,6 @@ object SimilarityQueries {
         val q = asg0.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
         serveQuantizerArtifact(s, centRe, s"$tmp/postings", q)
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },
@@ -1021,9 +999,7 @@ object SimilarityQueries {
     "s27_stream_ann_serve" -> { (s, dir) =>
       val cent0 = Quantizer.centroids(s, dir)
       val asg0 = Quantizer.assignments(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("s27_serve").toString
-      // finally-reclaimed, as in s23
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s27_serve") { tmp =>
         graft.io.Writers.parquet(cent0, s"$tmp/centroids")
         graft.io.Writers.parquetPartitioned(
           asg0.select(col("vec_id"), col("e"), col("cid")),
@@ -1054,9 +1030,6 @@ object SimilarityQueries {
         s.read.parquet(s"$tmp/out")
           .select("query_id", "rank", "neighbor_id", "cos")
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },
@@ -1084,9 +1057,7 @@ object SimilarityQueries {
       val planes = s.createDataFrame(
         (0 until LshPlanes).map(j => (j, 1L << j, hyperplaneN(j, LshDim))))
         .toDF("j", "w", "hp")
-      val tmp = java.nio.file.Files.createTempDirectory("s28_lsh").toString
-      // finally-reclaimed, as in s23
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s28_lsh") { tmp =>
         graft.io.Writers.parquet(planes, s"$tmp/hyperplanes")
         graft.io.Writers.parquetPartitioned(
           v.select(col("vec_id"), col("e"), col("bucket")),
@@ -1126,9 +1097,6 @@ object SimilarityQueries {
           .filter(col("rank") <= 3)
           .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },
@@ -1154,9 +1122,7 @@ object SimilarityQueries {
     "s29_ivf_compacted" -> { (s, dir) =>
       val cent0 = Quantizer.centroids(s, dir)
       val asg0 = Quantizer.assignments(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("s29_cmp").toString
-      // finally-reclaimed, as in s23
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "s29_cmp") { tmp =>
         // 1-2. build + append — s26's fragmentation-accumulating steps
         graft.io.Writers.parquet(cent0, s"$tmp/centroids")
         graft.io.Writers.parquetPartitioned(
@@ -1180,9 +1146,6 @@ object SimilarityQueries {
         val q = asg0.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
         serveQuantizerArtifact(s, centRe, s"$tmp/postings_compacted", q)
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
       }
       out.orderBy("query_id", "rank")
     },

@@ -551,8 +551,7 @@ object TextQueries {
     // s23/d14 side-effectful pattern.
     "t25_bpe_persisted" -> { (s, dir) =>
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("t25_bpe").toString
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "t25_bpe") { tmp =>
         graft.io.Writers.parquet(
           bpeMerges(s, dir).toDF("rank", "l", "r", "pair_count"), s"$tmp/merges")
         val reread = s.read.parquet(s"$tmp/merges")
@@ -563,10 +562,6 @@ object TextQueries {
           .groupBy("piece").agg(sum(col("cnt")).as("n"))
           .orderBy(desc("n"), col("piece")).limit(50)
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        ()
       }
       out.orderBy(desc("n"), col("piece"))
     },
@@ -609,8 +604,7 @@ object TextQueries {
     // broadcast join — the serve adds only the artifact read.
     "t28_bpe_serve" -> { (s, dir) =>
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("t28_bpe").toString
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "t28_bpe") { tmp =>
         graft.io.Writers.parquet(
           bpeMerges(s, dir).toDF("rank", "l", "r", "pair_count"),
           s"$tmp/merges")
@@ -618,10 +612,6 @@ object TextQueries {
           .orderBy("rank").collect()
           .map(r => (r.getAs[String]("l"), r.getAs[String]("r"))).toSeq
         docTokensWith(s, dir, reread).localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        ()
       }
       out.orderBy("doc_id")
     },
@@ -893,17 +883,12 @@ object TextQueries {
     // finally-reclaimed — the s23/t25 side-effectful pattern.
     "t26_langid_persisted" -> { (s, dir) =>
       val (model, defaults, ev) = trigramNb(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("t26_nb").toString
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "t26_nb") { tmp =>
         graft.io.Writers.parquet(model, s"$tmp/model")
         graft.io.Writers.parquet(defaults, s"$tmp/defaults")
         nbScore(ev, s.read.parquet(s"$tmp/model"),
             s.read.parquet(s"$tmp/defaults"))
           .localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        ()
       }
       out.orderBy("lang", "pred_lang")
     },
@@ -931,8 +916,7 @@ object TextQueries {
     "t27_langid_append" -> { (s, dir) =>
       val counts = trigramCounts(s, dir)
       val trainSlice = col("doc_id") % 5 =!= 0
-      val tmp = java.nio.file.Files.createTempDirectory("t27_nb").toString
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "t27_nb") { tmp =>
         graft.io.Writers.parquet(
           nbCounts(counts, trainSlice && col("doc_id") % 2 === 1),
           s"$tmp/counts")
@@ -944,10 +928,6 @@ object TextQueries {
           .localCheckpoint() // model-sized; consumed by mw + totals
         val (model, defaults) = nbFromCounts(merged)
         nbScore(nbEval(counts), model, defaults).localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        ()
       }
       out.orderBy("lang", "pred_lang")
     },
@@ -974,8 +954,7 @@ object TextQueries {
     "t29_langid_compacted" -> { (s, dir) =>
       val counts = trigramCounts(s, dir)
       val trainSlice = col("doc_id") % 5 =!= 0
-      val tmp = java.nio.file.Files.createTempDirectory("t29_nb").toString
-      val out = try {
+      val out = graft.io.Writers.withScratchDir(s, "t29_nb") { tmp =>
         // 1-2. build + append — t27's fragmentation-accumulating steps
         graft.io.Writers.parquet(
           nbCounts(counts, trainSlice && col("doc_id") % 2 === 1),
@@ -994,10 +973,6 @@ object TextQueries {
           .localCheckpoint() // model-sized; consumed by mw + totals
         val (model, defaults) = nbFromCounts(merged)
         nbScore(nbEval(counts), model, defaults).localCheckpoint()
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        ()
       }
       out.orderBy("lang", "pred_lang")
     },

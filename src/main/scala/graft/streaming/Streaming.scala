@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
@@ -8,12 +8,20 @@ import org.apache.spark.sql.types.DecimalType
 /** Structured Streaming surface over the `events` stream shape
   * (event_id, ts, user_id, event_type, value, props). The reference has
   * no streaming (SURVEY §2.8); these are the incremental forms of the
-  * batch event operators (graft.queries.EventQueries), built so every
+  * batch event and pipeline operators (graft.queries), built so every
   * transform works identically under `readStream` and batch `read`:
-  *   - watermarked tumbling-window aggregation (windowedTypeStats)
-  *   - stateful sessionization via flatMapGroupsWithState (sessionize)
+  *   - one stream runner, [[drain]] / [[drainToMemory]];
+  *   - Spark's own stateful operators: watermarked window aggregation
+  *     (windowedTypeStats), exact and near-dup dedup, chunk dedup,
+  *     stream-static enrichment, stream-stream interval joins;
+  *   - stateless Bloom decontamination; idempotent and generation-merge
+  *     foreachBatch sinks;
+  *   - sessionization via flatMapGroupsWithState (sessionize);
+  *   - the ordered event-time fold ([[ripeFold]]) and the seven operators
+  *     on it: transitions, gaps, level shift, funnel, anomaly, and the
+  *     left- and full-outer as-of joins.
   *
-  * Scale: both shuffle once on their natural key (window+type / user_id);
+  * Scale: every stateful operator shuffles once on its natural key;
   * state is per-key and bounded by the watermark/timeout, so a
   * 1000-executor cluster partitions state horizontally.
   */
@@ -507,22 +515,79 @@ object Streaming {
   }
 
   case class TEvent(user_id: Long, ts_ns: Long, event_id: Long, event_type: String)
+
+  private val DayMs = 86400000L
+  private val DayNs = 86400000000000L
+
+  /** The event-time fold the ordered stream operators below share — the
+    * "order-sensitive computation over an unordered stream" idiom: a
+    * fold that needs a key's events in EVENT-TIME order cannot trust
+    * micro-batch arrival order, so events buffer per key until the
+    * watermark passes `finalMs` (no earlier event can still arrive).
+    * Each call hands `step` the key, its prior state (or `empty`), the
+    * newly ripe events sorted by (ts, event_id), the still-unripe `rest`
+    * and the watermark in ms; `step` returns the state to keep (None
+    * drops it) and the rows to emit, each exactly once, append-only.
+    *
+    * Kept state is woken at the next watermark advance while `wake`
+    * holds (EventTimeTimeout re-invokes the key on watermark-only
+    * batches, so ripe rows flush without new data). `dropLate` drops
+    * rows already final on arrival. In batch the watermark is +∞: one
+    * call per key sees its whole history and no state is stored, so a
+    * `step` must not do arithmetic on `wm` that overflows there.
+    */
+  private def ripeFold[K: Encoder, S: Encoder, O: Encoder](
+      events: Dataset[TEvent], key: TEvent => K, empty: S,
+      finalMs: TEvent => Long = _.ts_ns / 1000000L, dropLate: Boolean = false)(
+      buffer: S => List[TEvent], wake: S => Boolean = (_: S) => true)(
+      step: (K, S, List[TEvent], List[TEvent], Long) => (Option[S], Iterator[O]))
+      : Dataset[O] = {
+    val isStreaming = events.isStreaming
+    val timeout =
+      if (isStreaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
+    events.groupByKey(key).flatMapGroupsWithState[S, O](OutputMode.Append, timeout) {
+      (k: K, it: Iterator[TEvent], state: GroupState[S]) =>
+        val prior = state.getOption.getOrElse(empty)
+        val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
+        val fresh = if (isStreaming && dropLate) it.filter(finalMs(_) > wm) else it
+        val (ripe, rest) = (buffer(prior) ++ fresh).partition(finalMs(_) <= wm)
+        val (next, out) = step(k, prior, ripe.sortBy(e => (e.ts_ns, e.event_id)), rest, wm)
+        if (isStreaming) next match {
+          case None => state.remove()
+          case Some(s) =>
+            state.update(s)
+            if (wake(s)) state.setTimeoutTimestamp(wm + 1)
+        }
+        out
+    }
+  }
+
   case class TPair(user_id: Long, prev: String, next: String, next_ts_ns: Long)
   case class TransState(tail: Option[TEvent], buffer: List[TEvent])
 
+  /** [[ripeFold]] over consecutive events: each ripe slice chains onto
+    * the key's retained tail (its last final event), and `pair` maps
+    * every adjacent (earlier, later) pair to at most one row. State per
+    * key: O(rate × horizon) buffered events plus the tail.
+    */
+  private def pairFold[K: Encoder, O: Encoder](events: Dataset[TEvent], key: TEvent => K)(
+      pair: (K, TEvent, TEvent) => Option[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    ripeFold(events, key, TransState(None, Nil))(_.buffer) { (k, prior, ripe, rest, _) =>
+      val rows = (prior.tail.toList ++ ripe).sliding(2).flatMap {
+        case List(a, b) => pair(k, a, b)
+        case _ => None
+      }.toList
+      val tail = ripe.lastOption.orElse(prior.tail)
+      (if (rest.isEmpty && tail.isEmpty) None else Some(TransState(tail, rest)), rows.iterator)
+    }
+  }
+
   /** Per-user event-type TRANSITIONS from a live stream — the streaming
-    * twin of EventQueries.e19's batch matrix, and the canonical
-    * "order-sensitive computation over an unordered stream" idiom: a
-    * transition (prev → next) needs the user's events in EVENT-TIME
-    * order, but micro-batches deliver arrival order. The stateful op
-    * therefore BUFFERS events per user until the watermark passes them
-    * (no earlier event can still arrive), then sorts the ripe slice by
-    * (ts, event_id), chains it onto the retained tail (the last emitted
-    * event), and appends one pair per consecutive step. State is
-    * bounded by the watermark horizon: buffered events span at most the
-    * delay window, plus one tail event — O(rate × horizon) per key,
-    * evicted as the watermark advances (EventTimeTimeout re-invokes the
-    * group on watermark-only batches, so tails flush without new data).
+    * twin of EventQueries.e19's batch matrix: a transition (prev → next)
+    * needs the user's events in event-time order, so it runs on
+    * [[pairFold]] and appends one pair per consecutive step of the
+    * user's final events.
     *
     * Finality contract (what the oracle replays): an event is emitted
     * iff floor(ts_ns/10⁶) ≤ final watermark (max event-time ms − delay)
@@ -531,35 +596,9 @@ object Streaming {
     */
   def transitionsStream(events: Dataset[TEvent]): Dataset[TPair] = {
     import events.sparkSession.implicits._
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, TPair](OutputMode.Append, timeoutConf) {
-        (uid: Long, it: Iterator[TEvent], state: GroupState[TransState]) =>
-          val prior = state.getOption.getOrElse(TransState(None, Nil))
-          val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          val buf = prior.buffer ++ it
-          // ripe = final under the watermark; the rest waits in state
-          val (ripe, rest) = buf.partition(e => e.ts_ns / 1000000L <= wm)
-          val ordered = ripe.sortBy(e => (e.ts_ns, e.event_id))
-          val chain = prior.tail.toList ++ ordered
-          val pairs = chain.sliding(2).collect {
-            case List(a, b) => TPair(uid, a.event_type, b.event_type, b.ts_ns)
-          }.toList
-          val tail = ordered.lastOption.orElse(prior.tail)
-          if (isStreaming) {
-            if (rest.isEmpty && tail.isEmpty) state.remove()
-            else {
-              state.update(TransState(tail, rest))
-              // wake on the next watermark advance to flush newly-ripe rows
-              state.setTimeoutTimestamp(wm + 1)
-            }
-          }
-          pairs.iterator
-      }
+    pairFold(events, _.user_id) { (uid, a, b) =>
+      Some(TPair(uid, a.event_type, b.event_type, b.ts_ns))
+    }
   }
 
   case class GapRow(event_type: String, gap_start_ns: Long, gap_end_ns: Long,
@@ -568,14 +607,10 @@ object Streaming {
   /** LIVE silence/heartbeat monitor — the dead-man switch every
     * ingestion pipeline wants on its feeds: per event_type, emit one
     * row for every inter-event gap longer than `gapNs`, the moment the
-    * gap's CLOSING event is finalized by the watermark. Uses the
-    * transitionsStream buffered-fold recipe (events buffer per key
-    * until the watermark passes them, ripe slices fold in (ts,
-    * event_id) order onto the retained tail), so a gap is measured
-    * between genuinely consecutive events whatever the arrival order,
-    * and each gap is emitted exactly once. State per key: O(rate ×
-    * horizon) buffered events + one tail; EventTimeTimeout flushes on
-    * watermark-only batches.
+    * gap's CLOSING event is finalized by the watermark. Runs on
+    * [[pairFold]], so a gap is measured between genuinely consecutive
+    * events whatever the arrival order, and each gap is emitted exactly
+    * once.
     *
     * The still-open tail gap (silence since the last event, no closing
     * event yet) is deliberately NOT emitted — it has no final length;
@@ -588,34 +623,10 @@ object Streaming {
     */
   def gapsStream(events: Dataset[TEvent], gapNs: Long): Dataset[GapRow] = {
     import events.sparkSession.implicits._
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[TransState, GapRow](OutputMode.Append, timeoutConf) {
-        (etype: String, it: Iterator[TEvent], state: GroupState[TransState]) =>
-          val prior = state.getOption.getOrElse(TransState(None, Nil))
-          val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          val buf = prior.buffer ++ it
-          val (ripe, rest) = buf.partition(e => e.ts_ns / 1000000L <= wm)
-          val ordered = ripe.sortBy(e => (e.ts_ns, e.event_id))
-          val chain = prior.tail.toList ++ ordered
-          val gaps = chain.sliding(2).collect {
-            case List(a, b) if b.ts_ns - a.ts_ns > gapNs =>
-              GapRow(etype, a.ts_ns, b.ts_ns, (b.ts_ns - a.ts_ns) / 1000000L)
-          }.toList
-          val tail = ordered.lastOption.orElse(prior.tail)
-          if (isStreaming) {
-            if (rest.isEmpty && tail.isEmpty) state.remove()
-            else {
-              state.update(TransState(tail, rest))
-              state.setTimeoutTimestamp(wm + 1)
-            }
-          }
-          gaps.iterator
-      }
+    pairFold(events, _.event_type) { (etype, a, b) =>
+      Option.when(b.ts_ns - a.ts_ns > gapNs)(
+        GapRow(etype, a.ts_ns, b.ts_ns, (b.ts_ns - a.ts_ns) / 1000000L))
+    }
   }
 
   case class ShiftRow(event_type: String, day: Long, before7: Long,
@@ -631,12 +642,12 @@ object Streaming {
     * report) firing 7 days after the step, as early as finality
     * allows — each day scored exactly once, append-only.
     *
-    * State per key: the unripe event buffer (events whose DAY hasn't
-    * finalized), a ~15-day window of finalized day counts (days the
-    * next score can still reach), one LOCF carry for everything
-    * evicted, the key's first finalized day, and the scoring cursor —
-    * O(rate × horizon + 15) whatever the stream length.
-    * EventTimeTimeout flushes scoring on watermark-only batches.
+    * Runs on [[ripeFold]] with events ripening by DAY END. State per
+    * key: the unripe event buffer (events whose day hasn't finalized),
+    * a ~15-day window of finalized day counts (days the next score can
+    * still reach), one LOCF carry for everything evicted, the key's
+    * first finalized day, and the scoring cursor — O(rate × horizon +
+    * 15) whatever the stream length.
     *
     * Finality contract (what the oracle replays): day d is final iff
     * (d+1)·86400000 ≤ final watermark ms; d is scored iff d−7 ≥ the
@@ -647,70 +658,51 @@ object Streaming {
     */
   def levelShiftStream(events: Dataset[TEvent]): Dataset[ShiftRow] = {
     import events.sparkSession.implicits._
-    val DayMs = 86400000L
-    val DayNs = 86400000000000L
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[ShiftState, ShiftRow](OutputMode.Append, timeoutConf) {
-        (etype: String, it: Iterator[TEvent], state: GroupState[ShiftState]) =>
-          val prior = state.getOption
-            .getOrElse(ShiftState(Nil, Map.empty, Long.MinValue, 0L, 0L))
-          val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          val buf = prior.buffer ++ it
-          val (ripe, rest) =
-            if (isStreaming) buf.partition(e => (e.ts_ns / DayNs + 1) * DayMs <= wm)
-            else (buf, Nil)
-          var counts = prior.counts
-          ripe.groupBy(_.ts_ns / DayNs).foreach { case (d, es) =>
-            counts = counts.updated(d, counts.getOrElse(d, 0L) + es.size)
+    ripeFold(events, _.event_type, ShiftState(Nil, Map.empty, Long.MinValue, 0L, 0L),
+        finalMs = e => (e.ts_ns / DayNs + 1) * DayMs)(_.buffer) {
+      (etype, prior, ripe, rest, wm) =>
+        var counts = prior.counts
+        ripe.groupBy(_.ts_ns / DayNs).foreach { case (d, es) =>
+          counts = counts.updated(d, counts.getOrElse(d, 0L) + es.size)
+        }
+        val lo =
+          if (prior.lo != Long.MinValue) prior.lo
+          else if (counts.nonEmpty) counts.keys.min
+          else Long.MinValue
+        val maxd =
+          if (wm != Long.MaxValue) wm / DayMs - 1
+          else if (counts.nonEmpty) counts.keys.max
+          else Long.MinValue
+        def locf(x: Long): Long = {
+          val below = counts.keys.filter(_ <= x)
+          if (below.nonEmpty) counts(below.max) else prior.carry
+        }
+        val out = scala.collection.mutable.ListBuffer.empty[ShiftRow]
+        var d =
+          if (prior.lo != Long.MinValue) prior.nextScore
+          else if (lo != Long.MinValue) lo + 7
+          else Long.MaxValue
+        if (d != Long.MaxValue) {
+          while (d + 7 <= maxd) {
+            val before = (1 to 7).map(k => locf(d - k)).sum
+            val after = (1 to 7).map(k => locf(d + k)).sum
+            out += ShiftRow(etype, d, before, after, after - before)
+            d += 1
           }
-          val lo =
-            if (prior.lo != Long.MinValue) prior.lo
-            else if (counts.nonEmpty) counts.keys.min
-            else Long.MinValue
-          val maxd =
-            if (isStreaming) wm / DayMs - 1
-            else if (counts.nonEmpty) counts.keys.max
-            else Long.MinValue
-          def locf(x: Long): Long = {
-            val below = counts.keys.filter(_ <= x)
-            if (below.nonEmpty) counts(below.max) else prior.carry
-          }
-          val out = scala.collection.mutable.ListBuffer.empty[ShiftRow]
-          var d =
-            if (prior.lo != Long.MinValue) prior.nextScore
-            else if (lo != Long.MinValue) lo + 7
-            else Long.MaxValue
-          if (d != Long.MaxValue) {
-            while (d + 7 <= maxd) {
-              val before = (1 to 7).map(k => locf(d - k)).sum
-              val after = (1 to 7).map(k => locf(d + k)).sum
-              out += ShiftRow(etype, d, before, after, after - before)
-              d += 1
-            }
-          }
-          // evict day counts the scoring cursor can no longer reach;
-          // the LATEST evicted day's count becomes the LOCF carry
-          var carry = prior.carry
-          if (d != Long.MaxValue) {
-            val (evict, keep) = counts.partition(_._1 < d - 7)
-            if (evict.nonEmpty) carry = evict(evict.keys.max)
-            counts = keep
-          }
-          if (isStreaming) {
-            if (rest.isEmpty && counts.isEmpty && lo == Long.MinValue) state.remove()
-            else {
-              state.update(ShiftState(rest, counts, lo,
-                if (d == Long.MaxValue) 0L else d, carry))
-              state.setTimeoutTimestamp(wm + 1)
-            }
-          }
-          out.iterator
-      }
+        }
+        // evict day counts the scoring cursor can no longer reach;
+        // the LATEST evicted day's count becomes the LOCF carry
+        var carry = prior.carry
+        if (d != Long.MaxValue) {
+          val (evict, keep) = counts.partition(_._1 < d - 7)
+          if (evict.nonEmpty) carry = evict(evict.keys.max)
+          counts = keep
+        }
+        val next =
+          if (rest.isEmpty && counts.isEmpty && lo == Long.MinValue) None
+          else Some(ShiftState(rest, counts, lo, if (d == Long.MaxValue) 0L else d, carry))
+        (next, out.iterator)
+    }
   }
 
   case class FunnelState(pending: List[TEvent], sNs: Long, cNs: Long,
@@ -724,18 +716,16 @@ object Streaming {
     * predicate). The conversion trigger every growth/activation
     * pipeline wants as a push, not a nightly batch.
     *
-    * Order sensitivity uses the transitionsStream recipe: events buffer
-    * per user until the watermark passes them (no earlier event can
-    * still arrive), then fold in (ts, event_id) order into the three
-    * first-occurrence registers. Because ripe events fold in event-time
-    * order, each register is immutable once set — so the completion
-    * verdict (s < c < p with all three set) is FINAL the moment the
-    * third register fills: emit-once needs no retraction, and a failed
-    * verdict (e.g. first click precedes first signup) is equally final,
-    * recorded as a tombstone flag so later events can never resurrect
-    * the user. State per user: O(rate × horizon) buffered events while
-    * unsettled, then the O(1) settled flag; EventTimeTimeout flushes
-    * newly-ripe buffers on watermark-only batches.
+    * Runs on [[ripeFold]]: ripe events fold in (ts, event_id) order
+    * into the three first-occurrence registers, so each register is
+    * immutable once set — and the completion verdict (s < c < p with
+    * all three set) is FINAL the moment the third register fills:
+    * emit-once needs no retraction, and a failed verdict (e.g. first
+    * click precedes first signup) is equally final, recorded as a
+    * tombstone flag so later events can never resurrect the user.
+    * State per user: O(rate × horizon) buffered events while unsettled,
+    * then the O(1) settled flag; the key is woken only while events
+    * are buffered, so a settled user is never woken again.
     *
     * Finality contract (what the oracle replays): an event folds iff
     * floor(ts_ns/10⁶) ≤ final watermark (max event-time ms − delay);
@@ -744,55 +734,33 @@ object Streaming {
     */
   def funnelStream(events: Dataset[TEvent]): Dataset[FunnelDone] = {
     import events.sparkSession.implicits._
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelDone](OutputMode.Append, timeoutConf) {
-        (uid: Long, it: Iterator[TEvent], state: GroupState[FunnelState]) =>
-          val prior = state.getOption
-            .getOrElse(FunnelState(Nil, -1L, -1L, -1L, settled = false))
-          if (prior.settled) {
-            // verdict is final — drain arrivals, keep only the flag
-            // (dropping state would let later events rebuild fresh
-            // registers and re-emit)
-            Iterator.empty
-          } else {
-            val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-            val buf = prior.pending ++ it
-            val (ripe, rest) = buf.partition(e => e.ts_ns / 1000000L <= wm)
-            var s = prior.sNs; var c = prior.cNs; var p = prior.pNs
-            ripe.sortBy(e => (e.ts_ns, e.event_id)).foreach { e =>
-              e.event_type match {
-                case "signup" if s < 0L => s = e.ts_ns
-                case "click" if c < 0L => c = e.ts_ns
-                case "purchase" if p < 0L => p = e.ts_ns
-                case _ =>
-              }
-            }
-            val settled = s >= 0L && c >= 0L && p >= 0L
-            if (isStreaming) {
-              if (settled) state.update(FunnelState(Nil, s, c, p, settled = true))
-              else {
-                state.update(FunnelState(rest, s, c, p, settled = false))
-                // wake on the next watermark advance to flush newly-ripe rows
-                if (rest.nonEmpty) state.setTimeoutTimestamp(wm + 1)
-              }
-            }
-            if (settled && s < c && c < p) Iterator.single(FunnelDone(uid, s, c, p))
-            else Iterator.empty
+    ripeFold(events, _.user_id, FunnelState(Nil, -1L, -1L, -1L, settled = false))(
+        _.pending, wake = _.pending.nonEmpty) { (uid, prior, ripe, rest, _) =>
+      // a settled verdict is final — drain arrivals, keep only the flag
+      // (dropping state would let later events rebuild fresh registers
+      // and re-emit)
+      if (prior.settled) (Some(prior), Iterator.empty)
+      else {
+        var s = prior.sNs; var c = prior.cNs; var p = prior.pNs
+        ripe.foreach { e =>
+          e.event_type match {
+            case "signup" if s < 0L => s = e.ts_ns
+            case "click" if c < 0L => c = e.ts_ns
+            case "purchase" if p < 0L => p = e.ts_ns
+            case _ =>
           }
+        }
+        val settled = s >= 0L && c >= 0L && p >= 0L
+        (Some(FunnelState(if (settled) Nil else rest, s, c, p, settled)),
+          if (settled && s < c && c < p) Iterator.single(FunnelDone(uid, s, c, p))
+          else Iterator.empty)
       }
+    }
   }
 
   case class AnomDay(user_id: Long, day: Long, cnt: Long, z: Double)
   case class AnomState(pending: List[TEvent], partial: Map[Long, Long],
       h: Long, t: Long, s2: Long)
-
-  private val DayMs = 86400000L
-  private val DayNs = 86400000000000L
 
   /** ONLINE per-user daily-rate anomaly detection from a live stream —
     * the streaming twin of EventQueries.e20, and the sequential-test
@@ -806,10 +774,11 @@ object Streaming {
     * S2 = Σcnt²) and the |z| > 2 gate is the exact long predicate
     * dev² > 4·varn (dev = H·c − T, varn = H·S2 − T²) — floats touch
     * only the DISPLAYED z (one sqrt of an exact long, one division,
-    * round6). State per user is O(rate × horizon) buffered events +
-    * partial counts for the ≤ ⌈horizon/day⌉+1 open days + the three
-    * O(1) moments; EventTimeTimeout flushes newly-final days on
-    * watermark-only batches.
+    * round6). Runs on [[ripeFold]]. State per user is O(rate × horizon)
+    * buffered events + partial counts for the ≤ ⌈horizon/day⌉+1 open
+    * days + the three O(1) moments; the moments are the user's scoring
+    * history, kept as long as the key lives, and the key is woken only
+    * while buffered events or open days still await the watermark.
     *
     * Finality contract (what the oracle replays): day d is scored iff
     * (d+1)·86400000 − 1 ≤ final watermark (max event-time ms − delay),
@@ -818,56 +787,45 @@ object Streaming {
     */
   def anomalyStream(events: Dataset[TEvent]): Dataset[AnomDay] = {
     import events.sparkSession.implicits._
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AnomState, AnomDay](OutputMode.Append, timeoutConf) {
-        (uid: Long, it: Iterator[TEvent], state: GroupState[AnomState]) =>
-          val prior = state.getOption.getOrElse(AnomState(Nil, Map.empty, 0L, 0L, 0L))
-          val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          val buf = prior.pending ++ it
-          // ripe = final under the watermark; the rest waits in state
-          val (ripe, rest) = buf.partition(e => e.ts_ns / 1000000L <= wm)
-          var partial = prior.partial
-          ripe.foreach { e =>
-            val d = e.ts_ns / DayNs
-            partial = partial.updated(d, partial.getOrElse(d, 0L) + 1L)
+    ripeFold(events, _.user_id, AnomState(Nil, Map.empty, 0L, 0L, 0L))(
+        _.pending, wake = st => st.pending.nonEmpty || st.partial.nonEmpty) {
+      (uid, prior, ripe, rest, wm) =>
+        var partial = prior.partial
+        ripe.foreach { e =>
+          val d = e.ts_ns / DayNs
+          partial = partial.updated(d, partial.getOrElse(d, 0L) + 1L)
+        }
+        // a day is final once its last millisecond is at/below the
+        // watermark — all its events are then ripe, so the count is
+        // complete; finality is monotone in wm, so ascending order
+        // here is ascending across batches too
+        val finalDays =
+          partial.keys.filter(d => wm == Long.MaxValue || (d + 1) * DayMs - 1 <= wm)
+            .toSeq.sorted
+        var h = prior.h; var t = prior.t; var s2 = prior.s2
+        val out = List.newBuilder[AnomDay]
+        finalDays.foreach { d =>
+          val c = partial(d)
+          val dev = h * c - t
+          val varn = h * s2 - t * t
+          if (h >= 3 && varn > 0 && dev * dev > 4 * varn) {
+            val z = math.floor(
+              (dev.toDouble / math.sqrt(varn.toDouble)) * 1e6 + 0.5) / 1e6
+            out += AnomDay(uid, d, c, z)
           }
-          // a day is final once its last millisecond is at/below the
-          // watermark — all its events are then ripe, so the count is
-          // complete; finality is monotone in wm, so ascending order
-          // here is ascending across batches too
-          val finalDays =
-            partial.keys.filter(d => wm == Long.MaxValue || (d + 1) * DayMs - 1 <= wm)
-              .toSeq.sorted
-          var h = prior.h; var t = prior.t; var s2 = prior.s2
-          val out = List.newBuilder[AnomDay]
-          finalDays.foreach { d =>
-            val c = partial(d)
-            val dev = h * c - t
-            val varn = h * s2 - t * t
-            if (h >= 3 && varn > 0 && dev * dev > 4 * varn) {
-              val z = math.floor(
-                (dev.toDouble / math.sqrt(varn.toDouble)) * 1e6 + 0.5) / 1e6
-              out += AnomDay(uid, d, c, z)
-            }
-            h += 1; t += c; s2 += c * c
-            partial = partial - d
-          }
-          if (isStreaming) {
-            // moments are the user's scoring history — kept as long as
-            // the key lives (O(1) per user); the timeout is armed only
-            // while buffered events / open days still await the
-            // watermark (nothing to flush otherwise)
-            state.update(AnomState(rest, partial, h, t, s2))
-            if (rest.nonEmpty || partial.nonEmpty) state.setTimeoutTimestamp(wm + 1)
-          }
-          out.result().iterator
-      }
+          h += 1; t += c; s2 += c * c
+          partial = partial - d
+        }
+        (Some(AnomState(rest, partial, h, t, s2)), out.result().iterator)
+    }
   }
+
+  /** The (ts, event_id)-latest build with probe.ts − lookback ≤
+    * build.ts ≤ probe.ts, if any.
+    */
+  private def latestBuild(builds: List[TEvent], p: TEvent, lookbackNs: Long): Option[TEvent] =
+    builds.filter(b => b.ts_ns <= p.ts_ns && b.ts_ns >= p.ts_ns - lookbackNs)
+      .maxByOption(b => (b.ts_ns, b.event_id))
 
   case class AsofRow(user_id: Long, probe_id: Long, build_id: Option[Long],
       gap_us: Option[Long])
@@ -879,23 +837,20 @@ object Streaming {
     * (e.g. a view) with build.ts ≤ probe.ts within a bounded lookback,
     * per key, left-outer. Spark's stream-stream join returns ALL views
     * in the interval; "the most recent one" is an order-sensitive
-    * reduction over an unordered stream, so it runs on the
-    * transitionsStream buffered-fold recipe: events buffer per key
-    * until the watermark passes them; every newly-final build joins
-    * the candidate list BEFORE any probe matches (an equal-timestamp
-    * build/probe pair finalizes together, whatever the arrival order);
-    * each final probe then picks argmax by (ts, event_id) over
-    * candidates in [probe.ts − lookback, probe.ts] and is emitted
-    * exactly once, append-only — a probe's answer can never change
-    * after emission because any still-unripe build is strictly newer
-    * than every finalized probe.
+    * reduction over an unordered stream, so it runs on [[ripeFold]]:
+    * every newly-final build joins the candidate list BEFORE any probe
+    * matches (an equal-timestamp build/probe pair finalizes together,
+    * whatever the arrival order); each final probe then picks argmax
+    * by (ts, event_id) over candidates in [probe.ts − lookback,
+    * probe.ts] and is emitted exactly once, append-only — a probe's
+    * answer can never change after emission because any still-unripe
+    * build is strictly newer than every finalized probe.
     *
     * State per key is bounded by the two horizons: the unripe buffer
     * spans at most the watermark delay, and retained builds span at
     * most the lookback behind the watermark (older builds can't match
     * any still-pending probe, which is by definition newer than the
-    * watermark); EventTimeTimeout flushes newly-ripe rows on
-    * watermark-only batches.
+    * watermark).
     *
     * Finality contract (what the oracle replays): a probe emits iff
     * floor(ts_ns/10⁶) ≤ final watermark (max event-time ms − delay);
@@ -915,48 +870,24 @@ object Streaming {
   def asofJoinStream(events: Dataset[TEvent], probeType: String,
       buildType: String, lookbackNs: Long): Dataset[AsofRow] = {
     import events.sparkSession.implicits._
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsofState, AsofRow](OutputMode.Append, timeoutConf) {
-        (uid: Long, it: Iterator[TEvent], state: GroupState[AsofState]) =>
-          val prior = state.getOption.getOrElse(AsofState(Nil, Nil))
-          val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          // explicit late-drop (see scaladoc); batch path keeps all rows
-          val fresh = if (isStreaming) it.filter(_.ts_ns / 1000000L > wm) else it
-          val buf = prior.pending ++ fresh
-          val (ripe, rest) = buf.partition(e => e.ts_ns / 1000000L <= wm)
-          // builds first: a probe finalized this batch may match a build
-          // finalized this same batch (including equal timestamps)
-          val builds = prior.builds ++ ripe.filter(_.event_type == buildType)
-          val out = ripe.filter(_.event_type == probeType)
-            .sortBy(e => (e.ts_ns, e.event_id))
-            .map { p =>
-              val cand = builds.filter(b =>
-                b.ts_ns <= p.ts_ns && b.ts_ns >= p.ts_ns - lookbackNs)
-              if (cand.isEmpty) AsofRow(uid, p.event_id, None, None)
-              else {
-                val best = cand.maxBy(b => (b.ts_ns, b.event_id))
-                AsofRow(uid, p.event_id, Some(best.event_id),
-                  Some((p.ts_ns - best.ts_ns) / 1000L))
-              }
-            }
-          if (isStreaming) {
-            // every pending probe has ts_ms > wm, so its candidates have
-            // ts_ns ≥ (wm+1)·10⁶ − lookback — prune builds below that
-            val keepNs = (wm + 1L) * 1000000L - lookbackNs
-            val kept = builds.filter(_.ts_ns >= keepNs)
-            if (rest.isEmpty && kept.isEmpty) state.remove()
-            else {
-              state.update(AsofState(rest, kept))
-              state.setTimeoutTimestamp(wm + 1)
-            }
-          }
-          out.iterator
-      }
+    ripeFold(events, _.user_id, AsofState(Nil, Nil), dropLate = true)(_.pending) {
+      (uid, prior, ripe, rest, wm) =>
+        // builds first: a probe finalized this batch may match a build
+        // finalized this same batch (including equal timestamps)
+        val builds = prior.builds ++ ripe.filter(_.event_type == buildType)
+        val out = ripe.filter(_.event_type == probeType).map { p =>
+          latestBuild(builds, p, lookbackNs).fold(AsofRow(uid, p.event_id, None, None))(b =>
+            AsofRow(uid, p.event_id, Some(b.event_id), Some((p.ts_ns - b.ts_ns) / 1000L)))
+        }
+        // every pending probe has ts_ms > wm, so its candidates have
+        // ts_ns ≥ (wm+1)·10⁶ − lookback — prune builds below that
+        // (batch keeps no state, and the bound overflows at wm = +∞)
+        val kept =
+          if (wm == Long.MaxValue) Nil
+          else builds.filter(_.ts_ns >= (wm + 1L) * 1000000L - lookbackNs)
+        (if (rest.isEmpty && kept.isEmpty) None else Some(AsofState(rest, kept)),
+          out.iterator)
+    }
   }
 
   case class AsofFullRow(user_id: Long, probe_id: Option[Long],
@@ -999,56 +930,34 @@ object Streaming {
   def asofFullOuterStream(events: Dataset[TEvent], probeType: String,
       buildType: String, lookbackNs: Long): Dataset[AsofFullRow] = {
     import events.sparkSession.implicits._
-    val isStreaming = events.isStreaming
-    val timeoutConf =
-      if (isStreaming) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsofFullState, AsofFullRow](OutputMode.Append, timeoutConf) {
-        (uid: Long, it: Iterator[TEvent], state: GroupState[AsofFullState]) =>
-          val prior = state.getOption.getOrElse(AsofFullState(Nil, Nil, Nil))
-          val wm = if (isStreaming) state.getCurrentWatermarkMs() else Long.MaxValue
-          // explicit late-drop (see scaladoc); batch path keeps all rows
-          val fresh = if (isStreaming) it.filter(_.ts_ns / 1000000L > wm) else it
-          val buf = prior.pending ++ fresh
-          val (ripe, rest) = buf.partition(e => e.ts_ns / 1000000L <= wm)
-          // builds first (asofJoinStream's equal-ts finality), and ALL
-          // matching before any expiry: a probe finalized this batch may
-          // choose a build that expires this same batch
-          val builds = prior.builds ++ ripe.filter(_.event_type == buildType)
-          var matched = prior.matched.toSet
-          val probeRows = ripe.filter(_.event_type == probeType)
-            .sortBy(e => (e.ts_ns, e.event_id))
-            .map { p =>
-              val cand = builds.filter(b =>
-                b.ts_ns <= p.ts_ns && b.ts_ns >= p.ts_ns - lookbackNs)
-              if (cand.isEmpty) AsofFullRow(uid, Some(p.event_id), None, None)
-              else {
-                val best = cand.maxBy(b => (b.ts_ns, b.event_id))
-                matched += best.event_id
-                AsofFullRow(uid, Some(p.event_id), Some(best.event_id),
-                  Some((p.ts_ns - best.ts_ns) / 1000L))
-              }
-            }
-          // forward-horizon expiry ≡ asofJoinStream's keepNs prune
-          // (b.ts_ns + lb < (wm+1)·10⁶ ⟺ floor((b.ts_ns + lb)/10⁶) ≤ wm),
-          // written overflow-safe for the batch path's wm = MaxValue
-          val (expired, kept) = builds.partition(b =>
-            wm == Long.MaxValue || (b.ts_ns + lookbackNs) / 1000000L <= wm)
-          val buildRows = expired.filter(b => !matched.contains(b.event_id))
-            .sortBy(b => (b.ts_ns, b.event_id))
-            .map(b => AsofFullRow(uid, None, Some(b.event_id), None))
-          if (isStreaming) {
-            val keptIds = kept.map(_.event_id).toSet
-            val keptMatched = matched.filter(keptIds.contains).toList
-            if (rest.isEmpty && kept.isEmpty) state.remove()
-            else {
-              state.update(AsofFullState(rest, kept, keptMatched))
-              state.setTimeoutTimestamp(wm + 1)
-            }
+    ripeFold(events, _.user_id, AsofFullState(Nil, Nil, Nil), dropLate = true)(_.pending) {
+      (uid, prior, ripe, rest, wm) =>
+        // builds first (asofJoinStream's equal-ts finality), and ALL
+        // matching before any expiry: a probe finalized this batch may
+        // choose a build that expires this same batch
+        val builds = prior.builds ++ ripe.filter(_.event_type == buildType)
+        var matched = prior.matched.toSet
+        val probeRows = ripe.filter(_.event_type == probeType).map { p =>
+          latestBuild(builds, p, lookbackNs) match {
+            case None => AsofFullRow(uid, Some(p.event_id), None, None)
+            case Some(b) =>
+              matched += b.event_id
+              AsofFullRow(uid, Some(p.event_id), Some(b.event_id),
+                Some((p.ts_ns - b.ts_ns) / 1000L))
           }
-          (probeRows ++ buildRows).iterator
-      }
+        }
+        // forward-horizon expiry ≡ asofJoinStream's keepNs prune
+        // (b.ts_ns + lb < (wm+1)·10⁶ ⟺ floor((b.ts_ns + lb)/10⁶) ≤ wm),
+        // written overflow-safe for the batch path's wm = MaxValue
+        val (expired, kept) = builds.partition(b =>
+          wm == Long.MaxValue || (b.ts_ns + lookbackNs) / 1000000L <= wm)
+        val buildRows = expired.filter(b => !matched.contains(b.event_id))
+          .sortBy(b => (b.ts_ns, b.event_id))
+          .map(b => AsofFullRow(uid, None, Some(b.event_id), None))
+        val keptIds = kept.map(_.event_id).toSet
+        (if (rest.isEmpty && kept.isEmpty) None
+          else Some(AsofFullState(rest, kept, matched.filter(keptIds.contains).toList)),
+          (probeRows ++ buildRows).iterator)
+    }
   }
 }

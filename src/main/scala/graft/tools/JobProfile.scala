@@ -9,14 +9,15 @@ import graft.SparkEntry
 /** Per-job / per-stage wall-clock breakdown of one query (guide §1:
   * measure first). Runs the named query N times (first run warms codegen
   * and memos) and prints, for the LAST run, every Spark job with its
-  * duration, stage count, task count and description — the data that
+  * duration, stages run / stages listed (the rest were skipped, their
+  * shuffle output reused), task count and description — the data that
   * tells an overhead-bound query (many ~0.3 s jobs) apart from a
   * compute-bound one (one slow stage). Not part of the driver contract.
   *
   *   sbt "runMain graft.tools.JobProfile d07_dedup_clusters 2"
   */
 object JobProfile {
-  private case class JobRec(id: Int, desc: String, start: Long,
+  private case class JobRec(id: Int, desc: String, start: Long, listed: Int,
     var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0)
 
   def main(args: Array[String]): Unit = {
@@ -27,6 +28,10 @@ object JobProfile {
 
     val jobs = new ConcurrentLinkedQueue[JobRec]()
     val byId = scala.collection.concurrent.TrieMap.empty[Int, JobRec]
+    // a stage is credited to the job that lists it at job start — not
+    // to the newest job, which may be a later or overlapping broadcast
+    // job; a stage shared by several jobs runs (and is credited) once
+    val jobOfStage = scala.collection.concurrent.TrieMap.empty[Int, JobRec]
     var collecting = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (collecting) {
@@ -35,21 +40,18 @@ object JobProfile {
           .orElse(Option(e.properties)
             .flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("")
-        val r = JobRec(e.jobId, desc, e.time)
+        val r = JobRec(e.jobId, desc, e.time, e.stageIds.size)
         byId(e.jobId) = r
+        e.stageIds.foreach(sid => jobOfStage.putIfAbsent(sid, r))
         jobs.add(r)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         byId.get(e.jobId).foreach(_.end = e.time)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val sid = e.stageInfo.stageId
-        // attribute to the most recent open job (good enough locally)
-        byId.values.toSeq.sortBy(-_.id).headOption.foreach { r =>
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        jobOfStage.get(e.stageInfo.stageId).foreach { r =>
           r.stages += 1
           r.tasks += e.stageInfo.numTasks
         }
-        val _ = sid
-      }
     })
 
     val fn = SparkEntry.queries(q)
@@ -66,7 +68,7 @@ object JobProfile {
     println(f"[profile] last run: ${rs.size} jobs, sum job wall ${total / 1e3}%.2f s")
     rs.foreach { r =>
       println(f"[profile]   job ${r.id}%4d ${(r.end - r.start) / 1e3}%7.3f s  " +
-        f"stages=${r.stages}%3d tasks=${r.tasks}%5d  ${r.desc.take(90)}")
+        f"stages=${r.stages}%3d/${r.listed}%-3d tasks=${r.tasks}%5d  ${r.desc.take(90)}")
     }
     spark.stop()
   }

@@ -6,10 +6,16 @@ import org.apache.spark.sql.execution.ExplainMode
 
 import graft.SparkEntry
 
-/** Dumps `explain("formatted")` for the headline queries into a markdown
-  * file (PLANS.md) — the committed evidence trail for the per-operator
-  * plan audits (pushdown reached the scan, dims broadcast, exchanges
-  * reused, no stray cartesian/window). Not part of the driver contract.
+/** Dumps query plans. By default `explain("formatted")` for the headline
+  * queries into a markdown file (PLANS.md) — the committed evidence
+  * trail for the per-operator plan audits (pushdown reached the scan,
+  * dims broadcast, exchanges reused, no stray cartesian/window). With
+  * `out` = `-` it prints the named queries' plans to stdout instead, for
+  * ad-hoc inspection of any query, in one JVM for the whole list. Not
+  * part of the driver contract. Usage:
+  *   runMain graft.tools.PlanDump [sfDir] [out | -] [q1,q2,...] [mode]
+  * where `mode` is an explain mode (formatted, extended, simple,
+  * codegen, cost; default formatted).
   */
 object PlanDump {
   private val Picks = Seq(
@@ -57,27 +63,27 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    // optional 3rd arg: comma-separated name filter — dump only these
-    // sections (for splicing a new row's plan into the audited PLANS.md
-    // without a full re-dump)
-    val only = args.lift(2).map(_.split(",").toSet)
-    // a typo'd or not-yet-listed name must fail loudly, not splice an
-    // incomplete dump into the audited PLANS.md
-    only.foreach { f =>
-      val unknown = f -- Picks.toSet
+    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val mode = ExplainMode.fromString(args.lift(3).getOrElse("formatted"))
+    val toStdout = out == "-"
+    // a file dump is spliced into the audited PLANS.md (the name filter
+    // re-dumps only these sections), so a typo'd or not-yet-listed name
+    // must fail loudly, not splice an incomplete dump
+    if (!toStdout) only.foreach { f =>
+      val unknown = f.toSet -- Picks.toSet
       require(unknown.isEmpty,
         s"filter names not in Picks (add them first): ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val picked = only.fold(Picks)(f => Picks.filter(f))
+    val picked = only.fold(Picks)(f => if (toStdout) f else Picks.filter(f.toSet))
     val spark = graft.Sessions.local(8)
-    val sections = picked.map { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    def section(name: String): String = {
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.explainString(mode)
       s"## $name\n\n```\n${plan.trim}\n```\n"
     }
-    val body = sections.mkString("\n")
-    Files.writeString(Paths.get(out),
-      s"<!-- generated by graft.tools.PlanDump at $dir; commentary added by hand -->\n\n" + body)
+    if (toStdout) picked.foreach(name => println(section(name)))
+    else Files.writeString(Paths.get(out),
+      s"<!-- generated by graft.tools.PlanDump at $dir; commentary added by hand -->\n\n" +
+        picked.map(section).mkString("\n"))
     spark.stop()
   }
 }

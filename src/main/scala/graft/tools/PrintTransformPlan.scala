@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 /** Explain dumps for the STREAMING rows' per-micro-batch transforms —
-  * PrintPlan on a stream row runs the whole stream and prints only the
+  * PlanDump on a stream row runs the whole stream and prints only the
   * final sink-table read, which hides the part that matters (the
   * per-row expression pipeline each micro-batch executes). This prints
   * the same transform applied to the batch twin of the source (the

@@ -1455,6 +1455,107 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("gapsStream: retained tail AND pending buffer survive a query RESTART") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.Streaming.{GapRow, TEvent}
+    val M = 1000000L
+    val mem = MemoryStream[(Long, Long, Long, String)]
+    val events = mem.toDF().toDF("user_id", "ts_ns", "event_id", "event_type")
+      .withColumn("ts", Streaming.tsFromNanos(col("ts_ns")))
+      // nonzero delay so an event sits in the pending buffer across the stop
+      .withWatermark("ts", "100 milliseconds")
+      .as[TEvent]
+    val out = Streaming.gapsStream(events, 30 * M) // 30 ms threshold
+    val ckpt = Files.createTempDirectory("graft-gaps-rs-ckpt").toString
+    val got = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[GapRow]())
+    def start() = out.writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[GapRow], _: Long) =>
+        df.collect().foreach(got.add)
+      }
+      .outputMode("append").option("checkpointLocation", ckpt).start()
+    import scala.jdk.CollectionConverters._
+    // query A: a@10/a@50 buffer (wm 0), then a@200 lifts the watermark
+    // to 100 — 10 and 50 finalize (gap 10→50 emits), tail=50, 200 stays
+    // PENDING; STOP with state (tail=50, buffer=[200]), wm=100
+    val q1 = start()
+    mem.addData((1L, 10 * M, 1L, "a"), (1L, 50 * M, 2L, "a"))
+    q1.processAllAvailable()
+    mem.addData((1L, 200 * M, 3L, "a"))
+    q1.processAllAvailable()
+    q1.stop()
+    assert(got.asScala.toSeq == Seq(GapRow("a", 10 * M, 50 * M, 40L)),
+      s"pre-restart: exactly the 10→50 gap, got ${got.asScala.toSeq}")
+    // query B resumes: a@250 lifts wm to 150 (nothing ripens), a@400
+    // lifts it to 300 — 200 and 250 finalize together; the 50→200 gap
+    // exists only if BOTH the tail and the pending buffer round-tripped
+    // through the state store
+    got.clear()
+    val q2 = start()
+    try {
+      mem.addData((1L, 250 * M, 4L, "a"))
+      q2.processAllAvailable()
+      mem.addData((1L, 400 * M, 5L, "a"))
+      q2.processAllAvailable()
+      val rows = got.asScala.toSeq.sortBy(_.gap_start_ns)
+      assert(rows == Seq(GapRow("a", 50 * M, 200 * M, 150L),
+        GapRow("a", 200 * M, 250 * M, 50L)),
+        s"restored pending event must close a gap on the restored tail, once: $rows")
+    } finally q2.stop()
+  }
+
+  test("levelShiftStream: day counts, carry AND the pending buffer survive a query RESTART") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.Streaming.{ShiftRow, TEvent}
+    val D = 86400000000000L // 1 day in ns
+    val M = 1000000L
+    val mem = MemoryStream[(Long, Long, Long, String)]
+    val events = mem.toDF().toDF("user_id", "ts_ns", "event_id", "event_type")
+      .withColumn("ts", Streaming.tsFromNanos(col("ts_ns")))
+      .withWatermark("ts", "1 second")
+      .as[TEvent]
+    val out = Streaming.levelShiftStream(events)
+    val ckpt = Files.createTempDirectory("graft-shift-rs-ckpt").toString
+    val got = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[ShiftRow]())
+    def start() = out.writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[ShiftRow], _: Long) =>
+        df.collect().foreach(got.add)
+      }
+      .outputMode("append").option("checkpointLocation", ckpt).start()
+    import scala.jdk.CollectionConverters._
+    // key "a" counts by day: 10 → 2, 12 → 1, 26 → 3, so LOCF reads
+    // c(10..11) = 2, c(12..25) = 1, c(26..) = 3.
+    // query A: day-26 events lift the watermark to 26 d − 1 s, so
+    // days ≤ 24 are final and day 17 scores (before = c(10..16) = 9,
+    // after = c(18..24) = 7); day 10 is then evicted into the LOCF
+    // carry, and the three day-26 events stay PENDING across the stop
+    val q1 = start()
+    mem.addData((1L, 10 * D, 1L, "a"), (1L, 10 * D + M, 2L, "a"),
+      (1L, 12 * D, 3L, "a"))
+    q1.processAllAvailable()
+    mem.addData((1L, 26 * D, 4L, "a"), (1L, 26 * D + M, 5L, "a"),
+      (1L, 26 * D + 2 * M, 6L, "a"))
+    q1.processAllAvailable()
+    q1.stop()
+    assert(got.asScala.toSeq == Seq(ShiftRow("a", 17, 9, 7, -2)),
+      s"pre-restart: exactly day 17, got ${got.asScala.toSeq}")
+    // query B resumes: a sentinel on key "b" makes days ≤ 29 final, so
+    // days 18..22 score — their values need the restored carry (c(11)),
+    // the day-12 count, the scoring cursor AND the pending day-26 events
+    got.clear()
+    val q2 = start()
+    try {
+      mem.addData((9L, 30 * D + 2000 * M, 91L, "b"))
+      q2.processAllAvailable()
+      val rows = got.asScala.toSeq.sortBy(r => (r.event_type, r.day))
+      assert(rows == Seq(ShiftRow("a", 18, 8, 7, -1), ShiftRow("a", 19, 7, 9, 2),
+        ShiftRow("a", 20, 7, 11, 4), ShiftRow("a", 21, 7, 13, 6),
+        ShiftRow("a", 22, 7, 15, 8)),
+        s"restored state must continue scoring where it stopped: $rows")
+    } finally q2.stop()
+  }
+
   test("funnelStream: partial registers AND the failed-verdict tombstone survive a query RESTART") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.Streaming.{FunnelDone, TEvent}
