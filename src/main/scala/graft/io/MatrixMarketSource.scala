@@ -1,15 +1,9 @@
 package graft.io
 
-import java.io.{BufferedReader, InputStream, InputStreamReader}
-import java.net.URI
-import java.nio.charset.StandardCharsets
 import java.util.{Map => JMap}
-import java.util.zip.GZIPInputStream
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -65,29 +59,12 @@ object MatrixMarketSource {
     all.toSeq
   }
 
-  /** Open a (possibly .gz) file through the Hadoop FS layer, so every
-    * scheme Spark can reach works here too.
-    */
-  private def open(path: String): BufferedReader = {
-    val fs = FileSystem.get(URI.create(path), new Configuration())
-    val raw: InputStream = fs.open(new HPath(path))
-    val in = if (path.endsWith(".gz")) new GZIPInputStream(raw) else raw
-    new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-  }
-
   /** Declared (rows, cols, nnz) from the first non-comment line — a
     * driver-side header peek, one stream open, no job.
     */
   def readHeader(path: String): (Long, Long, Long) = {
-    val r = open(path)
-    try {
-      var line = r.readLine()
-      while (line != null && (line.startsWith("%") || line.trim.isEmpty))
-        line = r.readLine()
-      require(line != null, s"no MatrixMarket header in $path")
-      val p = line.trim.split("\\s+")
-      (p(0).toLong, p(1).toLong, p(2).toLong)
-    } finally r.close()
+    val p = Readers.header(path, "%").trim.split("\\s+")
+    (p(0).toLong, p(1).toLong, p(2).toLong)
   }
 
   private final class MMTable(paths: Seq[String]) extends Table with SupportsRead {
@@ -300,7 +277,7 @@ object MatrixMarketSource {
     private val fieldIdx: Array[Int] =
       required.fields.map(f => Schema.fieldIndex(f.name))
     private val predArr: Array[MMPred] = preds.toArray
-    private val reader = open(path)
+    private val reader = Readers.open(path)
     private var headerSkipped = false
     private var emitted = 0L
     private var current: InternalRow = _
@@ -310,9 +287,7 @@ object MatrixMarketSource {
       // loop, not recursion: a pushed filter may skip millions of
       // consecutive entries and must not grow the stack doing it
       while (true) {
-        var line = reader.readLine()
-        while (line != null && (line.startsWith("%") || line.trim.isEmpty))
-          line = reader.readLine()
+        val line = Readers.nextLine(reader, "%")
         if (line == null) { current = null; return false }
         if (!headerSkipped) {
           headerSkipped = true // the size line is metadata, not data

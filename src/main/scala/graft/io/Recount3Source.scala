@@ -1,11 +1,8 @@
 package graft.io
 
-import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.net.URI
-import java.nio.charset.StandardCharsets
 import java.nio.file.Paths
 import java.util.{Map => JMap}
-import java.util.zip.GZIPInputStream
 
 import scala.jdk.CollectionConverters._
 
@@ -299,22 +296,15 @@ object Recount3Source {
       new PartitionReader[InternalRow] {
         private var done = false
         private lazy val count: Long = {
-          val raw: InputStream = java.nio.file.Files.newInputStream(Paths.get(part.path))
-          val in = if (part.path.endsWith(".gz")) new GZIPInputStream(raw) else raw
-          val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+          val reader = Readers.open(part.path)
           try {
-            var line = reader.readLine()
-            while (line != null && line.startsWith("#")) line = reader.readLine()
+            val line = Readers.nextLine(reader, "#")
             val keptSamples = if (line == null) 0L else {
               val header = line.split('\t')
               (1 until header.length).count(i => sampleKeep.forall(_.contains(header(i)))).toLong
             }
             var lines = 0L
-            line = reader.readLine()
-            while (line != null) {
-              if (!line.startsWith("#") && line.nonEmpty) lines += 1
-              line = reader.readLine()
-            }
+            while (Readers.nextLine(reader, "#") != null) lines += 1
             lines * keptSamples
           } finally reader.close()
         }
@@ -449,17 +439,12 @@ object Recount3Source {
 
     private var emitted: Long = 0L
 
-    private val reader: BufferedReader = {
-      val raw: InputStream = java.nio.file.Files.newInputStream(Paths.get(path))
-      val in = if (path.endsWith(".gz")) new GZIPInputStream(raw) else raw
-      new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-    }
+    private val reader = Readers.open(path)
     private val pidUtf = UTF8String.fromString(pid)
 
     // header: sample columns to parse (post sample-pushdown)
     private val (sampleIdx: Array[Int], sampleUtf: Array[UTF8String]) = {
-      var line = reader.readLine()
-      while (line != null && line.startsWith("#")) line = reader.readLine()
+      val line = Readers.nextLine(reader, "#")
       if (line == null) (Array.empty[Int], Array.empty[UTF8String])
       else {
         val header = line.split('\t')
@@ -489,9 +474,7 @@ object Recount3Source {
         true
       } else if (sampleIdx.isEmpty) false
       else {
-        var line = reader.readLine()
-        while (line != null && (line.startsWith("#") || line.isEmpty))
-          line = reader.readLine()
+        val line = Readers.nextLine(reader, "#")
         if (line == null) { parts = null; false }
         else {
           parts = line.split('\t')

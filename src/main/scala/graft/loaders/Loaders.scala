@@ -69,23 +69,20 @@ final class Metadata(
 
 object Metadata {
   /** True iff the file opens and its first (decompressed, for .gz)
-    * byte is readable — or it is a readable empty file.
+    * characters are readable — or it is a readable empty file.
     */
   private[loaders] def probeReadable(path: String): Boolean =
     try {
-      val in = new java.io.FileInputStream(path)
-      try {
-        val s: java.io.InputStream =
-          if (path.endsWith(".gz")) new java.util.zip.GZIPInputStream(in) else in
-        s.read(); true
-      } finally in.close()
+      val r = Readers.open(path)
+      try { r.read(); true } finally r.close()
     } catch { case _: java.io.IOException => false }
 }
 
 /** Per-project loading facade (accessor.py:37-118 `Project` + the five
-  * Loader classes). Construction collects the small project/sample id
-  * lists (legitimate driver-side lists, accessor.py:56-57); everything
-  * downstream is one lazy Spark plan per load.
+  * Loader classes). Construction runs the one Spark job of the facade's
+  * set-up: a single collect of the (project, sample) pairs (legitimate
+  * driver-side lists, accessor.py:56-57); everything downstream is one
+  * lazy Spark plan per load.
   */
 final class Project(
     spark: SparkSession,
@@ -98,12 +95,17 @@ final class Project(
     mirrorRoot: Path,
     parallelism: Int = 8) {
 
-  val projectIds: List[String] =
-    metadata.select("project").distinct()
-      .collect().map(_.getString(0)).toList.sorted
-  val sampleIds: List[String] =
-    metadata.select("external_id").distinct()
-      .collect().map(_.getString(0)).toList.sorted
+  /** (project -> samples) in ONE collect, from which the project and
+    * sample lists derive too — a per-project filter+collect loop would
+    * launch thousands of tiny jobs at corpus scale.
+    */
+  private val samplesByProject: Map[String, List[String]] =
+    metadata.select("project", "external_id").distinct()
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (p, rows) => p -> rows.map(_.getString(1)).toList.sorted }
+  val projectIds: List[String] = samplesByProject.keys.toList.sorted
+  val sampleIds: List[String] = samplesByProject.values.flatten.toList.distinct.sorted
 
   private val eps = new EndpointConnector(organism, rootUrl)
   private val downloader = new Downloader(mirrorRoot, parallelism)
@@ -155,15 +157,6 @@ final class Project(
     Ops.replaceOrganism(Ops.unionWithMissing(perProject)).distinct()
   }
 
-  /** (project -> samples) in ONE collect — a per-project filter+collect
-    * loop would launch thousands of tiny jobs at corpus scale.
-    */
-  private lazy val samplesByProject: Map[String, List[String]] =
-    metadata.select("project", "external_id").distinct()
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (p, rows) => p -> rows.map(_.getString(1)).toList.sorted }
-
   private def perProjectSamples(pid: String): List[String] =
     samplesByProject.getOrElse(pid, Nil)
 
@@ -214,6 +207,31 @@ final class Project(
     (annDf.get, Ops.alignConcat(counts, Seq(key)), key)
   }
 
+  /** One project's junction triple, read once and shared by both
+    * junction loads: the ID list in ID-file order and the MM header's row
+    * count (driver-side reads), the long entries and the RR metadata
+    * (lazy plans).
+    */
+  private final class Junctions(val ids: List[String], val nRows: Long,
+      val long: DataFrame, val meta: DataFrame)
+
+  private lazy val junctions: List[Junctions] = projectIds.map { pid =>
+    val pUrls = urls(Dtype.Jxn).filter(_.contains(pid))
+    def file(kind: String): String = local(pUrls.find(_.contains(kind))
+      .getOrElse(throw new RuntimeException(s"No $kind file found for $pid")))
+    val ids = Readers.idListRead(file("ID"))
+    val (mmLong, nRows, nCols, _) = Readers.matrixMarketRead(spark, file("MM"))
+    if (ids.length != nCols)
+      throw new IllegalArgumentException("Mismatch between MM columns and IDs")
+    val idLookup = ids.zipWithIndex.map { case (id, i) => ((i + 1).toLong, id) }
+    val idDf = spark.createDataFrame(idLookup).toDF("col", "rail_id")
+    val long = mmLong.join(broadcast(idDf), "col")
+      .select(lit(pid).as("project_id"), col("row"), col("rail_id"), col("value"))
+    val meta = Readers.tsvAllString(spark, Seq(file("RR")))
+      .withColumn("project_id", lit(pid))
+    new Junctions(ids, nRows, long, meta)
+  }
+
   /** Junction load, long format — the scale path: (project_id, junction
     * row, rail_id, value) union across projects dissolves the reference's
     * positional horizontal concat (and its multi-project known failure,
@@ -221,46 +239,25 @@ final class Project(
     * project_id provenance column, vertically unioned.
     */
   def loadJxnLong(): (DataFrame, DataFrame) = {
-    val all = projectIds.map { pid =>
-      val pUrls = urls(Dtype.Jxn).filter(_.contains(pid))
-      val ids = pUrls.find(_.contains("ID")).map(u => Readers.idListRead(spark, local(u)))
-        .getOrElse(throw new RuntimeException(s"No ID file found for $pid"))
-      val mmUrl = pUrls.find(_.contains("MM"))
-        .getOrElse(throw new RuntimeException(s"No MM file found for $pid"))
-      val (mmLong, _, nCols, _) = Readers.matrixMarketRead(spark, local(mmUrl))
-      if (ids.length != nCols)
-        throw new IllegalArgumentException("Mismatch between MM columns and IDs")
-      val idLookup = ids.zipWithIndex.map { case (id, i) => ((i + 1).toLong, id) }
-      val idDf = spark.createDataFrame(idLookup).toDF("col", "rail_id")
-      val longDf = mmLong.join(broadcast(idDf), "col")
-        .select(lit(pid).as("project_id"), col("row"), col("rail_id"), col("value"))
-      val rrUrl = pUrls.find(_.contains("RR"))
-        .getOrElse(throw new RuntimeException(s"No RR file found for $pid"))
-      val meta = Readers.tsvAllString(spark, Seq(local(rrUrl)))
-        .withColumn("project_id", lit(pid))
-      (longDf, meta)
-    }
-    if (all.isEmpty) throw new RuntimeException("No junction data loaded.")
-    (Ops.unionAll(all.map(_._1)), Ops.unionAll(all.map(_._2)))
+    if (junctions.isEmpty) throw new RuntimeException("No junction data loaded.")
+    (Ops.unionAll(junctions.map(_.long)), Ops.unionAll(junctions.map(_.meta)))
   }
 
   /** Junction load, wide presentation parity (accessor.py:392-453
-    * `JunctionLoader`): dense junctions × rail_id matrix per project
-    * (zeros filled), horizontally concatenated across projects.
+    * `JunctionLoader`): each project densified at its MM header's shape,
+    * as the reference's scipy densify does (accessor.py:431-438) — rows
+    * 1..n, zeros filled, one column per rail_id of that project's ID file
+    * in ID-file order, so a sample with no junction entries is a column
+    * of zeros. Project blocks are joined on the MM row key, in row order.
     */
   def loadJxn(): (DataFrame, DataFrame) = {
-    val (long, meta) = loadJxnLong()
-    val wides = projectIds.map { pid =>
-      val p = long.filter(col("project_id") === pid)
-      val ids = p.select("rail_id").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      val nRows = meta.filter(col("project_id") === pid).count()
-      val full = spark.range(1, nRows + 1).toDF("row")
-      val wide = Ops.pivotWide(p, "row", "rail_id", "value", ids)
-      full.join(wide, Seq("row"), "left").na.fill(0, ids)
-        .orderBy("row").drop("row")
+    val (_, meta) = loadJxnLong()
+    val blocks = junctions.map { j =>
+      spark.range(1, j.nRows + 1).toDF("row")
+        .join(Ops.pivotWide(j.long, "row", "rail_id", "value", j.ids), Seq("row"), "left")
+        .na.fill(0, j.ids)
     }
-    (Ops.horizontalConcat(wides), meta)
+    (blocks.reduce(_.join(_, Seq("row"), "full_outer")).orderBy("row").drop("row"), meta)
   }
 
   /** BigWig catalog (accessor.py:574-610 `BigWigLoader`): in-memory

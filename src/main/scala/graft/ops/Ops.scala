@@ -56,25 +56,6 @@ object Ops {
     dfs.reduce(_.join(_, key, "inner"))
   }
 
-  /** Positional horizontal concat (pl.concat how="horizontal",
-    * accessor.py:451): no Spark-native equivalent — zipWithIndex each
-    * side and join on the synthetic index (SURVEY §2.3 J3). Shuffle-heavy
-    * and order-dependent by construction; long-format unions (see
-    * JunctionLoader.loadLong) dissolve the need for it at scale.
-    */
-  def horizontalConcat(dfs: Seq[DataFrame]): DataFrame = {
-    require(dfs.nonEmpty, "horizontalConcat of zero frames")
-    def indexed(df: DataFrame): DataFrame = {
-      val spark = df.sparkSession
-      val rows = df.rdd.zipWithIndex.map { case (r, i) => org.apache.spark.sql.Row.fromSeq(i +: r.toSeq) }
-      val schema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("__idx", org.apache.spark.sql.types.LongType) +:
-          df.schema.fields.toSeq)
-      spark.createDataFrame(rows, schema)
-    }
-    dfs.map(indexed).reduce(_.join(_, "__idx")).drop("__idx")
-  }
-
   /** Value replacement with pass-through of unmatched values
     * (pl.replace, utils.py:6-9) as a when-chain.
     */

@@ -96,8 +96,7 @@ object FixtureMirror {
       Seq(Seq("chr1|100|150|+", "9"), Seq("chr2|500|700|-", "8")))
 
     // ---- junctions: ID (csv), MM (MatrixMarket), RR (10-col tsv) ----
-    def jxnPath(pid: String, ext: String) =
-      human.resolve(s"$DSource/junctions/${pid.takeRight(2)}/$pid/$Dbase.junctions.$pid.UNIQUE.$ext")
+    def jxnPath(pid: String, ext: String) = junctionPath(root, pid, ext)
     writeGz(jxnPath("SRP001", "ID.gz"), "rail_id\n101\n102\n")
     writeGz(jxnPath("SRP001", "MM.gz"),
       "%%MatrixMarket matrix coordinate integer general\n%\n4 2 3\n1 1 5\n2 2 7\n4 1 2\n")
@@ -121,5 +120,21 @@ object FixtureMirror {
     }
 
     root.toUri.toString.stripSuffix("/")
+  }
+
+  private def junctionPath(root: Path, pid: String, ext: String): Path =
+    root.resolve(s"$Organism/$DSource/junctions/${pid.takeRight(2)}/$pid/" +
+      s"$Dbase.junctions.$pid.UNIQUE.$ext")
+
+  /** [[build]], except that SRP001's junction ID file lists three
+    * rail_ids out of sorted order (102, 099, 101) and the MM matrix has no
+    * entries in 099's column: the all-zero sample a wide load must keep.
+    */
+  def buildWithEmptySample(root: Path): String = {
+    val url = build(root)
+    writeGz(junctionPath(root, "SRP001", "ID.gz"), "rail_id\n102\n099\n101\n")
+    writeGz(junctionPath(root, "SRP001", "MM.gz"),
+      "%%MatrixMarket matrix coordinate integer general\n4 3 3\n1 1 5\n2 3 7\n4 1 2\n")
+    url
   }
 }

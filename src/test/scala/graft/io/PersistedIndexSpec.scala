@@ -38,8 +38,7 @@ class PersistedIndexSpec extends SparkSpec {
     val got = back.select("vec_id", "e").as[(Long, Array[Double])]
       .collect().sortBy(_._1).map { case (id, a) => (id, a.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
     assert(got.toSeq == want.toSeq, "doubles must round-trip parquet bit-exactly")
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    Writers.deleteDir(spark, tmp)
   }
 
   test("direct-path read of probed bucket= dirs ≡ isin-filtered full read, and lists ONLY them (the r14 s28 serve)") {
@@ -68,8 +67,7 @@ class PersistedIndexSpec extends SparkSpec {
       assert(roots == Set("bucket=2", "bucket=5"),
         s"file index must be rooted at ONLY the probed dirs, got $roots")
     } finally {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      Writers.deleteDir(spark, tmp)
     }
   }
 
@@ -86,8 +84,7 @@ class PersistedIndexSpec extends SparkSpec {
       val pruned = spark.read.parquet(tmp).where(col("label").isin(probed: _*))
       assert(pruned.count() == 0L, "empty IN list must evaluate false for every row")
     } finally {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      Writers.deleteDir(spark, tmp)
     }
   }
 
@@ -136,10 +133,7 @@ class PersistedIndexSpec extends SparkSpec {
       assert(gotC == want, "compaction must preserve rows exactly")
       assert(dataFiles(tmpC).size == 1, "compaction must hit the file target")
     } finally {
-      Seq(tmp, tmpC).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, true)
-      }
+      Seq(tmp, tmpC).foreach(Writers.deleteDir(spark, _))
     }
   }
 
@@ -171,8 +165,7 @@ class PersistedIndexSpec extends SparkSpec {
           "to the compiled-in literals — the s28 from-disk ≡ in-memory hinge")
       assert(fromLiterals.values.toSet.size > 1, "fixture must span buckets")
     } finally {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      Writers.deleteDir(spark, tmp)
     }
   }
 
@@ -220,10 +213,7 @@ class PersistedIndexSpec extends SparkSpec {
         s"DPP must prune the listing to the 2 probed partitions, read $filesRead files")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Seq(tmp, tmpProbe).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      }
+      Seq(tmp, tmpProbe).foreach(Writers.deleteDir(spark, _))
     }
   }
 }

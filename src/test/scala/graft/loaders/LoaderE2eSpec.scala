@@ -1,10 +1,11 @@
 package graft.loaders
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
 import graft.{FixtureMirror, SparkSpec}
+import graft.io.Writers
 import graft.model.{Annotation, Dtype}
 
 /** End-to-end loader tests against the file:// fixture mirror — the
@@ -132,6 +133,22 @@ class LoaderE2eSpec extends SparkSpec {
     assert(wide.columns.toSeq == Seq("101", "102", "103"))
     val t = wide.agg(sum("101"), sum("103")).collect()(0)
     assert(t.getLong(0) > 0 && t.getLong(1) > 0)
+  }
+
+  test("jxn wide: columns are the ID files in file order, an all-zero sample kept") {
+    Writers.withScratchDir(spark, "graft-mirror-empty-sample") { dir =>
+      val p = new Project(spark, corpus, FixtureMirror.Dbase, FixtureMirror.Organism,
+        annotation = Some(Annotation.GencodeV26), jxnFormat = Some("unique"),
+        rootUrl = FixtureMirror.buildWithEmptySample(Paths.get(dir, "src")),
+        mirrorRoot = Paths.get(dir, "cache"))
+      p.cache(Seq(Dtype.Jxn))
+      val (wide, _) = p.loadJxn()
+      // SRP001's ID file (102, 099, 101) then SRP002's (103)
+      assert(wide.columns.toSeq == Seq("102", "099", "101", "103"))
+      // MM rows 1..4 in order; 099 has no entries, so it is all zeros
+      assert(wide.collect().toSeq.map(_.toSeq) == Seq(
+        Seq(5L, 0L, 0L, 9L), Seq(0L, 0L, 7L, 0L), Seq(0L, 0L, 0L, 0L), Seq(2L, 0L, 0L, 0L)))
+    }
   }
 
   test("bw catalog: project x sample rows, content never read") {

@@ -38,13 +38,6 @@ class OpsSpec extends SparkSpec {
     assert(j.count() == 1)
   }
 
-  test("horizontalConcat: positional, no key") {
-    val a = Seq(1, 2, 3).toDF("x")
-    val b = Seq("a", "b", "c").toDF("y")
-    val h = Ops.horizontalConcat(Seq(a, b)).orderBy("x").collect()
-    assert(h.toSeq == Seq(Row(1, "a"), Row(2, "b"), Row(3, "c")))
-  }
-
   test("replaceValues: mapped values replaced, others pass through") {
     val df = Seq("Homo sapiens", "Mus musculus", "Danio rerio").toDF("organism")
     val out = Ops.replaceOrganism(df).orderBy("organism").as[String].collect()
