@@ -167,7 +167,7 @@ object BloomBits {
     true
   }
 
-  private[expressions] def longLit(e: Expression, name: String): Long = e.eval() match {
+  private[graft] def longLit(e: Expression, name: String): Long = e.eval() match {
     case i: Int  => i.toLong
     case l: Long => l
     case other   => throw new IllegalArgumentException(s"$name must be an integer literal, got $other")

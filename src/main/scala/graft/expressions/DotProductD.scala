@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -56,68 +55,4 @@ case class DotProductD(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session registration for graft's native expressions. */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductD(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2norm", exprs => L2NormalizeD(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => TopKAgg(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5p60", exprs => Md5Prefix60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_slots", exprs => MinhashSlotsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv",
-      exprs => KmvDistinct(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv_set",
-      exprs => KmvSetAgg(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll",
-      exprs => HllDistinct(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fingerprint", exprs => FingerprintExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom",
-      exprs => BloomAgg(exprs(0), exprs(1), exprs(2), exprs(3)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_cuts", exprs => CdcCutsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_bigrams", exprs => CharBigramsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_trigrams", exprs => CharTrigramsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_windows",
-      // k must be an integer literal: it folds to a constant here
-      exprs => TokenWindowsExpr(exprs(0), BloomBits.longLit(exprs(1), "k").toInt),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      // m and k must be integer literals: they fold to constants here
-      exprs => BloomContains(exprs(0), exprs(1), exprs(2),
-        BloomBits.longLit(exprs(3), "m"), BloomBits.longLit(exprs(4), "k").toInt),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_h60s",
-      // p must be a positive integer literal: it folds to a constant here
-      exprs => GramH60ModExpr(exprs(0), BloomBits.longLit(exprs(1), "p")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_bloom",
-      // m and k must be integer literals: they fold to constants here
-      exprs => GramBloomHitsExpr(exprs(0), exprs(1),
-        BloomBits.longLit(exprs(2), "m"), BloomBits.longLit(exprs(3), "k").toInt),
-      "built-in")
-  }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * sort-per-insert Seq buffer and Encoder round-trips.
   *
   * SQL: `graft_topk(value, id, k)` → array<struct<value:double,
-  * id:bigint>> sorted best-first (registered by GraftFunctions).
+  * id:bigint>> sorted best-first (installed by graft.GraftExtensions).
   */
 case class TopKAgg(
     valueExpr: Expression,

@@ -18,7 +18,7 @@ object TextFns {
     * graft_cdc_cuts boundaries (1-based code-point offsets), empties
     * dropped. ONE definition shared by the batch rows (p19/p20) and the
     * streaming twin (Streaming.dedupCdcChunksStream) so the two cannot
-    * drift. Caller must have registered GraftFunctions on the session.
+    * drift. graft.GraftExtensions installs graft_cdc_cuts in every session.
     */
   def cdcChunks(text: Column): Column = {
     val cuts = call_function("graft_cdc_cuts", text)

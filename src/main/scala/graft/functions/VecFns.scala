@@ -16,8 +16,8 @@ object VecFns {
 
   /** Sequential dot product of two equal-length double arrays, via the
     * codegen'd native expression (graft.expressions.DotProductD,
-    * registered by Tables on first use). Same left-to-right fold as
-    * [[dotFold]] — bitwise identical results.
+    * installed in every session by graft.GraftExtensions). Same
+    * left-to-right fold as [[dotFold]] — bitwise identical results.
     */
   def dotSeq(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)

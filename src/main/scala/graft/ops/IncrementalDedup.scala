@@ -68,7 +68,6 @@ object IncrementalDedup {
   def processWithBloom(batch: DataFrame, idCol: String, textCol: String,
       indexPath: String, m: Long = 1L << 24, k: Int = 5): DataFrame = {
     val ss = batch.sparkSession
-    graft.expressions.GraftFunctions.register(ss)
     val keeper = collapse(batch, idCol, textCol)
     val fresh = readIndex(ss, indexPath) match {
       case Some(known) =>

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSeq, BindReferences, Expression, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * Catalyst extension stack (SURVEY §2 custom-operator ladder, rung (c)):
   * a logical node ([[TopKPerGroup]]), a planner strategy
   * ([[TopKStrategy]]) that lowers it to a partial/final pair of physical
-  * operators ([[TopKExec]]), and a [[SparkSessionExtensions]] hook
-  * ([[GraftExtensions]]).
+  * operators ([[TopKExec]]), installed in every session by the classpath
+  * extensions provider [[graft.GraftExtensions]].
   *
   * Execution shape (the reason a plan operator beats a window function):
   * the PARTIAL exec keeps a bounded k-entry heap per group inside each
@@ -398,17 +398,6 @@ case class TopKExec(
     copy(child = newChild)
 }
 
-/** `spark.sql.extensions`-style injection point (config-based sessions);
-  * [[TopKPlan.topKPerGroup]] also self-registers through
-  * `experimental.extraStrategies` so ad-hoc sessions need no config.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectOptimizerRule(_ => TopKRewriteRule)
-  }
-}
-
 object TopKPlan {
   /** Session conf for the default partial group cap. */
   val CapConf = "spark.graft.topk.maxPartialGroups"
@@ -421,8 +410,8 @@ object TopKPlan {
 
   /** Top-k rows per group as a DataFrame: child columns + an IntegerType
     * rank column (`rankName`), rank = position under (value DESC, tie
-    * ASC) within the group. Registers [[TopKStrategy]] on the session's
-    * experimental strategies (idempotent).
+    * ASC) within the group. Plans through [[TopKStrategy]], which
+    * [[graft.GraftExtensions]] installs in every session when it is built.
     */
   /** `maxPartialGroups` bounds pre-shuffle heap memory at maxGroups × k
     * kept rows per task: rows of groups beyond the cap go to a
@@ -442,11 +431,6 @@ object TopKPlan {
     val cap =
       if (maxPartialGroups == 0) spark.conf.get(CapConf, CapDefault.toString).toInt
       else maxPartialGroups
-    val classicSpark = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classicSpark.experimental.extraStrategies.contains(TopKStrategy)) {
-      classicSpark.experimental.extraStrategies =
-        classicSpark.experimental.extraStrategies :+ TopKStrategy
-    }
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(s"no column '$n' in ${analyzed.output.map(_.name)}"))

@@ -26,6 +26,10 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   *     ranks them — nullable inputs therefore disqualify);
   *   - the filter is a plain `rn <= k` / `rn < k+1` on the rank output.
   * Anything else is left untouched.
+  *
+  * No session installs this rule: [[graft.GraftExtensions]] leaves it
+  * out, because Bench times these windows as windows. Only the rule's
+  * own spec adds it, to a session of its own.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] {
 

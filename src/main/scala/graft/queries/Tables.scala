@@ -5,12 +5,15 @@ import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Uniform access to the driver's synthetic parquet tables
-  * (/root/repo/TESTDATA.md). One parquet file per table under the
-  * scale-factor directory passed to each query.
+  * (TESTDATA.md). One parquet file per table under the scale-factor
+  * directory passed to each query. Reading installs nothing: the
+  * `graft_*` functions the queries call come with every session, once,
+  * from the classpath extensions provider [[graft.GraftExtensions]].
+  * The one session setting made here is `parquet.nanosAsLong` for
+  * events, a SQL conf that an extension cannot set.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     if (name == "events") {
       // The engine's canonical `ts` type is epoch-nanos BIGINT. The parquet
       // encoding of events.ts has varied across testdata generations
@@ -41,7 +44,6 @@ object Tables {
     * silently return no rows.
     */
   def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     // one footer read serves both the stream schema and normalization

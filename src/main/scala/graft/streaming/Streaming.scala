@@ -124,7 +124,6 @@ object Streaming {
   def dedupNearStream(docs: DataFrame, textCol: String = "text",
       watermarkDelay: String = "1 hour"): DataFrame = {
     import graft.functions.TextFns._
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val keyed = docs
       // ONE compiled byte pass per row (expressions.GramH60ModExpr) for
       // the gram→hash front: the transform/array_distinct/zip_with
@@ -181,7 +180,6 @@ object Streaming {
     */
   def dedupCdcChunksStream(docs: DataFrame, textCol: String = "text",
       watermarkDelay: String = "1 hour"): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val chunked = docs
       .withColumn("chunk",
         explode(graft.functions.TextFns.cdcChunks(col(textCol))))
@@ -207,7 +205,6 @@ object Streaming {
     */
   def decontaminateStream(docs: DataFrame, bits: Array[Byte], m: Long, k: Int,
       textCol: String = "text"): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     // ONE compiled byte pass per row (expressions.GramBloomHitsExpr) —
     // the previous filter(grams3(…), graft_bloom_contains(…)) chain was
     // higher-order functions all the way down, i.e. CodegenFallback:

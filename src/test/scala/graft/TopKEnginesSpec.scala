@@ -46,7 +46,6 @@ class TopKEnginesSpec extends SparkSpec {
   }
 
   test("native TypedImperativeAggregate matches the window path") {
-    graft.expressions.GraftFunctions.register(spark)
     val got = canon(df.groupBy("grp")
       .agg(call_function("graft_topk", col("value"), col("id"), lit(K)).as("top"))
       .select(col("grp"), posexplode(col("top")))

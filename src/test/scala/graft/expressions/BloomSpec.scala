@@ -22,7 +22,6 @@ class BloomSpec extends SparkSpec {
   private def h2of(s: String): Long = h60("#" + s)
 
   private def buildBits(items: Seq[String], parts: Int): Array[Byte] = {
-    GraftFunctions.register(spark)
     items.toDF("g").repartition(parts)
       .select(call_function("graft_md5p60", col("g")).as("h1"),
         call_function("graft_md5p60", concat(lit("#"), col("g"))).as("h2"))

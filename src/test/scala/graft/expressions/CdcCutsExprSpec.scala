@@ -30,7 +30,6 @@ class CdcCutsExprSpec extends SparkSpec {
 
   private def exprCuts(texts: Seq[String]): Seq[Seq[Int]] = {
     import spark.implicits._
-    graft.expressions.GraftFunctions.register(spark)
     texts.toDF("t").select(expr("graft_cdc_cuts(t)")).collect()
       .map(_.getSeq[Int](0).toList).toSeq
   }

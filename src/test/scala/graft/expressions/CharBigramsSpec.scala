@@ -21,7 +21,6 @@ class CharBigramsSpec extends SparkSpec {
   }
 
   private def nativeCounts(df: org.apache.spark.sql.DataFrame) = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col("doc_id"),
         explode(call_function("graft_char_bigrams", col("text"))).as("bg"))
       .select(col("doc_id"), col("bg.g").as("g"), col("bg.n").as("n"))

@@ -25,7 +25,6 @@ class CharTrigramsSpec extends SparkSpec {
   }
 
   private def nativeCounts(df: org.apache.spark.sql.DataFrame) = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
     df.select(col("doc_id"),
         explode(call_function("graft_char_trigrams", col("text"))).as("tg"))
       .select(col("doc_id"), col("tg.g").as("g"), col("tg.n").as("n"))

@@ -9,7 +9,6 @@ class DotProductDSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_dot matches the HOF fold bitwise on random vectors") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(42)
     val data = Seq.fill(200)((
       Array.fill(64)(rng.nextDouble() * 2 - 1),
@@ -25,7 +24,6 @@ class DotProductDSpec extends SparkSpec {
   }
 
   test("graft_dot evaluates in interpreted mode too") {
-    GraftFunctions.register(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
     assert(df.select(VecFns.dotSeq(col("a"), col("b"))).collect()(0).getDouble(0) == 32.0)
   }

@@ -17,7 +17,6 @@ class FingerprintExprSpec extends SparkSpec {
     s.foldLeft(0L)((acc, ch) => (acc * 31L + ch.toLong) % TextFns.FpMod)
 
   test("native == HOF fold == independent Scala loop on ASCII strings") {
-    graft.expressions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val texts = Seq("", "a", "hello world", "x" * 500) ++
       (1 to 100).map(_ => rnd.alphanumeric.take(rnd.nextInt(80)).mkString)

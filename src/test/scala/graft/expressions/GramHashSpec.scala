@@ -44,7 +44,6 @@ class GramHashSpec extends SparkSpec {
         g => h60(g) % lit(MinhashP)).as("hms"))
 
   private def nativeH60s(df: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(df.sparkSession)
     df.select(col("doc_id"),
       call_function("graft_gram_h60s", col("text"), lit(MinhashP)).as("hms"))
   }
@@ -65,7 +64,6 @@ class GramHashSpec extends SparkSpec {
   // ---- graft_gram_bloom ----
 
   private def bitsFor(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
-    GraftFunctions.register(df.sparkSession)
     df.select(explode(array_distinct(grams3(tokens(col("text"))))).as("g"))
       .filter(length(col("g")) % 2 === 0) // an arbitrary benchmark subset
       .withColumn("h1", h60(col("g")))

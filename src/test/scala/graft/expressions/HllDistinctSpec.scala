@@ -20,7 +20,6 @@ class HllDistinctSpec extends SparkSpec {
   private val two53 = 9.007199254740992e15
 
   private def sketch(ids: Seq[Long], parts: Int) = {
-    graft.expressions.GraftFunctions.register(spark)
     ids.toDF("id").repartition(parts)
       .agg(expr("graft_hll(graft_md5p60(CAST(id AS STRING)), 8)").as("sk"))
       .select(col("sk.zeros"), col("sk.ssum"))
@@ -50,7 +49,6 @@ class HllDistinctSpec extends SparkSpec {
   }
 
   test("empty registers for all-null input: zeros = m, ssum = m * 2^53") {
-    graft.expressions.GraftFunctions.register(spark)
     val r = Seq(Option.empty[String], Option.empty[String]).toDF("s")
       .agg(expr("graft_hll(graft_md5p60(s), 8)").as("sk"))
       .select(col("sk.zeros"), col("sk.ssum")).head()

@@ -15,7 +15,6 @@ class KmvDistinctSpec extends SparkSpec {
   import spark.implicits._
 
   private def sketch(ids: Seq[Long], k: Int, parts: Int) = {
-    graft.expressions.GraftFunctions.register(spark)
     ids.toDF("id").repartition(parts)
       .agg(expr(s"graft_kmv(graft_md5p60(CAST(id AS STRING)), $k)").as("sk"))
       .select(col("sk.held"), col("sk.kth"))
@@ -49,7 +48,6 @@ class KmvDistinctSpec extends SparkSpec {
   }
 
   private def sketchSet(ids: Seq[Long], k: Int, parts: Int): Seq[Long] = {
-    graft.expressions.GraftFunctions.register(spark)
     ids.toDF("id").repartition(parts)
       .agg(expr(s"graft_kmv_set(graft_md5p60(CAST(id AS STRING)), $k)").as("hs"))
       .head().getSeq[Long](0)
@@ -68,7 +66,6 @@ class KmvDistinctSpec extends SparkSpec {
   }
 
   test("kmv_set: k <= 0 fails with a clear argument error, not a buffer exception") {
-    graft.expressions.GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(1L).toDF("id")
         .agg(expr("graft_kmv_set(graft_md5p60(CAST(id AS STRING)), 0)"))
@@ -92,7 +89,6 @@ class KmvDistinctSpec extends SparkSpec {
   }
 
   test("kth is null and held 0 when all inputs are null") {
-    graft.expressions.GraftFunctions.register(spark)
     val r = Seq(Option.empty[String], Option.empty[String]).toDF("s")
       .agg(expr("graft_kmv(graft_md5p60(s), 8)").as("sk"))
       .select(col("sk.held"), col("sk.kth")).head()

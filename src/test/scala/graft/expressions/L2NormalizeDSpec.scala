@@ -9,7 +9,6 @@ class L2NormalizeDSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_l2norm matches the HOF fold bitwise on random vectors") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(47)
     val data = Seq.fill(200)(Array.fill(64)(rng.nextDouble() * 2 - 1))
     val rows = data.toDF("v")
@@ -27,7 +26,6 @@ class L2NormalizeDSpec extends SparkSpec {
   }
 
   test("graft_l2norm evaluates in interpreted mode too, and yields unit norm") {
-    GraftFunctions.register(spark)
     val got = Seq(Tuple1(Array(3.0, 4.0))).toDF("v")
       .select(VecFns.l2normalize(col("v"))).collect()(0).getSeq[Double](0)
     assert(got == Seq(0.6, 0.8))

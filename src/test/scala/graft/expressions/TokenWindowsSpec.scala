@@ -22,7 +22,6 @@ class TokenWindowsSpec extends SparkSpec {
     call_function("graft_token_windows", t, lit(k))
 
   test("graft_token_windows == zip_with chain on random corpora (K=12, 3, 1)") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(53)
     val vocab = Vector("a", "bb", "ccc", "dddd", "e", "ff", "g", "hh")
     // lengths straddling every boundary: 0, 1, K−1, K, K+1, long
@@ -37,7 +36,6 @@ class TokenWindowsSpec extends SparkSpec {
   }
 
   test("graft_token_windows on the documents fixture matches, incl. empty and multibyte") {
-    GraftFunctions.register(spark)
     val df = Seq("", "one two", "α β γ δ ε ζ η θ ι κ λ μ ν ξ", "solo")
       .toDF("text").select(split(col("text"), " ").as("t"))
     val rows = df.select(native(col("t"), 12).as("n"), zipChain(col("t"), 12).as("z"))

@@ -27,7 +27,6 @@ class MinhashSlotsSpec extends SparkSpec {
   }
 
   test("expression slots == independent Scala slots (incl. short docs)") {
-    graft.expressions.GraftFunctions.register(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "one two three",
@@ -48,7 +47,6 @@ class MinhashSlotsSpec extends SparkSpec {
   }
 
   test("native fused expression == built-in composition on random hash arrays") {
-    graft.expressions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     val rows = (1 to 200).map { i =>
       i -> (0 until rnd.nextInt(30)).map(_ => rnd.nextLong().abs % MinhashP)

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -27,35 +25,36 @@ class BucketedTableSpec extends SparkSpec {
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val l = Tables(spark, dir, "lineitem")
       .select("l_orderkey", "l_quantity")
-    val tmp = Files.createTempDirectory("graft-bucket").toString
-    Writers.bucketedTable(o, "bw_orders", s"$tmp/o", "o_orderkey", 8)
-    Writers.bucketedTable(l, "bw_lineitem", s"$tmp/l", "l_orderkey", 8)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = spark.table("bw_orders").join(spark.table("bw_lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        s"expected a non-broadcast join over the bucketed scans:\n$plan")
-      // the one-file-per-bucket write: 8 data files per table, no
-      // task-count x bucket small-file fan-out
-      def dataFiles(p: String) =
-        new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
-      assert(dataFiles(s"$tmp/o") == 8, "one file per bucket on the orders side")
-      assert(dataFiles(s"$tmp/l") == 8, "one file per bucket on the lineitem side")
-      // result parity vs the plain (shuffled) join on the source frames
-      val got = j.groupBy().agg(count(lit(1)), sum("l_quantity")).collect()
-      val want = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy().agg(count(lit(1)), sum("l_quantity")).collect()
-      assert(got.toSeq == want.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.sql("DROP TABLE IF EXISTS bw_orders")
-      spark.sql("DROP TABLE IF EXISTS bw_lineitem")
-      ()
+    Writers.withScratchDir(spark, "graft-bucket") { tmp =>
+      Writers.bucketedTable(o, "bw_orders", s"$tmp/o", "o_orderkey", 8)
+      Writers.bucketedTable(l, "bw_lineitem", s"$tmp/l", "l_orderkey", 8)
+      val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val j = spark.table("bw_orders").join(spark.table("bw_lineitem"),
+          col("o_orderkey") === col("l_orderkey"))
+        val plan = j.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"bucketed join must not shuffle:\n$plan")
+        assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
+          s"expected a non-broadcast join over the bucketed scans:\n$plan")
+        // the one-file-per-bucket write: 8 data files per table, no
+        // task-count x bucket small-file fan-out
+        def dataFiles(p: String) =
+          new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
+        assert(dataFiles(s"$tmp/o") == 8, "one file per bucket on the orders side")
+        assert(dataFiles(s"$tmp/l") == 8, "one file per bucket on the lineitem side")
+        // result parity vs the plain (shuffled) join on the source frames
+        val got = j.groupBy().agg(count(lit(1)), sum("l_quantity")).collect()
+        val want = o.join(l, col("o_orderkey") === col("l_orderkey"))
+          .groupBy().agg(count(lit(1)), sum("l_quantity")).collect()
+        assert(got.toSeq == want.toSeq)
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+        spark.sql("DROP TABLE IF EXISTS bw_orders")
+        spark.sql("DROP TABLE IF EXISTS bw_lineitem")
+        ()
+      }
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -25,43 +23,45 @@ class IvfLayoutSpec extends SparkSpec {
   test("cid-partitioned IVF layout: probe prunes partitions, matches in-memory path") {
     val dir = "/root/testdata/sf0.001"
     val asg = Quantizer.assignments(spark, dir) // (vec_id, e, cid)
-    // write into a SUBPATH: createTempDirectory makes the root exist,
-    // and Spark's ErrorIfExists mode rejects any existing target path
-    val path = Files.createTempDirectory("graft-ivf-layout").toString + "/ivf"
-    asg.write.partitionBy("cid").parquet(path)
-    val layout = spark.read.parquet(path)
+    // write into a SUBPATH: the scratch root exists, and Spark's
+    // ErrorIfExists mode rejects any existing target path
+    Writers.withScratchDir(spark, "graft-ivf-layout") { scratch =>
+      val path = s"$scratch/ivf"
+      asg.write.partitionBy("cid").parquet(path)
+      val layout = spark.read.parquet(path)
 
-    // probe: nearest nprobe=2 centroids of query vec 0 (driver-side —
-    // the centroid table is K rows by construction)
-    val q = asg.filter(col("vec_id") === 0L).select("e")
-      .head().getSeq[Double](0).toArray
-    val probed = Quantizer.centroids(spark, dir).collect()
-      .map { r =>
-        val c = r.getSeq[Double](r.fieldIndex("c"))
-        (r.getAs[Number]("cid").longValue(), c.zip(q).map { case (a, b) => a * b }.sum)
+      // probe: nearest nprobe=2 centroids of query vec 0 (driver-side —
+      // the centroid table is K rows by construction)
+      val q = asg.filter(col("vec_id") === 0L).select("e")
+        .head().getSeq[Double](0).toArray
+      val probed = Quantizer.centroids(spark, dir).collect()
+        .map { r =>
+          val c = r.getSeq[Double](r.fieldIndex("c"))
+          (r.getAs[Number]("cid").longValue(), c.zip(q).map { case (a, b) => a * b }.sum)
+        }
+        .sortBy { case (cid, d) => (-d, cid) }.take(2).map(_._1).toSeq
+
+      val pruned = layout.filter(col("cid").isin(probed: _*))
+      val plan = pruned.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [") && plan.contains("cid"),
+        s"expected a cid partition filter at the scan; plan:\n${plan.take(1500)}")
+
+      def top3(members: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
+        val w = org.apache.spark.sql.expressions.Window
+          .orderBy(desc("c"), col("neighbor_id"))
+        members.filter(col("vec_id") =!= 0L)
+          .select(col("vec_id").as("neighbor_id"),
+            dotSeq(col("e"), typedLit(q.toSeq)).as("c"))
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 3)
+          .select(col("rank").cast("long"), col("neighbor_id"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       }
-      .sortBy { case (cid, d) => (-d, cid) }.take(2).map(_._1).toSeq
 
-    val pruned = layout.filter(col("cid").isin(probed: _*))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("cid"),
-      s"expected a cid partition filter at the scan; plan:\n${plan.take(1500)}")
-
-    def top3(members: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(desc("c"), col("neighbor_id"))
-      members.filter(col("vec_id") =!= 0L)
-        .select(col("vec_id").as("neighbor_id"),
-          dotSeq(col("e"), typedLit(q.toSeq)).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("rank").cast("long"), col("neighbor_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val fromLayout = top3(pruned)
+      val fromMemory = top3(asg.filter(col("cid").isin(probed: _*)))
+      assert(fromLayout == fromMemory && fromLayout.size == 3,
+        s"layout $fromLayout != memory $fromMemory")
     }
-
-    val fromLayout = top3(pruned)
-    val fromMemory = top3(asg.filter(col("cid").isin(probed: _*)))
-    assert(fromLayout == fromMemory && fromLayout.size == 3,
-      s"layout $fromLayout != memory $fromMemory")
   }
 }

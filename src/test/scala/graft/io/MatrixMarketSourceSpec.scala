@@ -2,7 +2,6 @@ package graft.io
 
 import java.io.{FileOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -14,7 +13,7 @@ class MatrixMarketSourceSpec extends SparkSpec {
 
   /** Gzipped MM fixture: 3x4 matrix, 5 entries, with comments. */
   private lazy val mmPath: String = {
-    val dir = Files.createTempDirectory("graft-mm")
+    val dir = fixtureDir("graft-mm")
     val f = dir.resolve("test.MM.gz").toFile
     val w = new OutputStreamWriter(
       new GZIPOutputStream(new FileOutputStream(f)), StandardCharsets.UTF_8)

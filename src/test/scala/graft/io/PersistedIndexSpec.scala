@@ -23,22 +23,22 @@ class PersistedIndexSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitioned postings round-trip: bit-exact doubles, typed partition column") {
-    val tmp = java.nio.file.Files.createTempDirectory("pidx_rt").toString
-    val v = Seq(
-      (0L, 3, Array(0.1 + 0.2, 1.0 / 3.0, math.Pi)), // non-representable doubles
-      (1L, 3, Array(1e-300, -0.0, 2.0 / 7.0)),
-      (2L, 5, Array(0.30000000000000004, 0.6661338147750939, -1.5)))
-      .toDF("vec_id", "label", "e")
-    Writers.parquetPartitioned(v, tmp, Seq("label"))
-    val back = spark.read.parquet(tmp)
-    assert(back.schema("label").dataType == v.schema("label").dataType,
-      "partition column must come back with its original integer type")
-    val want = v.select("vec_id", "e").as[(Long, Array[Double])]
-      .collect().sortBy(_._1).map { case (id, a) => (id, a.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
-    val got = back.select("vec_id", "e").as[(Long, Array[Double])]
-      .collect().sortBy(_._1).map { case (id, a) => (id, a.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
-    assert(got.toSeq == want.toSeq, "doubles must round-trip parquet bit-exactly")
-    Writers.deleteDir(spark, tmp)
+    Writers.withScratchDir(spark, "pidx_rt") { tmp =>
+      val v = Seq(
+        (0L, 3, Array(0.1 + 0.2, 1.0 / 3.0, math.Pi)), // non-representable doubles
+        (1L, 3, Array(1e-300, -0.0, 2.0 / 7.0)),
+        (2L, 5, Array(0.30000000000000004, 0.6661338147750939, -1.5)))
+        .toDF("vec_id", "label", "e")
+      Writers.parquetPartitioned(v, tmp, Seq("label"))
+      val back = spark.read.parquet(tmp)
+      assert(back.schema("label").dataType == v.schema("label").dataType,
+        "partition column must come back with its original integer type")
+      val want = v.select("vec_id", "e").as[(Long, Array[Double])]
+        .collect().sortBy(_._1).map { case (id, a) => (id, a.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
+      val got = back.select("vec_id", "e").as[(Long, Array[Double])]
+        .collect().sortBy(_._1).map { case (id, a) => (id, a.toSeq.map(java.lang.Double.doubleToRawLongBits)) }
+      assert(got.toSeq == want.toSeq, "doubles must round-trip parquet bit-exactly")
+    }
   }
 
   test("direct-path read of probed bucket= dirs ≡ isin-filtered full read, and lists ONLY them (the r14 s28 serve)") {
@@ -47,8 +47,7 @@ class PersistedIndexSpec extends SparkSpec {
     // table and pruning. Pin both halves: value equality with the old
     // isin-filtered full read, and a file index whose root paths are
     // exactly the probed dirs (nothing else is even listed).
-    val tmp = java.nio.file.Files.createTempDirectory("pidx_direct").toString
-    try {
+    Writers.withScratchDir(spark, "pidx_direct") { tmp =>
       val post = (0L until 64L).map(i => (i, (i % 8).toInt)).toDF("vec_id", "bucket")
       Writers.parquetPartitioned(post, tmp, Seq("bucket"), targetFileCount = 2)
       val probed: Array[Any] = Array(2, 5)
@@ -66,8 +65,6 @@ class PersistedIndexSpec extends SparkSpec {
       }.head.relation.location.rootPaths.map(_.getName).toSet
       assert(roots == Set("bucket=2", "bucket=5"),
         s"file index must be rooted at ONLY the probed dirs, got $roots")
-    } finally {
-      Writers.deleteDir(spark, tmp)
     }
   }
 
@@ -76,34 +73,30 @@ class PersistedIndexSpec extends SparkSpec {
     // driver collect; an empty query batch yields an empty IN list. Pin
     // Spark's semantics: it neither throws nor matches anything — the
     // serve path degenerates to the correct empty frame.
-    val tmp = java.nio.file.Files.createTempDirectory("pidx_empty").toString
-    try {
+    Writers.withScratchDir(spark, "pidx_empty") { tmp =>
       val post = (0L until 20L).map(i => (i, (i % 4).toInt)).toDF("vec_id", "label")
       Writers.parquetPartitioned(post, tmp, Seq("label"), targetFileCount = 4)
       val probed = Array.empty[Any]
       val pruned = spark.read.parquet(tmp).where(col("label").isin(probed: _*))
       assert(pruned.count() == 0L, "empty IN list must evaluate false for every row")
-    } finally {
-      Writers.deleteDir(spark, tmp)
     }
   }
 
   test("append-mode partitioned write leaves base files untouched; per-partition compact preserves rows (the s26 maintenance contract)") {
-    val tmp = java.nio.file.Files.createTempDirectory("pidx_append").toString
-    val tmpC = java.nio.file.Files.createTempDirectory("pidx_compact").toString
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-    def dataFiles(dir: String): Map[String, (Long, Long)] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-      val b = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += st.getPath.toString -> ((st.getLen, st.getModificationTime))
+    Writers.withScratchDir(spark, "pidx_append") { scratch =>
+      val (tmp, tmpC) = (s"$scratch/postings", s"$scratch/compact")
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
+      def dataFiles(dir: String): Map[String, (Long, Long)] = {
+        val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+        val b = Map.newBuilder[String, (Long, Long)]
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.getPath.getName.endsWith(".parquet"))
+            b += st.getPath.toString -> ((st.getLen, st.getModificationTime))
+        }
+        b.result()
       }
-      b.result()
-    }
-    try {
       val all = (0L until 40L).map(i => (i, (i % 4).toInt))
       val base = all.filter(_._1 % 5 != 0).toDF("vec_id", "cid")
       val delta = all.filter(_._1 % 5 == 0).toDF("vec_id", "cid")
@@ -132,16 +125,12 @@ class PersistedIndexSpec extends SparkSpec {
         .as[Long].collect().sorted.toSeq
       assert(gotC == want, "compaction must preserve rows exactly")
       assert(dataFiles(tmpC).size == 1, "compaction must hit the file target")
-    } finally {
-      Seq(tmp, tmpC).foreach(Writers.deleteDir(spark, _))
     }
   }
 
   test("sign-LSH buckets recomputed from the re-read hyperplane artifact equal the compiled-in literals (the s28 contract)") {
     import graft.functions.VecFns._
-    graft.expressions.GraftFunctions.register(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("pidx_lsh").toString
-    try {
+    Writers.withScratchDir(spark, "pidx_lsh") { tmp =>
       val planes = spark.createDataFrame(
         (0 until LshPlanes).map(j => (j, 1L << j, hyperplaneN(j, LshDim))))
         .toDF("j", "w", "hp")
@@ -164,56 +153,53 @@ class PersistedIndexSpec extends SparkSpec {
         "buckets from the round-tripped hyperplanes must be bit-identical " +
           "to the compiled-in literals — the s28 from-disk ≡ in-memory hinge")
       assert(fromLiterals.values.toSet.size > 1, "fixture must span buckets")
-    } finally {
-      Writers.deleteDir(spark, tmp)
     }
   }
 
   test("serving join over label-partitioned postings plans dynamic partition pruning") {
-    val tmp = java.nio.file.Files.createTempDirectory("pidx_dpp").toString
-    val post = (0L until 200L).map(i => (i, (i % 10).toInt, i * 0.5))
-      .toDF("vec_id", "label", "x")
-    // targetFileCount: one file per label directory, so numFiles below
-    // counts pruned DIRECTORIES exactly
-    Writers.parquetPartitioned(post, tmp, Seq("label"), targetFileCount = 10)
-    // the probe side must be a SELECTIVELY FILTERED relation (the s23
-    // shape: queries filtered from the raw store) — Spark's
-    // PartitionPruning rule requires a selective predicate on the
-    // filtering side; a bare LocalRelation doesn't qualify
-    val tmpProbe = java.nio.file.Files.createTempDirectory("pidx_probe").toString
-    Writers.parquet(Seq((100L, 3), (101L, 7), (102L, 3), (999L, 9))
-      .toDF("query_id", "best_label"), tmpProbe)
-    // AQE off for this plan only: the DPP path is identical, but the
-    // final plan stays inspectable (no QueryStageExec nesting between
-    // collect() and the scan metrics)
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // finally-restore: the session is JVM-wide shared across suites — a
-    // failing assert must not leave AQE off for every later suite, nor
-    // leak the temp dirs
-    try {
-      val back = spark.read.parquet(tmp)
-      val best = spark.read.parquet(tmpProbe).filter(col("query_id") < 200L)
-      val served = back.join(broadcast(best), col("label") === col("best_label"))
-      val plan = served.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning"),
-        s"expected DPP on the partitioned postings scan; plan:\n${plan.take(3000)}")
-      // (labels 3 and 7 → 20 rows each, ×2 and ×1 probes). collect() so
-      // the metrics below come from THIS DataFrame's own execution
-      assert(served.collect().length == 60)
-      // and the pruning is REAL, not just planned: the executed scan must
-      // have LISTED only the 2 probed label= directories (one file each)
-      val scans = served.queryExecution.executedPlan.collectWithSubqueries {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains("pidx_dpp")) => s
+    Writers.withScratchDir(spark, "pidx_dpp") { scratch =>
+      val (tmp, tmpProbe) = (s"$scratch/postings", s"$scratch/probe")
+      val post = (0L until 200L).map(i => (i, (i % 10).toInt, i * 0.5))
+        .toDF("vec_id", "label", "x")
+      // targetFileCount: one file per label directory, so numFiles below
+      // counts pruned DIRECTORIES exactly
+      Writers.parquetPartitioned(post, tmp, Seq("label"), targetFileCount = 10)
+      // the probe side must be a SELECTIVELY FILTERED relation (the s23
+      // shape: queries filtered from the raw store) — Spark's
+      // PartitionPruning rule requires a selective predicate on the
+      // filtering side; a bare LocalRelation doesn't qualify
+      Writers.parquet(Seq((100L, 3), (101L, 7), (102L, 3), (999L, 9))
+        .toDF("query_id", "best_label"), tmpProbe)
+      // AQE off for this plan only: the DPP path is identical, but the
+      // final plan stays inspectable (no QueryStageExec nesting between
+      // collect() and the scan metrics)
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      // finally-restore: the session is JVM-wide shared across suites — a
+      // failing assert must not leave AQE off for every later suite
+      try {
+        val back = spark.read.parquet(tmp)
+        val best = spark.read.parquet(tmpProbe).filter(col("query_id") < 200L)
+        val served = back.join(broadcast(best), col("label") === col("best_label"))
+        val plan = served.queryExecution.executedPlan.toString
+        assert(plan.contains("dynamicpruning"),
+          s"expected DPP on the partitioned postings scan; plan:\n${plan.take(3000)}")
+        // (labels 3 and 7 → 20 rows each, ×2 and ×1 probes). collect() so
+        // the metrics below come from THIS DataFrame's own execution
+        assert(served.collect().length == 60)
+        // and the pruning is REAL, not just planned: the executed scan must
+        // have LISTED only the 2 probed label= directories (one file each)
+        val scans = served.queryExecution.executedPlan.collectWithSubqueries {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith("/postings")) => s
+        }
+        assert(scans.nonEmpty, "postings FileSourceScan not found in executed plan")
+        val filesRead = scans.head.metrics("numFiles").value
+        assert(filesRead == 2L,
+          s"DPP must prune the listing to the 2 probed partitions, read $filesRead files")
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       }
-      assert(scans.nonEmpty, "postings FileSourceScan not found in executed plan")
-      val filesRead = scans.head.metrics("numFiles").value
-      assert(filesRead == 2L,
-        s"DPP must prune the listing to the 2 probed partitions, read $filesRead files")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Seq(tmp, tmpProbe).foreach(Writers.deleteDir(spark, _))
     }
   }
 }

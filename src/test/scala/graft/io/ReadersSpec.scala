@@ -14,24 +14,16 @@ import graft.loaders.Project
 class ReadersSpec extends SparkSpec {
 
   private lazy val (mirror, rootUrl) = {
-    val dir = Files.createTempDirectory("graft-readers")
+    val dir = fixtureDir("graft-readers")
     (dir, FixtureMirror.build(dir))
   }
   private def p(rel: String): String = mirror.resolve(rel).toString
   private val corpusPath = "human/data_sources/sra/metadata/sra.recount_project.MD.gz"
   private val countsPath = "human/data_sources/sra/gene_sums/01/SRP001/sra.gene_sums.SRP001.G026.gz"
 
-  private lazy val textDir = {
-    val d = Files.createTempDirectory("graft-readers-text")
-    d.toFile.deleteOnExit()
-    d
-  }
-  private def textFile(name: String, content: String): String = {
-    val f = textDir.resolve(name)
-    Files.writeString(f, content)
-    f.toFile.deleteOnExit() // registered after its directory, so deleted first
-    f.toString
-  }
+  private lazy val textDir = fixtureDir("graft-readers-text")
+  private def textFile(name: String, content: String): String =
+    Files.writeString(textDir.resolve(name), content).toString
 
   /** The messages of `e` and its causes, one per line. */
   private def messages(e: Throwable): String =

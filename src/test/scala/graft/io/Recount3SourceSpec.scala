@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -15,7 +13,7 @@ import graft.{FixtureMirror, SparkSpec}
   */
 class Recount3SourceSpec extends SparkSpec {
 
-  private lazy val rootUrl = FixtureMirror.build(Files.createTempDirectory("graft-r3src"))
+  private lazy val rootUrl = FixtureMirror.build(fixtureDir("graft-r3src"))
 
   private def read(dtype: String, projects: String) =
     spark.read.format("recount3")
@@ -128,23 +126,24 @@ class Recount3SourceSpec extends SparkSpec {
     import spark.implicits._
     // the dim must be a REAL relation (a local Seq constant-folds its
     // filter away and DPP sees no selective predicate to key on)
-    val dimDir = java.nio.file.Files.createTempDirectory("graft-rf-dim").toString
-    Seq(("SRP002", "keep"), ("SRP999", "drop")).toDF("project_id", "tag")
-      .write.mode("overwrite").parquet(dimDir)
-    val dim = spark.read.parquet(dimDir)
-      .filter(col("tag") === "keep") // the selective predicate DPP keys on
-    val fact = read("gene", "SRP001,SRP002")
-    Recount3Source.lastPlannedFiles = Nil
-    val joined = fact.join(dim, "project_id")
-      .groupBy("project_id").count()
-    val rows = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(rows == Set(("SRP002", 3L)))
-    // the executed plan carries the injected dynamic filter
-    assert(joined.queryExecution.executedPlan.toString.contains("dynamicpruning"),
-      "expected a dynamicpruningexpression runtime filter on the scan")
-    val planned = Recount3Source.lastPlannedFiles
-    assert(planned == Seq("SRP002"),
-      s"runtime filter should prune to the joined project's file; planned $planned")
+    Writers.withScratchDir(spark, "graft-rf-dim") { dimDir =>
+      Seq(("SRP002", "keep"), ("SRP999", "drop")).toDF("project_id", "tag")
+        .write.mode("overwrite").parquet(dimDir)
+      val dim = spark.read.parquet(dimDir)
+        .filter(col("tag") === "keep") // the selective predicate DPP keys on
+      val fact = read("gene", "SRP001,SRP002")
+      Recount3Source.lastPlannedFiles = Nil
+      val joined = fact.join(dim, "project_id")
+        .groupBy("project_id").count()
+      val rows = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(rows == Set(("SRP002", 3L)))
+      // the executed plan carries the injected dynamic filter
+      assert(joined.queryExecution.executedPlan.toString.contains("dynamicpruning"),
+        "expected a dynamicpruningexpression runtime filter on the scan")
+      val planned = Recount3Source.lastPlannedFiles
+      assert(planned == Seq("SRP002"),
+        s"runtime filter should prune to the joined project's file; planned $planned")
+    }
   }
 
   test("runtime filtering: a join against a filtered sample dim prunes wide columns") {
@@ -152,21 +151,22 @@ class Recount3SourceSpec extends SparkSpec {
     // observed sample_id set reaches the scan before execution, so the
     // readers skip parsing every unselected wide column
     import spark.implicits._
-    val dimDir = java.nio.file.Files.createTempDirectory("graft-rf-sdim").toString
-    Seq(("SRR001", "keep"), ("SRR999", "drop")).toDF("sample_id", "tag")
-      .write.mode("overwrite").parquet(dimDir)
-    val dim = spark.read.parquet(dimDir)
-      .filter(col("tag") === "keep")
-    val fact = read("gene", "SRP001,SRP002")
-    Recount3Source.lastRuntimeSamples = None
-    val joined = fact.join(dim, "sample_id")
-      .groupBy("sample_id").count()
-    val rows = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(rows == Set(("SRR001", 4L)))
-    assert(joined.queryExecution.executedPlan.toString.contains("dynamicpruning"),
-      "expected a dynamicpruningexpression runtime filter on the scan")
-    assert(Recount3Source.lastRuntimeSamples == Some(Set("SRR001")),
-      s"runtime sample set should reach the scan; got ${Recount3Source.lastRuntimeSamples}")
+    Writers.withScratchDir(spark, "graft-rf-sdim") { dimDir =>
+      Seq(("SRR001", "keep"), ("SRR999", "drop")).toDF("sample_id", "tag")
+        .write.mode("overwrite").parquet(dimDir)
+      val dim = spark.read.parquet(dimDir)
+        .filter(col("tag") === "keep")
+      val fact = read("gene", "SRP001,SRP002")
+      Recount3Source.lastRuntimeSamples = None
+      val joined = fact.join(dim, "sample_id")
+        .groupBy("sample_id").count()
+      val rows = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(rows == Set(("SRR001", 4L)))
+      assert(joined.queryExecution.executedPlan.toString.contains("dynamicpruning"),
+        "expected a dynamicpruningexpression runtime filter on the scan")
+      assert(Recount3Source.lastRuntimeSamples == Some(Set("SRR001")),
+        s"runtime sample set should reach the scan; got ${Recount3Source.lastRuntimeSamples}")
+    }
   }
 
   test("reported storage partitioning: project-keyed aggregation plans NO shuffle") {

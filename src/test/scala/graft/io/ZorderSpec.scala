@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -34,17 +32,18 @@ class ZorderSpec extends SparkSpec {
   }
 
   test("compact: 32 task-files become targetFiles with the same rows") {
-    val src = Files.createTempDirectory("graft-compact-src").toString
-    val dst = Files.createTempDirectory("graft-compact-dst").toString
-    val df = (1L to 1000L).map(i => (i, s"row$i")).toDF("id", "s")
-    df.repartition(32).write.mode("overwrite").parquet(src)
-    def parquetFiles(dir: String) = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(src) == 32)
-    Writers.compact(spark, src, dst, 4)
-    assert(parquetFiles(dst) == 4, s"expected 4 files, got ${parquetFiles(dst)}")
-    val got = spark.read.parquet(dst).select("id").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == (1L to 1000L), "compaction changed the row set")
+    Writers.withScratchDir(spark, "graft-compact") { scratch =>
+      val (src, dst) = (s"$scratch/src", s"$scratch/dst")
+      val df = (1L to 1000L).map(i => (i, s"row$i")).toDF("id", "s")
+      df.repartition(32).write.mode("overwrite").parquet(src)
+      def parquetFiles(dir: String) = new java.io.File(dir).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(parquetFiles(src) == 32)
+      Writers.compact(spark, src, dst, 4)
+      assert(parquetFiles(dst) == 4, s"expected 4 files, got ${parquetFiles(dst)}")
+      val got = spark.read.parquet(dst).select("id").collect().map(_.getLong(0)).sorted
+      assert(got.toSeq == (1L to 1000L), "compaction changed the row set")
+    }
   }
 
   test("z-order layout skips files on the non-leading dimension; linear does not") {
@@ -53,29 +52,31 @@ class ZorderSpec extends SparkSpec {
       .toDF("x", "y")
     val nFiles = 16
 
-    val zDir = Files.createTempDirectory("graft-zorder").toString
-    Writers.zorderWrite(grid, NumFns.zvalue2(col("x"), col("y"), 6), nFiles, zDir)
+    Writers.withScratchDir(spark, "graft-zorder") { scratch =>
+      val zDir = s"$scratch/z"
+      Writers.zorderWrite(grid, NumFns.zvalue2(col("x"), col("y"), 6), nFiles, zDir)
 
-    val linDir = Files.createTempDirectory("graft-linear").toString
-    grid.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(linDir)
+      val linDir = s"$scratch/linear"
+      grid.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
+        .write.mode("overwrite").parquet(linDir)
 
-    // per-file y-footprints, read the way a scan planner reads footer
-    // stats: a file can be skipped for filter y < 8 iff its min(y) >= 8
-    def overlapping(dir: String): (Int, Int) = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).map(_.toString).toSeq
-      val hit = files.count { f =>
-        spark.read.parquet(f).agg(min("y")).head().getLong(0) < 8
+      // per-file y-footprints, read the way a scan planner reads footer
+      // stats: a file can be skipped for filter y < 8 iff its min(y) >= 8
+      def overlapping(dir: String): (Int, Int) = {
+        val files = new java.io.File(dir).listFiles()
+          .filter(f => f.getName.endsWith(".parquet")).map(_.toString).toSeq
+        val hit = files.count { f =>
+          spark.read.parquet(f).agg(min("y")).head().getLong(0) < 8
+        }
+        (hit, files.length)
       }
-      (hit, files.length)
+      val (zHit, zTotal) = overlapping(zDir)
+      val (lHit, lTotal) = overlapping(linDir)
+      assert(zTotal == nFiles && lTotal == nFiles)
+      // linear-by-x files each span all of y: none can be skipped
+      assert(lHit == nFiles, s"linear layout unexpectedly skipped files ($lHit/$lTotal)")
+      // z-order: only the files whose tile touches y<8 qualify
+      assert(zHit * 2 <= lHit, s"z-order should skip >= half the files; hit $zHit/$zTotal")
     }
-    val (zHit, zTotal) = overlapping(zDir)
-    val (lHit, lTotal) = overlapping(linDir)
-    assert(zTotal == nFiles && lTotal == nFiles)
-    // linear-by-x files each span all of y: none can be skipped
-    assert(lHit == nFiles, s"linear layout unexpectedly skipped files ($lHit/$lTotal)")
-    // z-order: only the files whose tile touches y<8 qualify
-    assert(zHit * 2 <= lHit, s"z-order should skip >= half the files; hit $zHit/$zTotal")
   }
 }

@@ -15,9 +15,7 @@ import graft.model.{Annotation, Dtype}
 class LoaderE2eSpec extends SparkSpec {
 
   private lazy val (rootUrl, mirrorDir) = {
-    val src = Files.createTempDirectory("graft-mirror-src")
-    val cache = Files.createTempDirectory("graft-mirror-cache")
-    (FixtureMirror.build(src), cache)
+    (FixtureMirror.build(fixtureDir("graft-mirror-src")), fixtureDir("graft-mirror-cache"))
   }
 
   private lazy val corpus = {
@@ -42,17 +40,19 @@ class LoaderE2eSpec extends SparkSpec {
 
   test("loadLenient: Some on intact mirror, None once a cached file is corrupt") {
     // fresh mirror cache so corruption can't poison the shared fixtures
-    val cache2 = Files.createTempDirectory("graft-mirror-cache2")
-    val m = new Metadata(spark, FixtureMirror.Organism, rootUrl, cache2)
-    m.cache()
-    assert(m.loadLenient().exists(_.count() == 3))
-    // truncate a cached recount_project gz mid-header -> reference parity
-    // says the whole load yields None (accessor.py:327-329)
-    val victim = Files.walk(cache2).filter(p =>
-      p.toString.contains(".recount_project.") && p.toString.endsWith(".gz"))
-      .findFirst().orElseThrow()
-    Files.write(victim, Array[Byte](0x1f))
-    assert(m.loadLenient().isEmpty)
+    Writers.withScratchDir(spark, "graft-mirror-cache2") { scratch =>
+      val cache2 = Paths.get(scratch)
+      val m = new Metadata(spark, FixtureMirror.Organism, rootUrl, cache2)
+      m.cache()
+      assert(m.loadLenient().exists(_.count() == 3))
+      // truncate a cached recount_project gz mid-header -> reference parity
+      // says the whole load yields None (accessor.py:327-329)
+      val victim = Files.walk(cache2).filter(p =>
+        p.toString.contains(".recount_project.") && p.toString.endsWith(".gz"))
+        .findFirst().orElseThrow()
+      Files.write(victim, Array[Byte](0x1f))
+      assert(m.loadLenient().isEmpty)
+    }
   }
 
   test("project ids and samples collected from metadata") {

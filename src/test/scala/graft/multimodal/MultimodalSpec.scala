@@ -102,7 +102,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("multimodal -> ANN hand-off: resized features bucket duplicate payloads together") {
     import graft.functions.VecFns
-    graft.expressions.GraftFunctions.register(spark) // dotSeq uses graft_dot
     // resize to 8x8 = 64 dims, the LshDim the sign-LSH hyperplanes expect:
     // the full near-dup path a media pipeline runs — decode/resize ->
     // feature vector -> LSH bucket -> in-bucket exact cosine

@@ -16,8 +16,6 @@ import graft.functions.VecFns._
   */
 class KMeansSpec extends SparkSpec {
 
-  graft.expressions.GraftFunctions.register(spark)
-
   import spark.implicits._
 
   /** n unit vectors in 4-d: two well-separated groups around e1 and e3,

@@ -3,10 +3,11 @@ package graft.plans
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftExtensions, SparkSpec}
 
 /** The custom plan-operator stack: TopKPerGroup must (1) produce exactly
   * the window-function answer, (2) plan as partial TopKExec -> exchange
@@ -190,7 +191,29 @@ class TopKPlanSpec extends SparkSpec {
       TopKPlan.topKPerGroup(df, Seq("grp"), "nope", "id", 3))
     intercept[IllegalArgumentException](
       TopKPlan.topKPerGroup(df, Seq("grp"), "id", "id", 3)) // long, not double
-    // the config-injection hook registers the same strategy
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+    // A new session has a fresh function registry and its own
+    // experimental lists; with no register call, all it resolves comes
+    // from the classpath provider.
+    val fresh = spark.newSession()
+    GraftExtensions.functions.foreach { case (name, _) =>
+      assert(fresh.catalog.functionExists(name), s"$name is not installed")
+    }
+    val vecs = fresh.createDataFrame(Seq(
+      (1L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0)), (3L, Array(0.6, 0.8))))
+      .toDF("vec_id", "e")
+    val asg = graft.ops.KMeans.assign(vecs, graft.ops.KMeans.fit(vecs, 2, 2, 2))
+    assert(asg.count() == 3)
+    val top = TopKPlan.topKPerGroup(fresh.createDataFrame(Seq(
+      ("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 3L, 3.0))).toDF("grp", "id", "value"),
+      Seq("grp"), "value", "id", 1)
+    top.collect()
+    assert(flatten(top.queryExecution.executedPlan).exists(_.isInstanceOf[TopKExec]))
+    // the provider leaves the row_number rewrite out: a window stays a window
+    val w = Window.partitionBy("grp").orderBy(desc("value"), col("id"))
+    val windowed = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    windowed.collect()
+    val nodes = flatten(windowed.queryExecution.executedPlan)
+    assert(nodes.exists(_.isInstanceOf[WindowExec]), nodes.map(_.nodeName))
+    assert(!nodes.exists(_.isInstanceOf[TopKExec]))
   }
 }

@@ -12,16 +12,18 @@ import graft.SparkSpec
   * stay a window otherwise.
   */
 class TopKRewriteSpec extends SparkSpec {
-  import spark.implicits._
-
-  private lazy val enabled = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(TopKStrategy))
-      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ TopKStrategy
-    if (!cs.experimental.extraOptimizations.contains(TopKRewriteRule))
-      cs.experimental.extraOptimizations = cs.experimental.extraOptimizations :+ TopKRewriteRule
-    true
+  // The rule's own session: no other session installs the rule (Bench
+  // times these windows as windows), so adding it to the shared test
+  // session would change how every later suite plans them. A new session
+  // gets its own `experimental` lists and, from the classpath provider,
+  // TopKStrategy.
+  private lazy val rewriting = {
+    val s = spark.newSession()
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental.extraOptimizations = Seq(TopKRewriteRule)
+    s
   }
+  import rewriting.implicits._
 
   private lazy val df = {
     val rnd = new scala.util.Random(11)
@@ -41,7 +43,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("row_number + rn<=k plans as TopKExec with no WindowExec") {
-    assert(enabled)
     val q = windowTopK(3)
     val rows = q.select("grp", "rn", "id", "value").collect()
     val nodes = flatten(q.queryExecution.executedPlan)
@@ -61,7 +62,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("unsafe shapes are NOT rewritten") {
-    assert(enabled)
     // ascending order: not the top-k idiom this operator implements
     val wAsc = Window.partitionBy("grp").orderBy(col("value"), col("id"))
     val asc = df.withColumn("rn", row_number().over(wAsc)).filter(col("rn") <= 2)

@@ -1,10 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
+import graft.io.Writers
 
 /** Pins d20's defining property — prefix filtering is EXACT: the
   * candidate pruning (rarest-first prefixes + length filter) may drop
@@ -49,23 +48,16 @@ class PrefixFilterJoinSpec extends SparkSpec {
     } yield (a, b, math.floor(j * 1e6 + 0.5) / 1e6)).toSet
   }
 
-  private def writeFixture(): String = {
-    val base = Files.createTempDirectory("d20_fix").toString
-    val df = spark.createDataFrame(corpus.map { case (id, tx) =>
+  /** `docs` as the documents table under `dir`. */
+  private def writeDocs(docs: Seq[(Long, String)], dir: String): String = {
+    writeTableFile(spark.createDataFrame(docs.map { case (id, tx) =>
       (id, tx, "en", "spec", tx.length.toLong)
-    }).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = s"$base/tmp"
-    df.coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = new java.io.File(s"$base/data/documents.parquet")
-    dst.getParentFile.mkdirs()
-    Files.move(part.toPath, dst.toPath)
-    s"$base/data"
+    }).toDF("doc_id", "text", "lang", "source", "n_chars"), dir, "documents")
+    dir
   }
 
   test("d20 equals the brute-force all-pairs answer (zero false negatives)") {
-    val dir = writeFixture()
+    val dir = writeDocs(corpus, fixtureDir("d20_fix").toString)
     val got = SparkEntry.queries("d20_prefix_filter_join")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -108,23 +100,14 @@ class PrefixFilterJoinSpec extends SparkSpec {
         if i * 8 >= (sa.size + sb.size) * 3
         j = i.toDouble / (sa.size + sb.size - i)
       } yield (a, b, math.floor(j * 1e6 + 0.5) / 1e6)).toSet
-      val base = java.nio.file.Files.createTempDirectory(s"d20_rand$trial").toString
-      val df = spark.createDataFrame(corpus.map { case (id, tx) =>
-        (id, tx, "en", "spec", tx.length.toLong)
-      }).toDF("doc_id", "text", "lang", "source", "n_chars")
-      val tmp = s"$base/tmp"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(s"$base/data/documents.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      val got = SparkEntry.queries("d20_prefix_filter_join")(spark, s"$base/data")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      assert(got == want, s"trial $trial: missing=${(want -- got).toSeq.sorted}, " +
-        s"extra=${(got -- want).toSeq.sorted}")
+      Writers.withScratchDir(spark, s"d20_rand$trial") { base =>
+        val got = SparkEntry.queries("d20_prefix_filter_join")(spark, writeDocs(corpus, base))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .toSet
+        assert(got == want, s"trial $trial: missing=${(want -- got).toSeq.sorted}, " +
+          s"extra=${(got -- want).toSeq.sorted}")
+      }
     }
   }
 }

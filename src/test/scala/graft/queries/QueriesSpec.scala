@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
@@ -72,17 +70,19 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("partitioned parquet sink: layout prunes on read") {
-    val tmp = Files.createTempDirectory("graft-sink").toString + "/out"
-    val li = Tables(spark, dir, "lineitem")
-    Writers.parquetPartitioned(li, tmp, Seq("l_returnflag"), targetFileCount = 2)
-    val back = spark.read.parquet(tmp)
-    assert(back.count() == li.count())
-    // partition dirs exist -> pruning-capable layout
-    val dirs = new java.io.File(tmp).listFiles().map(_.getName).filter(_.startsWith("l_returnflag="))
-    assert(dirs.toSet.subsetOf(Set("l_returnflag=A", "l_returnflag=N", "l_returnflag=R")))
-    assert(dirs.nonEmpty)
-    // filter on the partition column reads only that partition
-    val one = back.filter(col("l_returnflag") === "A")
-    assert(one.count() > 0 && one.count() < li.count())
+    Writers.withScratchDir(spark, "graft-sink") { scratch =>
+      val tmp = s"$scratch/out"
+      val li = Tables(spark, dir, "lineitem")
+      Writers.parquetPartitioned(li, tmp, Seq("l_returnflag"), targetFileCount = 2)
+      val back = spark.read.parquet(tmp)
+      assert(back.count() == li.count())
+      // partition dirs exist -> pruning-capable layout
+      val dirs = new java.io.File(tmp).listFiles().map(_.getName).filter(_.startsWith("l_returnflag="))
+      assert(dirs.toSet.subsetOf(Set("l_returnflag=A", "l_returnflag=N", "l_returnflag=R")))
+      assert(dirs.nonEmpty)
+      // filter on the partition column reads only that partition
+      val one = back.filter(col("l_returnflag") === "A")
+      assert(one.count() > 0 && one.count() < li.count())
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** Hand-computed sweep-line oracle for e22: crafted 5-minute intervals
@@ -26,18 +24,11 @@ class SweepLineSpec extends SparkSpec {
   )
 
   private def writeFixture(): String = {
-    val base = Files.createTempDirectory("e22_fix").toString
-    val df = spark.createDataFrame(evs.map { case (id, rel, tpe) =>
+    val base = fixtureDir("e22_fix").toString
+    writeTableFile(spark.createDataFrame(evs.map { case (id, rel, tpe) =>
       (id, DayNs + rel * SecNs, id, tpe, 1.0, "{}")
-    }).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = s"$base/tmp"
-    df.coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = new java.io.File(s"$base/data/events.parquet")
-    dst.getParentFile.mkdirs()
-    Files.move(part.toPath, dst.toPath)
-    s"$base/data"
+    }).toDF("event_id", "ts", "user_id", "event_type", "value", "props"), base, "events")
+    base
   }
 
   test("e22 matches the paper-computed sweep (peak, union cover, midnight clip)") {

@@ -1,12 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 import graft.{SparkEntry, SparkSpec}
+import graft.io.Writers
 
 /** Guard against events.ts parquet-encoding drift (the r04 regression:
   * the driver's testdata switched TIMESTAMP(NANOS) → TIMESTAMP(MICROS)
@@ -34,7 +33,7 @@ class TsEncodingSpec extends SparkSpec {
     // canonical frame: ts as epoch-nanos bigint via the adaptive reader
     val ev = Tables(spark, srcDir, "events")
     require(ev.schema("ts").dataType == LongType, "Tables must yield nanos bigint")
-    val base = Files.createTempDirectory("ts_enc").toString
+    val base = fixtureDir("ts_enc").toString
     val asNtz = timestamp_micros(expr("ts div 1000")).cast(TimestampNTZType)
     val asTs = timestamp_micros(expr("ts div 1000"))
     val encodings = Map(
@@ -43,14 +42,7 @@ class TsEncodingSpec extends SparkSpec {
       "ts_micros" -> ev.withColumn("ts", asTs))
     encodings.map { case (name, df) =>
       val dir = s"$base/$name"
-      // single parquet FILE at $dir/events.parquet, the layout Tables reads
-      val tmp = s"$base/${name}_tmp"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(s"$dir/events.parquet")
-      dst.getParentFile.mkdirs()
-      Files.move(part.toPath, dst.toPath)
+      writeTableFile(df, dir, "events")
       name -> dir
     }
   }
@@ -85,12 +77,13 @@ class TsEncodingSpec extends SparkSpec {
   test("a table stored as a directory streams every row (Tables.stream)") {
     // the layout tools.BlowUp writes: events.parquet is a directory of
     // part files, not one file
-    val dir = Files.createTempDirectory("stream_layout").toString
-    Tables(spark, srcDir, "events").repartition(3).write.parquet(s"$dir/events.parquet")
-    val batch = Tables(spark, dir, "events").count()
-    val streamed = graft.streaming.Streaming.drainToMemory(
-      Tables.stream(spark, dir, "events"), "append")
-    assert(batch > 0)
-    assert(streamed.count() === batch)
+    Writers.withScratchDir(spark, "stream_layout") { dir =>
+      Tables(spark, srcDir, "events").repartition(3).write.parquet(s"$dir/events.parquet")
+      val batch = Tables(spark, dir, "events").count()
+      val streamed = graft.streaming.Streaming.drainToMemory(
+        Tables.stream(spark, dir, "events"), "append")
+      assert(batch > 0)
+      assert(streamed.count() === batch)
+    }
   }
 }
