@@ -51,7 +51,7 @@ object Readers {
   /** First line of `path` after comments and blanks: one stream open on
     * the driver, no job.
     */
-  private[io] def header(path: String, comment: String = ""): String = {
+  private[graft] def header(path: String, comment: String = ""): String = {
     val r = open(path)
     try Option(nextLine(r, comment))
       .getOrElse(throw new IllegalArgumentException(s"no header line in $path"))

@@ -109,7 +109,6 @@ final class Project(
 
   private val eps = new EndpointConnector(organism, rootUrl)
   private val downloader = new Downloader(mirrorRoot, parallelism)
-  private var metadataCache: Option[DataFrame] = None
 
   def urls(dtype: Dtype): List[String] =
     ProjectLocator(eps.rootOrganismUrl, eps.dataSources, dbase, dtype,
@@ -120,41 +119,51 @@ final class Project(
 
   private def local(url: String): String = downloader.localPath(url).toString
 
+  /** True iff `url` lies in project `pid`'s own directory, the
+    * `/<shard>/<pid>/` path segments the locator writes — a substring
+    * test would give BLOOD the files of BLOOD_VESSEL too.
+    */
+  private def inProject(url: String, pid: String): Boolean =
+    url.contains(s"/${Locators.shard(pid)}/$pid/")
+
   /** Memoized project metadata (accessor.py:50, 176-179) — cached as a
     * Spark-cached plan, not a driver copy.
     */
-  def loadMetadata(): DataFrame = metadataCache.getOrElse {
-    val df = loadMetadataUncached().cache()
-    metadataCache = Some(df)
-    df
-  }
+  private lazy val projectMetadata: DataFrame = loadMetadataUncached().cache()
 
-  /** URL validity for per-project metadata files (accessor.py:281-290):
-    * substring predicates + the gtex/tcga "pred" exclusion.
-    */
-  private[loaders] def validMetadataUrl(url: String, pid: String): Boolean =
-    url.contains(pid) && url.contains(dbase) &&
-      url.contains(Dtype.Metadata.tag) &&
-      !(Set("gtex", "tcga").contains(dbase) && url.contains("pred"))
+  def loadMetadata(): DataFrame = projectMetadata
 
-  /** Project sample metadata (accessor.py:455-512 `MetadataLoader`): per
-    * project, inner-join the 4-5 source files on the composite key, then
-    * union projects with schema reconciliation, normalize organism,
-    * distinct.
+  /** The metadata tags of this dbase; gtex and tcga have no `pred` file
+    * (accessor.py:281-290).
     */
-  private def loadMetadataUncached(): DataFrame = {
-    val perProject = projectIds.flatMap { pid =>
-      val files = urls(Dtype.Metadata).filter(validMetadataUrl(_, pid))
-      val dfs = files.map { u =>
-        val df = Readers.tsvAllString(spark, Seq(local(u)))
-        if (sampleIds.nonEmpty) df.filter(col("external_id").isin(sampleIds: _*))
-        else df
+  private def metadataTags: Seq[String] =
+    Dtype.tags(Dtype.Metadata, dbase)
+      .filterNot(t => Set("gtex", "tcga").contains(dbase) && t.contains("pred"))
+
+  /** Project sample metadata (accessor.py:455-512 `MetadataLoader`). The
+    * reference inner-joins each project's 4-5 tag files on the composite
+    * key and unions the projects; here each tag's files of all projects
+    * are one scan per distinct header (unioned with schema
+    * reconciliation), and the tags are inner-joined once. The key holds
+    * `study`, so rows of different projects never match: the join of the
+    * per-tag unions is the union of the per-project joins, and the plan
+    * has one scan per tag and one join fewer than tags, whatever the
+    * number of projects. Then organism normalized, distinct.
+    */
+  private[loaders] def loadMetadataUncached(): DataFrame = {
+    if (projectIds.isEmpty) throw new RuntimeException("No metadata loaded.")
+    val mdUrls = urls(Dtype.Metadata)
+    val perTag = metadataTags.map { tag =>
+      val files = projectIds.map { pid =>
+        local(mdUrls.find(u => inProject(u, pid) && u.endsWith(s"/$dbase.$tag.$pid.MD.gz"))
+          .getOrElse(throw new RuntimeException(s"No $tag metadata file for $pid")))
       }
-      if (dfs.isEmpty) None
-      else Some(Ops.innerJoinAll(dfs, Model.MetadataJoinKey))
+      val df = Ops.unionWithMissing(
+        files.groupBy(Readers.header(_)).values.toSeq.map(Readers.tsvAllString(spark, _)))
+      if (sampleIds.nonEmpty) df.filter(col("external_id").isin(sampleIds: _*)) else df
     }
-    if (perProject.isEmpty) throw new RuntimeException("No metadata loaded.")
-    Ops.replaceOrganism(Ops.unionWithMissing(perProject)).distinct()
+    Ops.replaceOrganism(Ops.sortColumns(Ops.innerJoinAll(perTag, Model.MetadataJoinKey)))
+      .distinct()
   }
 
   private def perProjectSamples(pid: String): List[String] =
@@ -198,7 +207,7 @@ final class Project(
     val annDf = annotationUrl(dtype).map(u => Readers.gtfRead(spark, local(u)))
     val counts = projectIds.flatMap { pid =>
       urls(dtype)
-        .filter(u => u.contains(pid) && u.endsWith(s"${ann.code}.gz"))
+        .filter(u => inProject(u, pid) && u.endsWith(s".$pid.${ann.code}.gz"))
         .map(u => Readers.countsRead(spark, local(u), perProjectSamples(pid)))
     }
     if (annDf.isEmpty || counts.isEmpty)
@@ -216,8 +225,9 @@ final class Project(
       val long: DataFrame, val meta: DataFrame)
 
   private lazy val junctions: List[Junctions] = projectIds.map { pid =>
-    val pUrls = urls(Dtype.Jxn).filter(_.contains(pid))
-    def file(kind: String): String = local(pUrls.find(_.contains(kind))
+    val pUrls = urls(Dtype.Jxn).filter(inProject(_, pid))
+    // the kind by its suffix: KIDNEY's MM and RR file names contain "ID"
+    def file(kind: String): String = local(pUrls.find(_.endsWith(s".$kind.gz"))
       .getOrElse(throw new RuntimeException(s"No $kind file found for $pid")))
     val ids = Readers.idListRead(file("ID"))
     val (mmLong, nRows, nCols, _) = Readers.matrixMarketRead(spark, file("MM"))
@@ -248,16 +258,25 @@ final class Project(
     * as the reference's scipy densify does (accessor.py:431-438) — rows
     * 1..n, zeros filled, one column per rail_id of that project's ID file
     * in ID-file order, so a sample with no junction entries is a column
-    * of zeros. Project blocks are joined on the MM row key, in row order.
+    * of zeros. One pivot of the long union over the projects' ID lists,
+    * in project order, and one left join from rows 1..(the tallest MM
+    * height) densify all projects at once; a project's columns are null
+    * in the rows below its own MM height, as when each project was its
+    * own block and the blocks were full-outer joined on the row.
     */
   def loadJxn(): (DataFrame, DataFrame) = {
-    val (_, meta) = loadJxnLong()
-    val blocks = junctions.map { j =>
-      spark.range(1, j.nRows + 1).toDF("row")
-        .join(Ops.pivotWide(j.long, "row", "rail_id", "value", j.ids), Seq("row"), "left")
-        .na.fill(0, j.ids)
+    val (long, meta) = loadJxnLong()
+    val ids = junctions.flatMap(_.ids)
+    require(ids.distinct.size == ids.size,
+      "a rail_id is listed twice in the projects' junction ID files")
+    val cols = junctions.flatMap { j =>
+      j.ids.map(id => when(col("row") <= j.nRows, coalesce(col(s"`$id`"), lit(0L))).as(id))
     }
-    (blocks.reduce(_.join(_, Seq("row"), "full_outer")).orderBy("row").drop("row"), meta)
+    val wide = spark.range(1, junctions.map(_.nRows).max + 1).toDF("row")
+      .join(Ops.pivotWide(long, "row", "rail_id", "value", ids), Seq("row"), "left")
+      .orderBy("row")
+      .select(cols: _*)
+    (wide, meta)
   }
 
   /** BigWig catalog (accessor.py:574-610 `BigWigLoader`): in-memory
@@ -265,7 +284,7 @@ final class Project(
     */
   def loadBw(): DataFrame = {
     val rows = urls(Dtype.Bw).flatMap { u =>
-      projectIds.find(u.contains).map(pid =>
+      projectIds.find(inProject(u, _)).map(pid =>
         (pid, u, downloader.localPath(u).toString))
     }
     if (rows.isEmpty) throw new RuntimeException("No BigWig files found")

@@ -26,9 +26,12 @@ object Ops {
     */
   def unionWithMissing(dfs: Seq[DataFrame]): DataFrame = {
     require(dfs.nonEmpty, "unionWithMissing of zero frames")
-    val unioned = dfs.reduce(_.unionByName(_, allowMissingColumns = true))
-    unioned.select(unioned.columns.sorted.map(qcol).toIndexedSeq: _*)
+    sortColumns(dfs.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
+
+  /** `df` projected to its columns in sorted name order. */
+  def sortColumns(df: DataFrame): DataFrame =
+    df.select(df.columns.sorted.map(qcol).toIndexedSeq: _*)
 
   /** Plain vertical union of same-schema frames (pl.concat how="vertical",
     * accessor.py:337, 453).

@@ -9,16 +9,39 @@ import java.util.zip.GZIPOutputStream
   * replacement for the live service the reference tests against.
   *
   * Layout: organism `human`, one data source `data_sources/sra`, projects
-  * SRP001 (samples SRR001, SRR002) and SRP002 (SRR003).
+  * SRP001 (samples SRR001, SRR002) and SRP002 (SRR003). [[build]] can
+  * rename them and add a third project (SRR004) whose junction matrix is
+  * one row shorter.
   */
 object FixtureMirror {
 
   val Organism = "human"
   val Dbase = "sra"
   val DSource = "data_sources/sra"
-  val Projects: Map[String, Seq[String]] =
-    Map("SRP001" -> Seq("SRR001", "SRR002"), "SRP002" -> Seq("SRR003"))
-  val AllSamples: Seq[String] = Projects.values.flatten.toSeq.sorted
+
+  /** The content of one project position: its samples, gene and exon
+    * counts rows, junction ID list, MatrixMarket body and RR value prefix.
+    */
+  private final case class Slot(samples: Seq[String], gene: Seq[Seq[String]],
+      exon: Seq[Seq[String]], jxnIds: Seq[String], mm: String, rrPrefix: String)
+
+  private val Slots = Seq(
+    Slot(Seq("SRR001", "SRR002"),
+      Seq(Seq("g1", "10", "20"), Seq("g2", "30", "40"), Seq("g3", "0", "5"), Seq("g4", "7", "0")),
+      Seq(Seq("chr1|100|150|+", "1", "2"), Seq("chr1|160|200|+", "3", "4"),
+        Seq("chr2|500|700|-", "5", "6")),
+      Seq("101", "102"), "%\n4 2 3\n1 1 5\n2 2 7\n4 1 2\n", "v"),
+    Slot(Seq("SRR003"),
+      Seq(Seq("g2", "100"), Seq("g3", "200"), Seq("g5", "300")),
+      Seq(Seq("chr1|100|150|+", "9"), Seq("chr2|500|700|-", "8")),
+      Seq("103"), "4 1 1\n1 1 9\n", "w"),
+    Slot(Seq("SRR004"),
+      Seq(Seq("g1", "11"), Seq("g5", "13")),
+      Seq(Seq("chr1|160|200|+", "4")),
+      Seq("104"), "3 1 2\n1 1 4\n3 1 6\n", "x"))
+
+  private val DefaultIds = Seq("SRP001", "SRP002")
+  val Projects: Map[String, Seq[String]] = DefaultIds.zip(Slots.map(_.samples)).toMap
 
   private def writeGz(p: Path, content: String): Unit = {
     Files.createDirectories(p.getParent)
@@ -30,8 +53,12 @@ object FixtureMirror {
   private def tsv(rows: Seq[Seq[String]]): String =
     rows.map(_.mkString("\t")).mkString("", "\n", "\n")
 
-  /** Build the mirror under `root`; returns the file:// root URL. */
-  def build(root: Path): String = {
+  /** Build the mirror under `root` with the project ids `pids` (at most
+    * three) in the project positions; returns the file:// root URL.
+    */
+  def build(root: Path, pids: Seq[String] = DefaultIds): String = {
+    require(pids.size <= Slots.size, s"at most ${Slots.size} fixture projects")
+    val projects = pids.zip(Slots)
     val human = root.resolve(Organism)
     Files.createDirectories(human)
     // homes_index: one data-source path per line (api.py:31-36)
@@ -41,21 +68,20 @@ object FixtureMirror {
     val corpusCols = Seq("rail_id", "external_id", "study", "project",
       "organism", "project_home", "file_source", "date_processed")
     val corpusRows = for {
-      (pid, samples) <- Projects.toSeq
-      (sid, i) <- samples.zipWithIndex
-    } yield Seq(s"${pid.takeRight(1)}0$i", sid, pid, pid, "Homo sapiens",
+      ((pid, slot), n) <- projects.zipWithIndex
+      (sid, i) <- slot.samples.zipWithIndex
+    } yield Seq(s"${n + 1}0$i", sid, pid, pid, "Homo sapiens",
       DSource, Dbase, "2024-01-01")
     writeGz(human.resolve(s"$DSource/metadata/sra.recount_project.MD.gz"),
       tsv(corpusCols +: corpusRows))
 
     // ---- per-project metadata (5 tag files joined on the composite key) ----
-    for ((pid, samples) <- Projects) {
-      val shard = pid.takeRight(2)
-      val base = human.resolve(s"$DSource/metadata/$shard/$pid")
-      def keys(i: Int, sid: String) = Seq(s"${pid.takeRight(1)}0$i", sid, pid)
+    for (((pid, slot), n) <- projects.zipWithIndex) {
+      val base = human.resolve(s"$DSource/metadata/${pid.takeRight(2)}/$pid")
+      def keys(i: Int, sid: String) = Seq(s"${n + 1}0$i", sid, pid)
       def rows(extra: (Int, String) => Seq[String], cols: Seq[String]): String =
         tsv((Seq("rail_id", "external_id", "study") ++ cols) +:
-          samples.zipWithIndex.map { case (sid, i) => keys(i, sid) ++ extra(i, sid) })
+          slot.samples.zipWithIndex.map { case (sid, i) => keys(i, sid) ++ extra(i, sid) })
       writeGz(base.resolve(s"$Dbase.$Dbase.$pid.MD.gz"),
         rows((i, _) => Seq(s"attr$i"), Seq("sra_attr")))
       writeGz(base.resolve(s"$Dbase.recount_project.$pid.MD.gz"),
@@ -79,40 +105,29 @@ object FixtureMirror {
     writeGz(human.resolve(s"annotations/gene_sums/human.gene_sums.G026.gtf.gz"), gtf)
     writeGz(human.resolve(s"annotations/exon_sums/human.exon_sums.G026.gtf.gz"), gtf)
 
-    // ---- gene counts (wide: gene_id + per-sample cols, ## comments) ----
-    def countsFile(dir: String, pid: String, header: Seq[String], rows: Seq[Seq[String]]): Unit =
-      writeGz(human.resolve(s"$DSource/$dir/${pid.takeRight(2)}/$pid/$Dbase.$dir.$pid.G026.gz"),
-        "##fixture counts\n" + tsv(header +: rows))
-    countsFile("gene_sums", "SRP001", Seq("gene_id", "SRR001", "SRR002"),
-      Seq(Seq("g1", "10", "20"), Seq("g2", "30", "40"), Seq("g3", "0", "5"), Seq("g4", "7", "0")))
-    countsFile("gene_sums", "SRP002", Seq("gene_id", "SRR003"),
-      Seq(Seq("g2", "100"), Seq("g3", "200"), Seq("g5", "300")))
+    for ((pid, slot) <- projects) {
+      // ---- gene and exon counts (wide: feature id + per-sample cols, ##
+      // comments; the exon id is the composite chrom|start|end|strand) ----
+      def countsFile(dir: String, key: String, rows: Seq[Seq[String]]): Unit =
+        writeGz(human.resolve(s"$DSource/$dir/${pid.takeRight(2)}/$pid/$Dbase.$dir.$pid.G026.gz"),
+          "##fixture counts\n" + tsv((key +: slot.samples) +: rows))
+      countsFile("gene_sums", "gene_id", slot.gene)
+      countsFile("exon_sums", "exon_id", slot.exon)
 
-    // ---- exon counts (composite first col chrom|start|end|strand) ----
-    countsFile("exon_sums", "SRP001", Seq("exon_id", "SRR001", "SRR002"),
-      Seq(Seq("chr1|100|150|+", "1", "2"), Seq("chr1|160|200|+", "3", "4"),
-        Seq("chr2|500|700|-", "5", "6")))
-    countsFile("exon_sums", "SRP002", Seq("exon_id", "SRR003"),
-      Seq(Seq("chr1|100|150|+", "9"), Seq("chr2|500|700|-", "8")))
-
-    // ---- junctions: ID (csv), MM (MatrixMarket), RR (10-col tsv) ----
-    def jxnPath(pid: String, ext: String) = junctionPath(root, pid, ext)
-    writeGz(jxnPath("SRP001", "ID.gz"), "rail_id\n101\n102\n")
-    writeGz(jxnPath("SRP001", "MM.gz"),
-      "%%MatrixMarket matrix coordinate integer general\n%\n4 2 3\n1 1 5\n2 2 7\n4 1 2\n")
-    val rrCols = (1 to 9).map(i => s"c$i")
-    writeGz(jxnPath("SRP001", "RR.gz"),
-      tsv((Seq("chromosome") ++ rrCols) +:
-        (1 to 4).map(r => Seq(s"chr$r") ++ rrCols.map(c => s"v$r$c"))))
-    writeGz(jxnPath("SRP002", "ID.gz"), "rail_id\n103\n")
-    writeGz(jxnPath("SRP002", "MM.gz"),
-      "%%MatrixMarket matrix coordinate integer general\n4 1 1\n1 1 9\n")
-    writeGz(jxnPath("SRP002", "RR.gz"),
-      tsv((Seq("chromosome") ++ rrCols) +:
-        (1 to 4).map(r => Seq(s"chr$r") ++ rrCols.map(c => s"w$r$c"))))
+      // ---- junctions: ID (csv), MM (MatrixMarket), RR (10-col tsv) ----
+      writeGz(junctionPath(root, pid, "ID.gz"), ("rail_id" +: slot.jxnIds).mkString("", "\n", "\n"))
+      writeGz(junctionPath(root, pid, "MM.gz"),
+        "%%MatrixMarket matrix coordinate integer general\n" + slot.mm)
+      val rrCols = (1 to 9).map(i => s"c$i")
+      val height = slot.mm.linesIterator.dropWhile(_.startsWith("%")).next().split(" ")(0).toInt
+      writeGz(junctionPath(root, pid, "RR.gz"),
+        tsv((Seq("chromosome") ++ rrCols) +:
+          (1 to height).map(r => Seq(s"chr$r") ++ rrCols.map(c => s"${slot.rrPrefix}$r$c"))))
+    }
 
     // ---- bigwig (zero-byte; content never parsed) ----
-    for ((pid, _) <- Projects; sid <- AllSamples) {
+    val allSamples = projects.flatMap(_._2.samples).sorted
+    for (pid <- pids; sid <- allSamples) {
       val p = human.resolve(
         s"$DSource/base_sums/${pid.takeRight(2)}/$pid/${sid.takeRight(2)}/$Dbase.base_sums.${pid}_$sid.ALL.bw")
       Files.createDirectories(p.getParent)
@@ -135,6 +150,18 @@ object FixtureMirror {
     writeGz(junctionPath(root, "SRP001", "ID.gz"), "rail_id\n102\n099\n101\n")
     writeGz(junctionPath(root, "SRP001", "MM.gz"),
       "%%MatrixMarket matrix coordinate integer general\n4 3 3\n1 1 5\n2 3 7\n4 1 2\n")
+    url
+  }
+
+  /** [[build]], except that SRP002's `recount_qc` file has one column more
+    * (`extra_qc`) than SRP001's: a tag whose header differs by project.
+    */
+  def buildWithExtraQcColumn(root: Path): String = {
+    val url = build(root)
+    writeGz(root.resolve(s"$Organism/$DSource/metadata/02/SRP002/$Dbase.recount_qc.SRP002.MD.gz"),
+      tsv(Seq(Seq("rail_id", "external_id", "study", "star.all_mapped_reads",
+        "star.average_mapped_length", "avg_len", "extra_qc"),
+        Seq("200", "SRR003", "SRP002", "1000", "200", "100", "q"))))
     url
   }
 }

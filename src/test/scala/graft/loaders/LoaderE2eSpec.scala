@@ -2,6 +2,12 @@ package graft.loaders
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.PivotFirst
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.{FixtureMirror, SparkSpec}
@@ -28,6 +34,28 @@ class LoaderE2eSpec extends SparkSpec {
     spark, corpus, FixtureMirror.Dbase, FixtureMirror.Organism,
     annotation = Some(Annotation.GencodeV26), jxnFormat = Some("unique"),
     rootUrl = rootUrl, mirrorRoot = mirrorDir)
+
+  /** A project over a fresh mirror that `build` writes under `dir`, its
+    * corpus metadata loaded from that mirror and every dtype cached.
+    */
+  private def mirrorProject(dir: java.nio.file.Path, build: java.nio.file.Path => String): Project = {
+    val url = build(dir.resolve("src"))
+    val cache = dir.resolve("cache")
+    val m = new Metadata(spark, FixtureMirror.Organism, url, cache)
+    m.cache()
+    val p = new Project(spark, m.load(), FixtureMirror.Dbase, FixtureMirror.Organism,
+      annotation = Some(Annotation.GencodeV26), jxnFormat = Some("unique"),
+      rootUrl = url, mirrorRoot = cache)
+    p.cache(Dtype.all)
+    p
+  }
+
+  /** Three projects: a prefix pair (BLOOD, BLOOD_VESSEL) and an id that
+    * contains a junction file kind (KIDNEY holds "ID"); KIDNEY's junction
+    * matrix is one row shorter than the others'.
+    */
+  private lazy val tissues = mirrorProject(fixtureDir("graft-mirror-tissues"),
+    FixtureMirror.build(_, Seq("BLOOD", "BLOOD_VESSEL", "KIDNEY")))
 
   test("corpus metadata: discover -> cache -> load, organism replaced, distinct") {
     assert(corpus.columns.length == 8)
@@ -149,6 +177,81 @@ class LoaderE2eSpec extends SparkSpec {
       assert(wide.collect().toSeq.map(_.toSeq) == Seq(
         Seq(5L, 0L, 0L, 9L), Seq(0L, 0L, 7L, 0L), Seq(0L, 0L, 0L, 0L), Seq(2L, 0L, 0L, 0L)))
     }
+  }
+
+  test("project metadata: a tag whose header differs by project is null-filled") {
+    Writers.withScratchDir(spark, "graft-mirror-extra-qc") { dir =>
+      val md = mirrorProject(Paths.get(dir), FixtureMirror.buildWithExtraQcColumn).loadMetadata()
+      assert(md.columns.length == 12)
+      assert(md.count() == 3)
+      val extra = md.select("external_id", "extra_qc").collect()
+        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(extra == Map("SRR001" -> None, "SRR002" -> None, "SRR003" -> Some("q")))
+    }
+  }
+
+  test("project files match by directory: prefix pair and an id holding ID, metadata and counts") {
+    assert(tissues.projectIds == List("BLOOD", "BLOOD_VESSEL", "KIDNEY"))
+    val md = tissues.loadMetadata()
+    assert(md.columns.length == 11)
+    assert(md.select("external_id", "project", "study").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet == Set(
+        ("SRR001", "BLOOD", "BLOOD"), ("SRR002", "BLOOD", "BLOOD"),
+        ("SRR003", "BLOOD_VESSEL", "BLOOD_VESSEL"), ("SRR004", "KIDNEY", "KIDNEY")))
+    val (_, gene) = tissues.loadGene()
+    assert(gene.columns.toSeq == Seq("gene_id", "SRR001", "SRR002", "SRR003", "SRR004"))
+    val g5 = gene.filter(col("gene_id") === "g5").collect()(0)
+    assert(g5.isNullAt(1) && g5.getLong(3) == 300L && g5.getLong(4) == 13L)
+    val (_, exon) = tissues.loadExon()
+    assert(exon.filter(col("start") === "160").select("SRR001", "SRR004").collect()(0)
+      .toSeq == Seq(3L, 4L))
+  }
+
+  test("project files match by directory: prefix pair and an id holding ID, junctions and bigwigs") {
+    val (long, meta) = tissues.loadJxnLong()
+    assert(long.count() == 6) // 3 + 1 + 2 entries
+    assert(meta.groupBy("project_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("BLOOD" -> 4L, "BLOOD_VESSEL" -> 4L, "KIDNEY" -> 3L))
+    val (wide, _) = tissues.loadJxn()
+    assert(wide.columns.toSeq == Seq("101", "102", "103", "104"))
+    // KIDNEY's MM has 3 rows: its column is null in row 4, not zero
+    assert(wide.collect().toSeq.map(_.toSeq) == Seq(
+      Seq(5L, 0L, 9L, 4L), Seq(0L, 7L, 0L, 0L), Seq(0L, 0L, 0L, 6L), Seq(2L, 0L, 0L, null)))
+    val bw = tissues.loadBw().collect()
+    assert(bw.length == 12) // 3 projects x 4 samples
+    assert(bw.forall(r => r.getString(1).contains(s"/${r.getString(0)}/")))
+  }
+
+  /** (file scans, joins) of the executed project-metadata plan and the
+    * pivots and aggregates of the wide junction plan, each run once.
+    */
+  private def planShape(p: Project): (Int, Int, Int, Int) = {
+    object Plans extends AdaptiveSparkPlanHelper
+    // the operators of `plan`, through any cached relation it reads
+    def ops(plan: SparkPlan): Seq[SparkPlan] = Plans.flatMap(plan) {
+      case m: InMemoryTableScanExec => ops(m.relation.cachedPlan)
+      case o => Seq(o)
+    }
+    val md = p.loadMetadataUncached()
+    md.collect()
+    val mdOps = ops(md.queryExecution.executedPlan)
+    val (wide, _) = p.loadJxn()
+    val aggs = wide.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+    (mdOps.count(_.isInstanceOf[FileSourceScanExec]),
+      mdOps.count(_.isInstanceOf[BaseJoinExec]),
+      aggs.count(_.aggregateExpressions.exists(_.exists(_.isInstanceOf[PivotFirst]))),
+      aggs.size)
+  }
+
+  test("plan shape does not grow with the number of projects") {
+    project.cache(Seq(Dtype.Metadata, Dtype.Jxn))
+    val tags = Dtype.tags(Dtype.Metadata, FixtureMirror.Dbase).size
+    val two = planShape(project)
+    val three = planShape(tissues)
+    assert(two._1 == tags && two._2 == tags - 1, s"project metadata scans, joins: $two")
+    assert(two._3 == 1, s"wide junction pivots: $two")
+    assert(two == three)
   }
 
   test("bw catalog: project x sample rows, content never read") {
