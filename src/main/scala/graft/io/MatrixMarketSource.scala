@@ -4,6 +4,8 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -46,13 +48,13 @@ object MatrixMarketSource {
     StructField("value", LongType, nullable = false)))
 
   /** DataFrameReader passes one path as "path", several as a JSON list
-    * under "paths".
+    * under "paths" (written by Jackson, so read back by Jackson: a path
+    * may hold commas, quotes or backslashes).
     */
   private def paths(props: JMap[String, String]): Seq[String] = {
     val m = props.asScala
     val multi = m.get("paths").toSeq.flatMap(
-      _.stripPrefix("[").stripSuffix("]").split(",")
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
+      new ObjectMapper().readValue(_, classOf[Array[String]]).toSeq)
     val single = m.get("path").toSeq
     val all = (multi ++ single).distinct
     require(all.nonEmpty, "matrixmarket source requires at least one path")

@@ -8,7 +8,8 @@ import graft.model.{Annotation, Dtype}
   */
 object Locators {
 
-  private def join(parts: String*): String =
+  /** URL path join: empty parts dropped, one `/` between the rest. */
+  private[locate] def join(parts: String*): String =
     parts.filter(_.nonEmpty).map(_.stripSuffix("/")).mkString("/")
 
   /** Shard directory = last two characters of the id (locator.py:70). */
@@ -41,8 +42,7 @@ final case class ProjectLocator(
   require(!(dtype == Dtype.Bw && sample.isEmpty),
     s"`sample` is required when `dtype` is ${Dtype.Bw}")
 
-  private def join(parts: String*): String =
-    parts.filter(_.nonEmpty).map(_.stripSuffix("/")).mkString("/")
+  import Locators.join
 
   private def projectBase: String =
     join(rootOrganismUrl, dataSources(dbase), dtype.tag)

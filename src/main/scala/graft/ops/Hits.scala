@@ -55,9 +55,17 @@ object Hits {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).persist()
+    try {
     val nEdges = e.count()
+    // no edges: no hubs and no authorities, the empty frames
+    if (nEdges == 0L) {
+      val none = edges.limit(0)
+      return (none.select(col("src").as("node"), lit(0L).as("hub")),
+        none.select(col("dst").as("node"), lit(0L).as("auth")))
+    }
     IterConf.scoped(edges.sparkSession, nEdges) {
     val hubNodes = e.select(col("src").as("node")).distinct().persist()
+    try {
     // r14: hub count and the per-half-step L1 totals fold to the driver
     // as ONE long each (the KMeans bounded-collect rule) — the former
     // 1-row-agg crossJoin(broadcast(...)) built a broadcast exchange
@@ -92,10 +100,10 @@ object Hits {
         .localCheckpoint()
       hraw.unpersist()
     }
-    e.unpersist()
-    hubNodes.unpersist()
     (hubs, auths)
+    } finally hubNodes.unpersist()
     }
+    } finally e.unpersist()
   }
 
   /** The DuckDB mirror of [[run]] as unrolled CTE layers generated from

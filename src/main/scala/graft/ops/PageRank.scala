@@ -56,10 +56,16 @@ object PageRank {
     // round-loop partitions (IterConf.scoped)
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).persist()
+    try {
     val nEdges = e.count()
+    // no edges, no nodes: the empty (node, rank) frame, as the DuckDB
+    // mirror yields no rows over an empty `deg`
+    if (nEdges == 0L)
+      return edges.select(col("src").as("node"), lit(0L).as("rank")).limit(0)
     IterConf.scoped(edges.sparkSession, nEdges) {
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .select(col("src").as("node"), col("outdeg")).persist()
+    try {
     // r14: node count folded to the driver as ONE long (the KMeans
     // bounded-collect rule — a count, not a corpus collect), so the
     // per-node constants (init rank, teleport) become LITERALS instead
@@ -89,10 +95,10 @@ object PageRank {
             s"+ (($dampingNum * coalesce(inflow, 0L)) div $dampingDen) AS rank")
         .localCheckpoint()
     }
-    e.unpersist()
-    deg.unpersist()
     state.select("node", "rank")
+    } finally deg.unpersist()
     }
+    } finally e.unpersist()
   }
 
   /** PERSONALIZED PageRank (random walk with restart): identical

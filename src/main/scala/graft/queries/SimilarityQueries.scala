@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
@@ -14,11 +14,26 @@ import graft.functions.VecFns._
   * 2^8-bucket random-hyperplane signature, so the join is bucket-local
   * instead of all-pairs). Vectors are L2-normalized in a linear pre-pass
   * so every pairwise cosine is one dot product.
+  *
+  * Every tier is the same filter-then-verify search: an index proposes
+  * candidates (a bucket, the probed clusters, a quantized score's top-C)
+  * and an exact cosine verifies them. Each step has one definition
+  * below — [[pairs]]/[[clusterPairs]] propose, [[probe]] picks the
+  * clusters, [[topC]] cuts an approximate score, [[top3]] ranks the
+  * verified cosines, [[recall]] scores a tier against the exact answer —
+  * and the rows compose them.
   */
 object SimilarityQueries {
 
   /** Radius threshold for the s20/s21 range-search pair (cosine ≥ τ). */
   private val RangeTau = 0.3
+
+  /** Candidate pool per query before an exact rerank (s04, s05, s18, s24). */
+  private val RerankC = 10
+
+  /** PQ geometry: the 64-dim vector splits into M subvectors of SubDim. */
+  private val PqM = 4
+  private val PqSubDim = 16
 
   /** The SHARED memoized normalized-vector frame (Quantizer.vecsNorm,
     * built once per (session, dir), widened, persisted, attributed as
@@ -33,69 +48,226 @@ object SimilarityQueries {
   private def vecsNorm(s: SparkSession, dir: String): DataFrame =
     Quantizer.vecsNorm(s, dir)
 
-  /** Per-label spherical centroids: order-independent elementwise mean
-    * via DECIMAL sums — ONE label-keyed aggregate carrying 64 decimal
-    * accumulators + a count, assembled into the centroid array in a
-    * projection (an earlier posexplode form shuffled 64× the rows on
-    * (label, pos) and needed a second shuffle to re-collect the array;
-    * decimal sums are exact, so values are bit-identical either way).
-    * Shared by s03 (nprobe=1 search) and s10 (the nprobe sweep).
+  /** Elementwise mean of the `dim`-long arrays in `vec` per `keys` group,
+    * as the array column `out`: ONE keyed aggregate carrying `dim`
+    * decimal accumulators + a count, assembled into the array in a
+    * projection (an earlier posexplode form shuffled `dim`× the rows on
+    * (key, pos) and needed a second shuffle to re-collect the array;
+    * decimal sums are exact and order-independent, so values are
+    * bit-identical either way and replay in the oracle). The keys are
+    * re-aliased, so a frame built from `df` can join `df` unambiguously.
     */
-  private def ivfCentroids(v: DataFrame): DataFrame = {
-    val sums = (0 until LshDim).map(d =>
-      sum(element_at(col("e"), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
-    v.groupBy(col("label"))
+  private def meanVecs(df: DataFrame, keys: Seq[String], vec: String, dim: Int,
+      out: String): DataFrame = {
+    val sums = (0 until dim).map(d =>
+      sum(element_at(col(vec), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
+    df.groupBy(keys.map(col): _*)
       .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-      .select(col("label").as("c_label"),
-        array((0 until LshDim).map(d =>
-          col(s"s$d").cast(DoubleType) / col("n")): _*).as("c"))
+      .select(keys.map(k => col(k).as(k)) :+ array((0 until dim).map(d =>
+        col(s"s$d").cast(DoubleType) / col("n")): _*).as(out): _*)
   }
 
-  private def topk(q: DataFrame, c: DataFrame, joinCond: org.apache.spark.sql.Column): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-    q.join(c, joinCond)
+  /** Per-label spherical centroids (label, c): the coarse quantizer of
+    * the label-IVF tiers (s03, s10, s13, s18, s23, s24).
+    */
+  private def ivfCentroids(v: DataFrame): DataFrame =
+    meanVecs(v, Seq("label"), "e", LshDim, "c")
+
+  /** The pair conditions of the all-pairs and bucketed tiers, over
+    * frames aliased "q" (queries) and "c" (corpus).
+    */
+  private val notSelf: Column = col("q.vec_id") =!= col("c.vec_id")
+  private val sameBucket: Column = col("q.bucket") === col("c.bucket") && notSelf
+
+  /** Exact cosine of every (query, corpus) pair `cond` admits:
+    * (vec_id, e) frames → (query_id, neighbor_id, c).
+    */
+  private def pairs(q: DataFrame, c: DataFrame, cond: Column): DataFrame =
+    q.as("q").join(c.as("c"), cond)
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
         dotSeq(col("q.e"), col("c.e")).as("c"))
-      .withColumn("rank", row_number().over(w))
+
+  /** The verified top-3 per query, ties to the lower neighbor id:
+    * (query_id, neighbor_id, c) → (query_id, rank, neighbor_id, cos).
+    */
+  private def top3(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
-      .orderBy("query_id", "rank")
   }
+
+  /** The `nprobe` best centroids per query by dot product, ties to the
+    * lower key: queries (vec_id, e) × the broadcast centroids (key, c) →
+    * (query_id, key). The coarse probe of every IVF tier.
+    */
+  private def probe(q: DataFrame, cent: DataFrame, key: String, nprobe: Int = 1): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(desc("d"), col(key))
+    val c = broadcast(cent)
+    // c(key): the centroid's key, even when `q` carries a same-named column
+    q.crossJoin(c)
+      .select(col("vec_id").as("query_id"), c(key), dotSeq(col("e"), col("c")).as("d"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= nprobe)
+      .select(col("query_id"), col(key))
+  }
+
+  /** Candidates inside the probed clusters: `best` (query_id, key) ⋈ the
+    * query vectors ⋈ the cluster members (key, vec_id, e) on the key,
+    * self excluded, scored by exact cosine → (query_id, neighbor_id, c).
+    * Every step is an equi-join, so the scan touches only probed members.
+    */
+  private def clusterPairs(best: DataFrame, queries: DataFrame, members: DataFrame,
+      key: String): DataFrame =
+    exactCosine(best
+      .join(queries.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
+      .join(members.select(col(key), col("vec_id").as("neighbor_id"),
+        col("e").as("ce")), key)
+      .filter(col("neighbor_id") =!= col("query_id")))
+
+  /** (query_id, neighbor_id, qe, ce) → (query_id, neighbor_id, c). */
+  private def exactCosine(p: DataFrame): DataFrame =
+    p.select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
+
+  /** The [[RerankC]] best candidates per query by an approximate `score`,
+    * ties to the lower neighbor id: only these pay the exact cosine.
+    */
+  private def topC(cand: DataFrame, score: String): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(desc(score), col("neighbor_id"))
+    cand.withColumn("crank", row_number().over(w)).filter(col("crank") <= RerankC)
+  }
+
+  /** The postings of the probed clusters only, from a `key`-partitioned
+    * artifact. STATIC partition pruning from the query-batch-sized probe
+    * set: the distinct probed keys are bounded by min(|queries|, nlist) —
+    * a driver-safe collect (the d13 tiny-collect pattern) whose IN filter
+    * prunes the postings LISTING itself (measured: only the probed key=
+    * dirs are opened; DPP against a checkpoint-backed probe frame planned
+    * but did not prune — the unbounded-probe-set swap-in is the
+    * filtered-scan DPP join PersistedIndexSpec pins). An empty probe set
+    * makes the IN list empty, false-for-all, and `best` is itself empty,
+    * so the serve join yields the correct empty frame (PersistedIndexSpec
+    * pins the empty-isin semantics this relies on).
+    */
+  private def probedPostings(s: SparkSession, path: String, best: DataFrame,
+      key: String): DataFrame = {
+    val probed = best.select(key).distinct().collect().map(_.get(0))
+    s.read.parquet(path).where(col(key).isin(probed: _*))
+  }
+
+  /** PQ sub-vector split: (vec_id, label, m, sub, b), one row per
+    * subspace m, b its sign-LSH code. localCheckpoint: the codebook, the
+    * LUT and the code table all read it — without materialization the
+    * normalize + subspace-LSH subtree is re-evaluated per reference (~3x
+    * the corpus work; measured 4.4 s -> ~2 s at sf0.1); at cluster scale
+    * this is the standard cache-the-codes step of a PQ index build.
+    */
+  private def pqSplit(v: DataFrame): DataFrame =
+    v.select(col("vec_id"), col("label"),
+        posexplode(array((0 until PqM).map(m =>
+          slice(col("e"), m * PqSubDim + 1, PqSubDim)): _*)))
+      .toDF("vec_id", "label", "m", "sub")
+      .withColumn("b", lshBucketN(col("sub"), PqSubDim))
+      .localCheckpoint()
+
+  /** Per-subspace codebook (m, b, cb): decimal-exact code-bucket means. */
+  private def pqCodebook(sub: DataFrame): DataFrame =
+    meanVecs(sub, Seq("m", "b"), "sub", PqSubDim, "cb")
+
+  /** The ADC lookup table (query_id, m, b, part): each query subvector's
+    * dot with every codebook entry of its subspace.
+    */
+  private def pqLut(sub: DataFrame, cb: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("m"), col("sub"))
+      .join(broadcast(cb), Seq("m"))
+      .select(col("query_id"), col("m"), col("b"),
+        dotSeq(col("sub"), col("cb")).as("part"))
+
+  /** ADC: codes (neighbor_id, m, b, …) ⋈ the broadcast LUT on `on`, self
+    * excluded, each pair's M looked-up parts summed IN FIXED SUBSPACE
+    * ORDER (pivoted columns — engine-identical IEEE addition) →
+    * (query_id, neighbor_id, adc).
+    */
+  private def pqAdc(codes: DataFrame, lut: DataFrame, on: Seq[String]): DataFrame = {
+    val parts = (0 until PqM).map(m =>
+      max(when(col("m") === m, col("part"))).as(s"p$m"))
+    codes.join(broadcast(lut), on)
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .groupBy("query_id", "neighbor_id")
+      .agg(parts.head, parts.tail: _*)
+      .select(col("query_id"), col("neighbor_id"),
+        (0 until PqM).map(m => col(s"p$m")).reduce(_ + _).as("adc"))
+  }
+
+  /** The PQ exact rerank: top-C by ADC, then the survivors' raw vectors
+    * from `v` and their exact cosine → (query_id, neighbor_id, c).
+    */
+  private def pqRerank(adc: DataFrame, v: DataFrame): DataFrame =
+    exactCosine(topC(adc, "adc")
+      .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
+      .join(v.select(col("vec_id").as("neighbor_id"), col("e").as("ce")), "neighbor_id"))
+
+  /** Per-query recall of an approximate answer against the exact one,
+    * both (query_id, neighbor_id, …): (query_id, n_exact, hits, recall).
+    * hits counts the per-query overlap of the two sets; queries with no
+    * exact neighbor drop out.
+    */
+  private def recall(exactRows: DataFrame, approxRows: DataFrame): DataFrame = {
+    val exact = exactRows.select(col("query_id"), col("neighbor_id"))
+    val approx = approxRows.select(col("query_id"), col("neighbor_id"))
+    val hits = exact.intersect(approx)
+      .groupBy("query_id").agg(count(lit(1)).as("hits"))
+    exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
+      .join(hits, Seq("query_id"), "left")
+      .na.fill(0L, Seq("hits"))
+      .select(col("query_id"), col("n_exact"), col("hits"),
+        round6(col("hits").cast(DoubleType) / col("n_exact")).as("recall"))
+      .orderBy("query_id")
+  }
+
+  /** Recall@3 of the tier row `approx` against the exact s01 top-3. */
+  private def recallAt3(s: SparkSession, dir: String, approx: String): DataFrame =
+    recall(queries("s01_cosine_topk")(s, dir), queries(approx)(s, dir))
 
   /** Serve top-3 neighbors from the persisted trained-quantizer
     * artifact: probe the RE-READ centroids (a tiny broadcast), prune the
-    * cid-partitioned postings LISTING to the probed clusters via the
-    * driver-safe bounded collect (the d13 tiny-collect pattern; an empty
-    * probe batch makes `probed` empty, the empty IN list is
-    * false-for-all and `best` itself is empty, so the result is the
-    * correct empty frame — PersistedIndexSpec pins the isin semantics),
-    * scan only those inverted lists, rank within each query. ONE serve
-    * implementation shared verbatim by three lifecycles: s25 (one-shot
-    * build), s26 (append-maintained artifact), s27 (every online
-    * micro-batch). `probes` must carry (vec_id, e) with e L2-normalized.
+    * cid-partitioned postings LISTING to the probed clusters
+    * ([[probedPostings]]), scan only those inverted lists, rank within
+    * each query. ONE serve implementation shared verbatim by four
+    * lifecycles: s25 (one-shot build), s26 (append-maintained artifact),
+    * s27 (every online micro-batch), s29 (compacted artifact). `probes`
+    * must carry (vec_id, e) with e L2-normalized.
     */
   private[graft] def serveQuantizerArtifact(s: SparkSession, centRe: DataFrame,
       postingsPath: String, probes: DataFrame): DataFrame = {
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("cid"))
-    val best = probes.crossJoin(broadcast(centRe))
-      .select(col("vec_id").as("query_id"), col("cid"),
-        dotSeq(col("e"), col("c")).as("d"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("cid"))
-    val probed = best.select("cid").distinct().collect().map(_.get(0))
-    val post = s.read.parquet(postingsPath)
-      .where(col("cid").isin(probed: _*))
-    val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-    best
-      .join(probes.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-      .join(post.select(col("cid"), col("vec_id").as("neighbor_id"),
-        col("e").as("ce")), "cid")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
+    val best = probe(probes, centRe, "cid")
+    top3(clusterPairs(best, probes, probedPostings(s, postingsPath, best, "cid"), "cid"))
+  }
+
+  /** The trained index's build + maintenance steps (s26, s29): write the
+    * frozen quantizer and the BASE postings (vec_id % 5 != 0) under cid=
+    * partitions, then assign the DELTA batch (the held-out fifth, arriving
+    * raw with no cid) against the RE-READ centroid artifact — one
+    * broadcast-fold projection over the delta only — and APPEND it as new
+    * files under the existing cid= dirs (mode=append adds files, touches
+    * nothing). Returns the re-read centroids.
+    */
+  private def buildAndAppend(s: SparkSession, cent0: DataFrame, asg0: DataFrame,
+      tmp: String): DataFrame = {
+    graft.io.Writers.parquet(cent0, s"$tmp/centroids")
+    graft.io.Writers.parquetPartitioned(
+      asg0.filter(col("vec_id") % 5 =!= 0)
+        .select(col("vec_id"), col("e"), col("cid")),
+      s"$tmp/postings", Seq("cid"), targetFileCount = 4)
+    val centRe = s.read.parquet(s"$tmp/centroids")
+    val delta = asg0.filter(col("vec_id") % 5 === 0)
+      .select(col("vec_id"), col("e"))
+    graft.io.Writers.parquetPartitioned(
+      graft.ops.KMeans.assign(delta, centRe)
+        .select(col("vec_id"), col("e"), col("cid")),
+      s"$tmp/postings", Seq("cid"), targetFileCount = 4, mode = "append")
+    centRe
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -103,9 +275,8 @@ object SimilarityQueries {
     // the (small) query side broadcasts and the corpus is scanned once.
     "s01_cosine_topk" -> { (s, dir) =>
       val v = vecsNorm(s, dir)
-      val q = broadcast(v.filter(col("vec_id") < 10)).as("q")
-      val c = v.as("c")
-      topk(q, c, col("q.vec_id") =!= col("c.vec_id"))
+      top3(pairs(broadcast(v.filter(col("vec_id") < 10)), v, notSelf))
+        .orderBy("query_id", "rank")
     },
 
     // Sign-LSH bucketed top-k: bucket = 8-bit signature of hyperplane dot
@@ -113,10 +284,8 @@ object SimilarityQueries {
     // of a cross product.
     "s02_lsh_topk" -> { (s, dir) =>
       val v = vecsNorm(s, dir).withColumn("bucket", lshBucket(col("e")))
-      val q = v.filter(col("vec_id") < 10).as("q")
-      val c = v.as("c")
-      topk(q, c,
-        col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
+      top3(pairs(v.filter(col("vec_id") < 10), v, sameBucket))
+        .orderBy("query_id", "rank")
     },
 
     // Scalar-quantization (SQ8) top-k: the compression tier of the ANN
@@ -133,7 +302,6 @@ object SimilarityQueries {
     // row; candidate scoring is one corpus scan; rerank touches C rows
     // per query.
     "s04_sq8_topk" -> { (s, dir) =>
-      val C = 10 // candidate pool per query before exact rerank
       val v = Tables(s, dir, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("x"),
           l2normalize(toDouble(col("embedding"))).as("e"))
@@ -149,21 +317,11 @@ object SimilarityQueries {
         zip_with(col("mxs"), col("mns"), (mx, mn) => mx - mn),
         (xd, r) => least(lit(255L), greatest(lit(0L), floor(xd / r * 255.0))).cast(DoubleType))
       val qv = v.crossJoin(broadcast(stats)).select(col("vec_id"), col("e"), quant.as("q"))
-      val probe = broadcast(qv.filter(col("vec_id") < 10)).as("q")
-      val corpus = qv.as("c")
-      val wCand = Window.partitionBy("query_id").orderBy(desc("qscore"), col("neighbor_id"))
-      val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-      probe.join(corpus, col("q.vec_id") =!= col("c.vec_id"))
+      val cand = broadcast(qv.filter(col("vec_id") < 10)).as("q").join(qv.as("c"), notSelf)
         .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
           dotSeq(col("q.q"), col("c.q")).as("qscore"),
           col("q.e").as("qe"), col("c.e").as("ce"))
-        .withColumn("crank", row_number().over(wCand))
-        .filter(col("crank") <= C)
-        .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
-        .orderBy("query_id", "rank")
+      top3(exactCosine(topC(cand, "qscore"))).orderBy("query_id", "rank")
     },
 
     // Product-quantization (PQ) top-k — the 5th ANN tier (brute s01,
@@ -177,59 +335,16 @@ object SimilarityQueries {
     // a vector's resident footprint is M code ids (4 bytes vs 256: the
     // PQ compression story at 100 TB). Query scoring is ADC (asymmetric
     // distance computation): one tiny LUT of query-subvector x codebook
-    // dots, candidates sum their M looked-up parts IN FIXED SUBSPACE
-    // ORDER (pivoted columns — engine-identical IEEE addition), top-C by
-    // ADC, exact-cosine rerank of the C survivors only. Scale shape:
+    // dots, candidates sum their M looked-up parts, top-C by ADC,
+    // exact-cosine rerank of the C survivors only. Scale shape:
     // codebook + LUT broadcast; the candidate pass scans codes, not
     // vectors.
     "s05_pq_topk" -> { (s, dir) =>
-      val M = 4
-      val SubDim = 16
-      val C = 10
-      // localCheckpoint: cb, the LUT, and the code table all read `sub`,
-      // and the rerank reads `v` twice — without materialization the
-      // normalize + subspace-LSH subtree is re-evaluated per reference
-      // (~3x the corpus work; measured 4.4 s -> ~2 s at sf0.1). Both
-      // frames are corpus-row-sized but narrow; at cluster scale this is
-      // the standard cache-the-codes step of a PQ index build.
+      // localCheckpoint: the rerank reads `v` twice (see pqSplit)
       val v = vecsNorm(s, dir).localCheckpoint()
-      val sub = v.select(col("vec_id"),
-          posexplode(array((0 until M).map(m =>
-            slice(col("e"), m * SubDim + 1, SubDim)): _*)))
-        .toDF("vec_id", "m", "sub")
-        .withColumn("b", lshBucketN(col("sub"), SubDim))
-        .localCheckpoint()
-      val sums = (0 until SubDim).map(d =>
-        sum(element_at(col("sub"), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
-      val cb = sub.groupBy("m", "b")
-        .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("m"), col("b"),
-          array((0 until SubDim).map(d =>
-            col(s"s$d").cast(DoubleType) / col("n")): _*).as("cb"))
-      val lut = sub.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-        .join(broadcast(cb), Seq("m"))
-        .select(col("query_id"), col("m"), col("b"),
-          dotSeq(col("sub"), col("cb")).as("part"))
+      val sub = pqSplit(v)
       val codes = sub.select(col("vec_id").as("neighbor_id"), col("m"), col("b"))
-      val parts = (0 until M).map(m =>
-        max(when(col("m") === m, col("part"))).as(s"p$m"))
-      val adc = codes.join(broadcast(lut), Seq("m", "b"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(parts.head, parts.tail: _*)
-        .select(col("query_id"), col("neighbor_id"),
-          (0 until M).map(m => col(s"p$m")).reduce(_ + _).as("adc"))
-      val wCand = Window.partitionBy("query_id").orderBy(desc("adc"), col("neighbor_id"))
-      val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-      adc.withColumn("crank", row_number().over(wCand))
-        .filter(col("crank") <= C)
-        .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-        .join(v.select(col("vec_id").as("neighbor_id"), col("e").as("ce")), "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
+      top3(pqRerank(pqAdc(codes, pqLut(sub, pqCodebook(sub)), Seq("m", "b")), v))
         .orderBy("query_id", "rank")
     },
 
@@ -237,59 +352,19 @@ object SimilarityQueries {
     // brute-force answer — the metric every approximate index reports,
     // as an oracle row (the t11 pattern applied to similarity). Both
     // inputs are the already-pinned s01/s02 queries, so this also pins
-    // their COMPOSITION; hits counts the per-query overlap of the two
-    // top-3 sets. Bucket collisions make some queries lose neighbors —
-    // that loss is exactly what this row measures and freezes.
-    "s06_lsh_recall" -> { (s, dir) =>
-      val exact = queries("s01_cosine_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = queries("s02_lsh_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.intersect(approx)
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-        .join(hits, Seq("query_id"), "left")
-        .na.fill(0L, Seq("hits"))
-        .select(col("query_id"), col("n_exact"), col("hits"),
-          round6(col("hits").cast(DoubleType) / col("n_exact")).as("recall"))
-        .orderBy("query_id")
-    },
+    // their COMPOSITION. Bucket collisions make some queries lose
+    // neighbors — that loss is exactly what this row measures and freezes.
+    "s06_lsh_recall" -> { (s, dir) => recallAt3(s, dir, "s02_lsh_topk") },
 
     // Recall@3 of the PQ tier vs exact — completes the evaluation
     // matrix (s06 bucketed, s07 clustered, s08 quantized): PQ loses
     // neighbors to codebook quantization error, the loss this freezes.
-    "s08_pq_recall" -> { (s, dir) =>
-      val exact = queries("s01_cosine_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = queries("s05_pq_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.intersect(approx)
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-        .join(hits, Seq("query_id"), "left")
-        .na.fill(0L, Seq("hits"))
-        .select(col("query_id"), col("n_exact"), col("hits"),
-          round6(col("hits").cast(DoubleType) / col("n_exact")).as("recall"))
-        .orderBy("query_id")
-    },
+    "s08_pq_recall" -> { (s, dir) => recallAt3(s, dir, "s05_pq_topk") },
 
     // Recall@3 of the IVF tier vs exact — the s06 pattern for the
     // clustered index: IVF misses exactly the true neighbors living
     // outside the probed cluster, and this row freezes that loss.
-    "s07_ivf_recall" -> { (s, dir) =>
-      val exact = queries("s01_cosine_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = queries("s03_ivf_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.intersect(approx)
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-        .join(hits, Seq("query_id"), "left")
-        .na.fill(0L, Seq("hits"))
-        .select(col("query_id"), col("n_exact"), col("hits"),
-          round6(col("hits").cast(DoubleType) / col("n_exact")).as("recall"))
-        .orderBy("query_id")
-    },
+    "s07_ivf_recall" -> { (s, dir) => recallAt3(s, dir, "s03_ivf_topk") },
 
     // IVF-style top-k: coarse quantizer = per-label spherical centroids
     // (elementwise decimal-exact mean of normalized vectors), probe the
@@ -300,26 +375,8 @@ object SimilarityQueries {
     // and s12 puts their recall side by side.
     "s03_ivf_topk" -> { (s, dir) =>
       val v = vecsNorm(s, dir) // shared memo carries (vec_id, label, e)
-      val centroids = ivfCentroids(v)
-      val q = v.filter(col("vec_id") < 10)
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("c_label"))
-      val best = q.crossJoin(broadcast(centroids))
-        .select(col("vec_id").as("query_id"), col("c_label"),
-          dotSeq(col("e"), col("c")).as("d"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("c_label").as("best_label"))
-      val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-      best
-        .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-        .join(v.select(col("label").as("best_label"), col("vec_id").as("neighbor_id"),
-          col("e").as("ce")), "best_label")
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
-        .orderBy("query_id", "rank")
+      val best = probe(v.filter(col("vec_id") < 10), ivfCentroids(v), "label")
+      top3(clusterPairs(best, v, v, "label")).orderBy("query_id", "rank")
     },
 
     // The IVF nprobe SWEEP — the d12/d15 "measure the knob" pattern for
@@ -334,14 +391,14 @@ object SimilarityQueries {
     "s10_ivf_nprobe" -> { (s, dir) =>
       val probes = Seq(1, 2, 4)
       val v = vecsNorm(s, dir) // shared memo carries (vec_id, label, e)
-      val q = v.filter(col("vec_id") < 10)
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("c_label"))
+      val q = v.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
+      val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("label"))
       val ranked = q.crossJoin(broadcast(ivfCentroids(v)))
-        .select(col("vec_id").as("query_id"), col("c_label"),
+        .select(col("vec_id").as("query_id"), col("label"),
           dotSeq(col("e"), col("c")).as("d"))
         .withColumn("rn", row_number().over(wProbe))
       val probed = ranked
-        .select(col("query_id"), col("c_label").as("label"), col("rn"),
+        .select(col("query_id"), col("label"), col("rn"),
           explode(array(probes.map(lit(_)): _*)).as("p"))
         .filter(col("rn") <= col("p"))
         .select(col("p"), col("query_id"), col("label"))
@@ -385,26 +442,9 @@ object SimilarityQueries {
     // inverted-list index, built once per session).
     "s11_kmeans_topk" -> { (s, dir) =>
       val asg = Quantizer.assignments(s, dir) // (vec_id, e, cid)
-      val cent = Quantizer.centroids(s, dir) // (cid, c)
       val q = asg.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("cid"))
-      val best = q.crossJoin(broadcast(cent))
-        .select(col("vec_id").as("query_id"), col("cid"),
-          dotSeq(col("e"), col("c")).as("d"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("cid"))
-      val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-      best
-        .join(asg.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-        .join(asg.select(col("cid"), col("vec_id").as("neighbor_id"),
-          col("e").as("ce")), "cid")
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
-        .orderBy("query_id", "rank")
+      val best = probe(q, Quantizer.centroids(s, dir), "cid")
+      top3(clusterPairs(best, asg, asg, "cid")).orderBy("query_id", "rank")
     },
 
     // Label-IVF vs kmeans-IVF, judged by recall@3 against the exact
@@ -474,28 +514,8 @@ object SimilarityQueries {
     // cost is proportional to SURVIVING members of probed clusters.
     "s13_filtered_ann" -> { (s, dir) =>
       val v = vecsNorm(s, dir) // shared memo carries (vec_id, label, e)
-      val centroids = ivfCentroids(v)
-      val q = v.filter(col("vec_id") < 10)
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("c_label"))
-      val probes = q.crossJoin(broadcast(centroids))
-        .select(col("vec_id").as("query_id"), col("c_label"),
-          dotSeq(col("e"), col("c")).as("d"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 2)
-        .select(col("query_id"), col("c_label").as("probe_label"))
-      val filtered = v.filter(col("label") % 2 === 0)
-      val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-      probes
-        .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-        .join(filtered.select(col("label").as("probe_label"),
-          col("vec_id").as("neighbor_id"), col("e").as("ce")), "probe_label")
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          dotSeq(col("qe"), col("ce")).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round6(col("c")).as("cos"))
+      val probes = probe(v.filter(col("vec_id") < 10), ivfCentroids(v), "label", nprobe = 2)
+      top3(clusterPairs(probes, v, v.filter(col("label") % 2 === 0), "label"))
         .orderBy("query_id", "rank")
     },
 
@@ -532,29 +552,13 @@ object SimilarityQueries {
         (0 until LshPlanes).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)
       val q = v.filter(col("vec_id") < 10)
         .select(col("vec_id"), col("e"), explode(probes).as("bucket"))
-        .as("q")
-      val c = v.as("c")
-      topk(q, c,
-        col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
+      top3(pairs(q, v, sameBucket)).orderBy("query_id", "rank")
     },
 
     // Recall@3 of the multi-probe tier vs exact — beside s06 (single-
     // probe), the measured answer to "what did the 9× probe fan-out
     // buy": the s06/s07/s08 evaluation pattern.
-    "s17_mplsh_recall" -> { (s, dir) =>
-      val exact = queries("s01_cosine_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = queries("s16_mplsh_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.intersect(approx)
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-        .join(hits, Seq("query_id"), "left")
-        .na.fill(0L, Seq("hits"))
-        .select(col("query_id"), col("n_exact"), col("hits"),
-          round6(col("hits").cast(DoubleType) / col("n_exact")).as("recall"))
-        .orderBy("query_id")
-    },
+    "s17_mplsh_recall" -> { (s, dir) => recallAt3(s, dir, "s16_mplsh_topk") },
 
     // LSH INDEX BALANCE report — the ops question every bucketed index
     // answers before it ships: how evenly did the hash family spread
@@ -587,20 +591,16 @@ object SimilarityQueries {
       val Ks = Seq(1, 3, 5, 10)
       val v = vecsNorm(s, dir)
       val vb = v.withColumn("bucket", lshBucket(col("e")))
-      def ranked(q: DataFrame, c: DataFrame,
-          cond: org.apache.spark.sql.Column): DataFrame = {
+      // the rank-10 list the curve reads, not top3's rounded top-3
+      def ranked(q: DataFrame, c: DataFrame, cond: Column): DataFrame = {
         val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-        q.join(c, cond)
-          .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-            dotSeq(col("q.e"), col("c.e")).as("c"))
+        pairs(q, c, cond)
           .withColumn("r", row_number().over(w))
           .filter(col("r") <= 10)
           .select("query_id", "neighbor_id", "r")
       }
-      val ex = ranked(v.filter(col("vec_id") < 10).as("q"), v.as("c"),
-        col("q.vec_id") =!= col("c.vec_id"))
-      val ap = ranked(vb.filter(col("vec_id") < 10).as("q"), vb.as("c"),
-        col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
+      val ex = ranked(v.filter(col("vec_id") < 10), v, notSelf)
+      val ap = ranked(vb.filter(col("vec_id") < 10), vb, sameBucket)
       val joined = ex.withColumnRenamed("r", "er")
         .join(ap.withColumnRenamed("r", "ar"), Seq("query_id", "neighbor_id"))
       // coalesce: a degenerate EMPTY rank join must yield hits = 0 (the
@@ -634,12 +634,7 @@ object SimilarityQueries {
     // compare happens on raw bits, round6 only on display).
     "s20_range_search" -> { (s, dir) =>
       val v = vecsNorm(s, dir).withColumn("bucket", lshBucket(col("e")))
-      val q = v.filter(col("vec_id") < 10).as("q")
-      val c = v.as("c")
-      q.join(c,
-          col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-          dotSeq(col("q.e"), col("c.e")).as("c"))
+      pairs(v.filter(col("vec_id") < 10), v, sameBucket)
         .filter(col("c") >= RangeTau)
         .select(col("query_id"), col("neighbor_id"), round6(col("c")).as("cos"))
         .orderBy("query_id", "neighbor_id")
@@ -653,22 +648,8 @@ object SimilarityQueries {
     // ladder (10 queries × corpus scan, like s01).
     "s21_range_recall" -> { (s, dir) =>
       val v = vecsNorm(s, dir)
-      val q = v.filter(col("vec_id") < 10).as("q")
-      val exact = q.join(v.as("c"), col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
-          dotSeq(col("q.e"), col("c.e")).as("c"))
-        .filter(col("c") >= RangeTau)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = queries("s20_range_search")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.intersect(approx)
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-        .join(hits, Seq("query_id"), "left")
-        .na.fill(0L, Seq("hits"))
-        .select(col("query_id"), col("n_exact"), col("hits"),
-          round6(col("hits").cast(DoubleType) / col("n_exact")).as("recall"))
-        .orderBy("query_id")
+      recall(pairs(v.filter(col("vec_id") < 10), v, notSelf).filter(col("c") >= RangeTau),
+        queries("s20_range_search")(s, dir))
     },
 
     // IVF+PQ — the composed PRODUCTION index (FAISS IndexIVFPQ's
@@ -686,64 +667,17 @@ object SimilarityQueries {
     // below the coarse probe is equi-joins on (label) and
     // (query_id, m, b) against broadcast frames.
     "s18_ivfpq_topk" -> { (s, dir) =>
-      val M = 4
-      val SubDim = 16
-      val C = 10
       // the shared persisted memo replaces the former per-row
       // normalize + localCheckpoint (same multi-consumer purpose)
       val v = vecsNorm(s, dir)
-      // coarse probe: best centroid per query (s03's decimal-exact
-      // label centroids, broadcast both ways)
-      val q = v.filter(col("vec_id") < 10)
-      val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("c_label"))
-      val best = q.crossJoin(broadcast(ivfCentroids(v)))
-        .select(col("vec_id").as("query_id"), col("c_label"),
-          dotSeq(col("e"), col("c")).as("d"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("c_label").as("label"))
-      // PQ codes + codebook (s05's subspace split, kept label-tagged)
-      val sub = v.select(col("vec_id"), col("label"),
-          posexplode(array((0 until M).map(m =>
-            slice(col("e"), m * SubDim + 1, SubDim)): _*)))
-        .toDF("vec_id", "label", "m", "sub")
-        .withColumn("b", lshBucketN(col("sub"), SubDim))
-        .localCheckpoint()
-      val sums = (0 until SubDim).map(d =>
-        sum(element_at(col("sub"), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
-      val cb = sub.groupBy("m", "b")
-        .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("m"), col("b"),
-          array((0 until SubDim).map(d =>
-            col(s"s$d").cast(DoubleType) / col("n")): _*).as("cb"))
-      val lut = sub.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-        .join(broadcast(cb), Seq("m"))
-        .select(col("query_id"), col("m"), col("b"),
-          dotSeq(col("sub"), col("cb")).as("part"))
+      val best = probe(v.filter(col("vec_id") < 10), ivfCentroids(v), "label")
+      val sub = pqSplit(v)
       // ADC over the PROBED cluster only: codes equi-join the (tiny)
       // best-label frame, then the per-query LUT
       val cl = sub.select(col("vec_id").as("neighbor_id"), col("label"),
           col("m"), col("b"))
         .join(broadcast(best), "label")
-      val parts = (0 until M).map(m =>
-        max(when(col("m") === m, col("part"))).as(s"p$m"))
-      val adc = cl.join(broadcast(lut), Seq("query_id", "m", "b"))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(parts.head, parts.tail: _*)
-        .select(col("query_id"), col("neighbor_id"),
-          (0 until M).map(m => col(s"p$m")).reduce(_ + _).as("adc"))
-      val wCand = Window.partitionBy("query_id").orderBy(desc("adc"), col("neighbor_id"))
-      val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-      adc.withColumn("crank", row_number().over(wCand))
-        .filter(col("crank") <= C)
-        .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-        .join(v.select(col("vec_id").as("neighbor_id"), col("e").as("ce")), "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
+      top3(pqRerank(pqAdc(cl, pqLut(sub, pqCodebook(sub)), Seq("query_id", "m", "b")), v))
         .orderBy("query_id", "rank")
     },
 
@@ -775,39 +709,8 @@ object SimilarityQueries {
         graft.io.Writers.parquetPartitioned(
           v.select(col("vec_id"), col("e"), col("label")),
           s"$tmp/postings", Seq("label"), targetFileCount = 4)
-        val cent = s.read.parquet(s"$tmp/centroids")
-        val q = v.filter(col("vec_id") < 10)
-        val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("c_label"))
-        val best = q.crossJoin(broadcast(cent))
-          .select(col("vec_id").as("query_id"), col("c_label"),
-            dotSeq(col("e"), col("c")).as("d"))
-          .withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") === 1)
-          .select(col("query_id"), col("c_label").as("best_label"))
-        // STATIC partition pruning from the query-batch-sized probe set:
-        // the distinct best labels are bounded by min(|queries|, nlist) —
-        // a driver-safe collect (the d13 tiny-collect pattern) whose IN
-        // filter prunes the postings LISTING itself (measured: only the
-        // probed label= dirs are opened; DPP against the checkpoint-backed
-        // probe frame planned but did not prune — the unbounded-probe-set
-        // swap-in is the filtered-scan DPP join PersistedIndexSpec pins).
-        // Degenerate probe set (no query vectors → probed empty): the
-        // empty IN list evaluates false-for-all, and best is itself empty,
-        // so the serve join yields the correct empty frame
-        // (PersistedIndexSpec pins the empty-isin semantics this relies on).
-        val probed = best.select("best_label").distinct().collect().map(_.get(0))
-        val post = s.read.parquet(s"$tmp/postings")
-          .where(col("label").isin(probed: _*))
-        val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-        best
-          .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-          .join(post.select(col("label").as("best_label"),
-            col("vec_id").as("neighbor_id"), col("e").as("ce")), "best_label")
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
+        val best = probe(v.filter(col("vec_id") < 10), s.read.parquet(s"$tmp/centroids"), "label")
+        top3(clusterPairs(best, v, probedPostings(s, s"$tmp/postings", best, "label"), "label"))
           .localCheckpoint()
       }
       out.orderBy("query_id", "rank")
@@ -828,71 +731,20 @@ object SimilarityQueries {
     // results. At 100 TB the codes table is the only corpus-sized
     // artifact and it is 16× narrower than the vectors it indexes.
     "s24_ivfpq_persisted" -> { (s, dir) =>
-      val M = 4
-      val SubDim = 16
-      val C = 10
       val v = vecsNorm(s, dir) // shared persisted memo (see s23)
-      val sub = v.select(col("vec_id"), col("label"),
-          posexplode(array((0 until M).map(m =>
-            slice(col("e"), m * SubDim + 1, SubDim)): _*)))
-        .toDF("vec_id", "label", "m", "sub")
-        .withColumn("b", lshBucketN(col("sub"), SubDim))
-        .localCheckpoint()
-      val sums = (0 until SubDim).map(d =>
-        sum(element_at(col("sub"), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
-      val cbBuild = sub.groupBy("m", "b")
-        .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("m"), col("b"),
-          array((0 until SubDim).map(d =>
-            col(s"s$d").cast(DoubleType) / col("n")): _*).as("cb"))
+      val sub = pqSplit(v)
       val out = graft.io.Writers.withScratchDir(s, "s24_ivfpq") { tmp =>
         graft.io.Writers.parquet(ivfCentroids(v), s"$tmp/centroids")
-        graft.io.Writers.parquet(cbBuild, s"$tmp/codebook")
+        graft.io.Writers.parquet(pqCodebook(sub), s"$tmp/codebook")
         graft.io.Writers.parquetPartitioned(
           sub.select(col("vec_id"), col("m"), col("b"), col("label")),
           s"$tmp/codes", Seq("label"), targetFileCount = 4)
-        val cent = s.read.parquet(s"$tmp/centroids")
-        val cb = s.read.parquet(s"$tmp/codebook")
-        val q = v.filter(col("vec_id") < 10)
-        val wProbe = Window.partitionBy("query_id").orderBy(desc("d"), col("c_label"))
-        val best = q.crossJoin(broadcast(cent))
-          .select(col("vec_id").as("query_id"), col("c_label"),
-            dotSeq(col("e"), col("c")).as("d"))
-          .withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") === 1)
-          .select(col("query_id"), col("c_label").as("label"))
-        // static pruning of the codes listing from the bounded probe set
-        // (s23's pattern — only the probed label= dirs are opened; empty
-        // probe set degenerates to the correct empty frame, see s23)
-        val probed = best.select("label").distinct().collect().map(_.get(0))
-        val codes = s.read.parquet(s"$tmp/codes")
-          .where(col("label").isin(probed: _*))
-        val lut = sub.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("m"), col("sub"))
-          .join(broadcast(cb), Seq("m"))
-          .select(col("query_id"), col("m"), col("b"),
-            dotSeq(col("sub"), col("cb")).as("part"))
-        val cl = codes.select(col("vec_id").as("neighbor_id"), col("m"),
-            col("b"), col("label"))
+        val best = probe(v.filter(col("vec_id") < 10), s.read.parquet(s"$tmp/centroids"), "label")
+        val cl = probedPostings(s, s"$tmp/codes", best, "label")
+          .select(col("vec_id").as("neighbor_id"), col("m"), col("b"), col("label"))
           .join(broadcast(best), "label")
-        val parts = (0 until M).map(m =>
-          max(when(col("m") === m, col("part"))).as(s"p$m"))
-        val adc = cl.join(broadcast(lut), Seq("query_id", "m", "b"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .groupBy("query_id", "neighbor_id")
-          .agg(parts.head, parts.tail: _*)
-          .select(col("query_id"), col("neighbor_id"),
-            (0 until M).map(m => col(s"p$m")).reduce(_ + _).as("adc"))
-        val wCand = Window.partitionBy("query_id").orderBy(desc("adc"), col("neighbor_id"))
-        val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-        adc.withColumn("crank", row_number().over(wCand))
-          .filter(col("crank") <= C)
-          .join(v.select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
-          .join(v.select(col("vec_id").as("neighbor_id"), col("e").as("ce")), "neighbor_id")
-          .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
+        val lut = pqLut(sub, s.read.parquet(s"$tmp/codebook"))
+        top3(pqRerank(pqAdc(cl, lut, Seq("query_id", "m", "b")), v))
           .localCheckpoint()
       }
       out.orderBy("query_id", "rank")
@@ -932,12 +784,10 @@ object SimilarityQueries {
     // the FAISS add() / d14-incremental-dedup shape applied to ANN):
     //   1. BUILD  — the frozen trained quantizer (centroids) and the
     //      BASE ingest's postings (4 of 5 vectors) go to disk;
-    //   2. APPEND — the DELTA batch (the held-out fifth, arriving as
-    //      raw vectors with no cid) is assigned against the RE-READ
-    //      centroid artifact — one broadcast-fold projection over the
-    //      delta only — and APPENDED as new files under the existing
-    //      cid= partition dirs; base postings are never read or
-    //      rewritten, and the frozen centroids guarantee old
+    //   2. APPEND — the DELTA batch is assigned against the RE-READ
+    //      centroid artifact and APPENDED under the existing cid=
+    //      partition dirs (buildAndAppend); base postings are never
+    //      read or rewritten, and the frozen centroids guarantee old
     //      assignments stay valid;
     //   3. SERVE  — s25's serve, from the MERGED listing.
     // Oracle = s11's pinned SQL (the full-corpus in-memory build):
@@ -952,24 +802,7 @@ object SimilarityQueries {
       val cent0 = Quantizer.centroids(s, dir)
       val asg0 = Quantizer.assignments(s, dir)
       val out = graft.io.Writers.withScratchDir(s, "s26_app") { tmp =>
-        // 1. build: frozen quantizer + base postings (vec_id % 5 != 0)
-        graft.io.Writers.parquet(cent0, s"$tmp/centroids")
-        graft.io.Writers.parquetPartitioned(
-          asg0.filter(col("vec_id") % 5 =!= 0)
-            .select(col("vec_id"), col("e"), col("cid")),
-          s"$tmp/postings", Seq("cid"), targetFileCount = 4)
-        // 2. append: the delta batch arrives RAW (no cid); assign it
-        //    against the re-read frozen centroids and append under the
-        //    existing cid= dirs (mode=append adds files, touches nothing)
-        val centRe = s.read.parquet(s"$tmp/centroids")
-        val delta = asg0.filter(col("vec_id") % 5 === 0)
-          .select(col("vec_id"), col("e"))
-        graft.io.Writers.parquetPartitioned(
-          graft.ops.KMeans.assign(delta, centRe)
-            .select(col("vec_id"), col("e"), col("cid")),
-          s"$tmp/postings", Seq("cid"), targetFileCount = 4, mode = "append")
-        // 3. serve from the merged artifact — s25's serve (the shared
-        //    serveQuantizerArtifact, reading the base ∪ delta listing)
+        val centRe = buildAndAppend(s, cent0, asg0, tmp)
         val q = asg0.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
         serveQuantizerArtifact(s, centRe, s"$tmp/postings", q)
           .localCheckpoint()
@@ -985,7 +818,7 @@ object SimilarityQueries {
     // (maxFilesPerTrigger=1 → three real micro-batches, the e28
     // pattern); every batch is served straight from the RE-READ
     // artifact by the same serveQuantizerArtifact as s25/s26 (one
-    // serve implementation, three lifecycles), and the answers land in
+    // serve implementation, four lifecycles), and the answers land in
     // a batch-id-addressed parquet sink (writeBatchIdempotent: a
     // checkpoint replay overwrites its own generation → exactly-once).
     // Oracle = s11's pinned full-rebuild SQL: a green row proves
@@ -1067,13 +900,12 @@ object SimilarityQueries {
         // bucket from the ARTIFACT: sign of each re-read hyperplane dot,
         // weighted by the stored 2^j — int-typed to match the hive
         // partition column the postings come back with
-        val qb = q.crossJoin(broadcast(planesRe))
-          .select(col("vec_id"),
+        val best = q.crossJoin(broadcast(planesRe))
+          .select(col("vec_id").as("query_id"),
             when(dotSeq(col("hp"), col("e")) > 0.0, col("w"))
               .otherwise(lit(0L)).as("bit"))
-          .groupBy("vec_id").agg(sum("bit").cast(IntegerType).as("bucket"))
-        val probes = q.join(qb, "vec_id")
-        val probed = probes.select("bucket").distinct().collect().map(_.get(0))
+          .groupBy("query_id").agg(sum("bit").cast(IntegerType).as("bucket"))
+        val probed = best.select("bucket").distinct().collect().map(_.get(0))
         // r14 (VERDICT r13 item 6): read ONLY the probed bucket= dirs —
         // the isin-filtered whole-table read still LISTED all 2^7
         // bucket dirs before pruning (measured ~0.5-0.8 s of
@@ -1083,20 +915,14 @@ object SimilarityQueries {
         // stays as a semantic no-op guard. Empty probe set keeps the
         // old path (zero-path read is not expressible), which the
         // empty isin makes false-for-all — same correct empty frame.
+        // Every query's own bucket has a dir (queries are corpus
+        // members), which probedPostings' listing-wide read does not
+        // need to assume.
         val post = (if (probed.isEmpty) s.read.parquet(s"$tmp/postings")
           else s.read.option("basePath", s"$tmp/postings")
             .parquet(probed.map(b => s"$tmp/postings/bucket=$b"): _*))
           .where(col("bucket").isin(probed: _*))
-        val w = Window.partitionBy("query_id").orderBy(desc("c"), col("neighbor_id"))
-        probes.select(col("vec_id").as("query_id"), col("e").as("qe"), col("bucket"))
-          .join(post.select(col("bucket"), col("vec_id").as("neighbor_id"),
-            col("e").as("ce")), "bucket")
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .select(col("query_id"), col("neighbor_id"), dotSeq(col("qe"), col("ce")).as("c"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), round6(col("c")).as("cos"))
-          .localCheckpoint()
+        top3(clusterPairs(best, q, post, "bucket")).localCheckpoint()
       }
       out.orderBy("query_id", "rank")
     },
@@ -1107,7 +933,7 @@ object SimilarityQueries {
     // footer overhead grows without bound until a maintenance pass
     // rewrites the table (the lakehouse OPTIMIZE step). This row runs
     // the FULL lifecycle: build base postings → append the delta shard
-    // (s26's steps, verbatim) → Writers.compactPartitioned rewrites the
+    // (s26's buildAndAppend) → Writers.compactPartitioned rewrites the
     // fragmented artifact into one file per cid= dir (partition-
     // PRESERVING — a flat compact would dissolve the layout and with it
     // the pruned serve) → s25's serve runs from the COMPACTED copy.
@@ -1123,26 +949,13 @@ object SimilarityQueries {
       val cent0 = Quantizer.centroids(s, dir)
       val asg0 = Quantizer.assignments(s, dir)
       val out = graft.io.Writers.withScratchDir(s, "s29_cmp") { tmp =>
-        // 1-2. build + append — s26's fragmentation-accumulating steps
-        graft.io.Writers.parquet(cent0, s"$tmp/centroids")
-        graft.io.Writers.parquetPartitioned(
-          asg0.filter(col("vec_id") % 5 =!= 0)
-            .select(col("vec_id"), col("e"), col("cid")),
-          s"$tmp/postings", Seq("cid"), targetFileCount = 4)
-        val centRe = s.read.parquet(s"$tmp/centroids")
-        val delta = asg0.filter(col("vec_id") % 5 === 0)
-          .select(col("vec_id"), col("e"))
-        graft.io.Writers.parquetPartitioned(
-          graft.ops.KMeans.assign(delta, centRe)
-            .select(col("vec_id"), col("e"), col("cid")),
-          s"$tmp/postings", Seq("cid"), targetFileCount = 4, mode = "append")
-        // 3. MAINTENANCE: rewrite the fragmented postings into one file
-        //    per cid= partition; production swaps the directory at the
-        //    manifest level, here the serve just reads the new path
+        val centRe = buildAndAppend(s, cent0, asg0, tmp)
+        // MAINTENANCE: rewrite the fragmented postings into one file
+        // per cid= partition; production swaps the directory at the
+        // manifest level, here the serve just reads the new path
         graft.io.Writers.compactPartitioned(
           s, s"$tmp/postings", s"$tmp/postings_compacted", Seq("cid"),
           targetFileCount = 1)
-        // 4. serve from the COMPACTED artifact — s25's serve unchanged
         val q = asg0.filter(col("vec_id") < 10).select(col("vec_id"), col("e"))
         serveQuantizerArtifact(s, centRe, s"$tmp/postings_compacted", q)
           .localCheckpoint()

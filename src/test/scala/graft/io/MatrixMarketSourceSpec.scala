@@ -141,6 +141,21 @@ class MatrixMarketSourceSpec extends SparkSpec {
     assert(df.collect().head.getLong(0) == 3L)
   }
 
+  test("several paths load by name, a comma in the directory included") {
+    val dir = fixtureDir("graft-mm,two")
+    def write(name: String, body: String): String = {
+      val f = dir.resolve(name).toFile
+      val w = new OutputStreamWriter(new FileOutputStream(f), StandardCharsets.UTF_8)
+      try w.write(body) finally w.close()
+      f.toString
+    }
+    val a = write("a.mm", "%%MatrixMarket matrix coordinate integer general\n2 2 1\n1 2 5\n")
+    val b = write("b.mm", "%%MatrixMarket matrix coordinate integer general\n2 2 2\n2 1 6\n2 2 8\n")
+    val rows = spark.read.format("matrixmarket").load(a, b).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+    assert(rows.toSeq == Seq((1L, 2L, 5L), (2L, 1L, 6L), (2L, 2L, 8L)))
+  }
+
   test("matrixMarketRead returns header dims + the v2 frame") {
     val (data, nRows, nCols, nnz) = Readers.matrixMarketRead(spark, mmPath)
     assert((nRows, nCols, nnz) == (3L, 4L, 5L))

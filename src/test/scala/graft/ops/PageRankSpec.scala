@@ -9,8 +9,8 @@ import graft.SparkSpec
   * it to itself exactly), (b) be bit-identical across partitionings
   * (long sums commute; that is the whole point of the integer
   * contract), (c) match an independent driver-side replay of the same
-  * integer recurrence on an irregular graph, and (d) rank a hub above
-  * its spokes.
+  * integer recurrence on an irregular graph, (d) rank a hub above
+  * its spokes, and (e) return no ranks for no edges.
   */
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
@@ -101,6 +101,15 @@ class PageRankSpec extends SparkSpec {
     // path nodes outrank the degree-1 seed end) — the contrast PPR exists for
     val uni = ranksOf(edges, 5)
     assert(uni(0L) < uni(3L), s"uniform PR should not favor the end node: $uni")
+  }
+
+  test("empty edge list: empty ranks, edge list released") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = PageRank.run(Seq.empty[(Long, Long)].toDF("src", "dst"), 3, Scale)
+    assert(got.columns.toSeq == Seq("node", "rank"))
+    assert(got.collect().isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the persisted edge list must be released")
   }
 
   test("hub outranks spokes on a star graph") {
