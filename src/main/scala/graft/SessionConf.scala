@@ -12,7 +12,11 @@ object SessionConf {
     * query on the same session sees the overrides while `body` runs.
     */
   def scoped[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    // the explicitly set keys, not `getOption`: a key the session never
+    // set reads its default through getOption, and restoring that
+    // default would leave the key set
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }

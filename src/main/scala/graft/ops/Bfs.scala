@@ -40,24 +40,20 @@ object Bfs {
     */
   def run(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val nEdges = e.count()
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    var labels = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    for (k <- 1 to maxHops) {
-      // frontier = nodes first labeled last round (dist = k−1); only
-      // their edges can discover anything new at distance k
-      val frontier = labels.filter(col("dist") === (k - 1).toLong)
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), (col("dist") + 1L).as("dist"))
-      labels = labels.unionAll(cand)
-        .groupBy("node").agg(min("dist").as("dist"))
+    IterConf.roundLoop(edges.select(col("src"), col("dst")).repartition(col("src"))) { (e, _) =>
+      var labels = sources.select(col("node"), lit(0L).as("dist"))
         .localCheckpoint()
-    }
-    e.unpersist()
-    labels
+      for (k <- 1 to maxHops) {
+        // frontier = nodes first labeled last round (dist = k−1); only
+        // their edges can discover anything new at distance k
+        val frontier = labels.filter(col("dist") === (k - 1).toLong)
+        val cand = frontier.join(e, frontier("node") === e("src"))
+          .select(e("dst").as("node"), (col("dist") + 1L).as("dist"))
+        labels = labels.unionAll(cand)
+          .groupBy("node").agg(min("dist").as("dist"))
+          .localCheckpoint()
+      }
+      labels
     }
   }
 

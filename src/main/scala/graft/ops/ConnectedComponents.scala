@@ -40,17 +40,15 @@ object ConnectedComponents {
     * before switching — the price of not needing to know the diameter
     * up front, which at 100 TB nobody does.
     */
-  def auto(pairs: DataFrame, diameterBudget: Int = 8): (DataFrame, Int) = {
-    val capped = pairs.persist()
-    try {
+  def auto(pairs: DataFrame, diameterBudget: Int = 8): (DataFrame, Int) =
+    IterConf.persisted(pairs) { capped =>
       minLabelBounded(capped, diameterBudget) match {
         case Some((labels, rounds)) => (labels, rounds)
         case None =>
           val (labels, starRounds) = alternatingStar(capped)
           (labels, diameterBudget + starRounds)
       }
-    } finally { capped.unpersist(); () }
-  }
+    }
 
   /** Min-label propagation; returns (labels, rounds). */
   def minLabel(pairs: DataFrame): (DataFrame, Int) =
@@ -61,33 +59,28 @@ object ConnectedComponents {
     */
   private def minLabelBounded(pairs: DataFrame, maxRounds: Int): Option[(DataFrame, Int)] = {
     val pr = pairs.toDF("src", "dst")
-    val edges = pr
-      .union(pr.select(col("dst"), col("src")))
-      .toDF("src", "dst")
-      .persist()
-    val nEdges = edges.count()
-    IterConf.scoped(pairs.sparkSession, nEdges) {
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint()
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      rounds += 1
-      val nmin = edges
-        .join(labels.select(col("doc_id").as("src"), col("label").as("slabel")), "src")
-        .groupBy(col("dst").as("doc_id"))
-        .agg(min(col("slabel")).as("nlabel"))
-      val upd = labels.join(nmin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("label"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("nl"))
-        .localCheckpoint()
-      done = upd.filter(col("nl") < col("label")).isEmpty
-      labels = upd.select(col("doc_id"), col("nl").as("label"))
-    }
-    edges.unpersist()
-    if (done) Some((labels.select(col("doc_id"), col("label").as("cluster_id")), rounds))
-    else None
+    IterConf.roundLoop(pr.union(pr.select(col("dst"), col("src"))).toDF("src", "dst")) {
+      (edges, _) =>
+        var labels = edges.select(col("src").as("doc_id")).distinct()
+          .withColumn("label", col("doc_id"))
+          .localCheckpoint()
+        var rounds = 0
+        var done = false
+        while (!done && rounds < maxRounds) {
+          rounds += 1
+          val nmin = edges
+            .join(labels.select(col("doc_id").as("src"), col("label").as("slabel")), "src")
+            .groupBy(col("dst").as("doc_id"))
+            .agg(min(col("slabel")).as("nlabel"))
+          val upd = labels.join(nmin, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("label"),
+              least(col("label"), coalesce(col("nlabel"), col("label"))).as("nl"))
+            .localCheckpoint()
+          done = upd.filter(col("nl") < col("label")).isEmpty
+          labels = upd.select(col("doc_id"), col("nl").as("label"))
+        }
+        if (done) Some((labels.select(col("doc_id"), col("label").as("cluster_id")), rounds))
+        else None
     }
   }
 
@@ -114,24 +107,23 @@ object ConnectedComponents {
       emitted.filter(col("u") =!= col("v")).distinct()
     }
 
-    var edges = pairs.toDF("u", "v")
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    val nEdges = edges.count()
-    IterConf.scoped(pairs.sparkSession, nEdges) {
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      rounds += 1
-      val next = star(star(edges, large = true), large = false).localCheckpoint()
-      done = next.except(edges).union(edges.except(next)).isEmpty
-      edges = next
-    }
-    require(done, s"alternatingStar did not converge in $maxRounds rounds")
-    // fixpoint edges are (child, root); roots label themselves
-    val labels = edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-      .union(edges.select(col("v").as("doc_id"), col("v").as("cluster_id")))
-      .distinct()
-    (labels, rounds)
+    IterConf.roundLoop(pairs.toDF("u", "v").filter(col("u") =!= col("v")).distinct()) {
+      (start, _) =>
+        var edges = start
+        var rounds = 0
+        var done = false
+        while (!done && rounds < maxRounds) {
+          rounds += 1
+          val next = star(star(edges, large = true), large = false).localCheckpoint()
+          done = next.except(edges).union(edges.except(next)).isEmpty
+          edges = next
+        }
+        require(done, s"alternatingStar did not converge in $maxRounds rounds")
+        // fixpoint edges are (child, root); roots label themselves
+        val labels = edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+          .union(edges.select(col("v").as("doc_id"), col("v").as("cluster_id")))
+          .distinct()
+        (labels, rounds)
     }
   }
 }

@@ -53,57 +53,44 @@ object Hits {
       iterations: Int,
       scale: Long = 1000000000L): (DataFrame, DataFrame) = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    try {
-    val nEdges = e.count()
-    // no edges: no hubs and no authorities, the empty frames
-    if (nEdges == 0L) {
-      val none = edges.limit(0)
-      return (none.select(col("src").as("node"), lit(0L).as("hub")),
-        none.select(col("dst").as("node"), lit(0L).as("auth")))
+    IterConf.roundLoop(edges.select(col("src"), col("dst")).repartition(col("src"))) { (e, nEdges) =>
+      // no edges: no hubs and no authorities, the empty frames
+      if (nEdges == 0L) {
+        val none = edges.limit(0)
+        (none.select(col("src").as("node"), lit(0L).as("hub")),
+          none.select(col("dst").as("node"), lit(0L).as("auth")))
+      } else IterConf.persisted(e.select(col("src").as("node")).distinct()) { hubNodes =>
+        // One half-step: each `to` node sums the `score` of the scored
+        // nodes at its edges' `from` end, L1-normalized into `out`.
+        // r14: the L1 total folds to the driver as ONE long (the KMeans
+        // bounded-collect rule) — the former 1-row-agg
+        // crossJoin(broadcast(...)) built a broadcast exchange per
+        // half-step just to ship a scalar. Same exact long arithmetic
+        // (sum + floor division). The raw sums are CACHED before use:
+        // both consumers (the L1 total and the normalized frame) would
+        // otherwise each re-run the edge join + groupBy — the
+        // corpus-sized half-step work twice per half-step.
+        def halfStep(scores: DataFrame, score: String, from: String, to: String,
+            out: String): DataFrame =
+          IterConf.persisted(e.join(scores, e(from) === scores("node"))
+              .groupBy(to).agg(sum(score).as("raw"))) { raw =>
+            val tot = raw.agg(sum("raw")).first().getLong(0)
+            raw.selectExpr(s"$to AS node", s"(raw * ${scale}L) div ${tot}L AS $out")
+              .localCheckpoint()
+          }
+        // the hub count folds to the driver the same way
+        val nh = hubNodes.count()
+        var hubs = hubNodes
+          .selectExpr("node", s"${scale / nh}L AS hub")
+          .localCheckpoint()
+        var auths: DataFrame = hubs.limit(0).selectExpr("node", "hub AS auth")
+        for (_ <- 1 to iterations) {
+          auths = halfStep(hubs, "hub", "src", "dst", "auth")
+          hubs = halfStep(auths, "auth", "dst", "src", "hub")
+        }
+        (hubs, auths)
+      }
     }
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    val hubNodes = e.select(col("src").as("node")).distinct().persist()
-    try {
-    // r14: hub count and the per-half-step L1 totals fold to the driver
-    // as ONE long each (the KMeans bounded-collect rule) — the former
-    // 1-row-agg crossJoin(broadcast(...)) built a broadcast exchange
-    // per half-step just to ship a scalar. Same exact long arithmetic
-    // (sum + floor division); the total's agg action doubles as the
-    // persist materialization the broadcast used to provide, so the
-    // half-step stays the same number of eager actions.
-    val nh = hubNodes.count()
-    var hubs = hubNodes
-      .selectExpr("node", s"${scale / nh}L AS hub")
-      .localCheckpoint()
-    var auths: DataFrame = hubs.limit(0).selectExpr("node", "hub AS auth")
-    for (_ <- 1 to iterations) {
-      // raw sums are CACHED before use: both consumers (the L1 total
-      // and the normalized frame) would otherwise each re-run the edge
-      // join + groupBy — the corpus-sized half-step work twice per
-      // half-step, 4x per iteration.
-      val araw = e.join(hubs, e("src") === hubs("node"))
-        .groupBy("dst").agg(sum("hub").as("raw"))
-        .persist()
-      val atot = araw.agg(sum("raw")).first().getLong(0)
-      auths = araw
-        .selectExpr("dst AS node", s"(raw * ${scale}L) div ${atot}L AS auth")
-        .localCheckpoint()
-      araw.unpersist()
-      val hraw = e.join(auths, e("dst") === auths("node"))
-        .groupBy("src").agg(sum("auth").as("raw"))
-        .persist()
-      val htot = hraw.agg(sum("raw")).first().getLong(0)
-      hubs = hraw
-        .selectExpr("src AS node", s"(raw * ${scale}L) div ${htot}L AS hub")
-        .localCheckpoint()
-      hraw.unpersist()
-    }
-    (hubs, auths)
-    } finally hubNodes.unpersist()
-    }
-    } finally e.unpersist()
   }
 
   /** The DuckDB mirror of [[run]] as unrolled CTE layers generated from

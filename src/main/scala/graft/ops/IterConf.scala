@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Scoped session-conf shaping for the iterative engines' round loops.
+/** The round-loop lifecycle of the iterative graph engines, in one
+  * place: [[roundLoop]] persists the caller-shaped edge list, counts
+  * it, runs the loop under the input-sized session conf, and releases
+  * the edge list however the loop ends.
   *
   * Each round of CC / PageRank / LPA / BFS / SSSP / k-core / HITS
   * materializes a NODE-SCALE frame through a fixed-shape plan (one
@@ -23,14 +26,13 @@ import org.apache.spark.sql.SparkSession
   *     partitions-many near-empty tasks (measured: m05's 9 CC rounds
   *     ran ~113 tasks/round over a 3k-pair graph).
   *
-  * [[scoped]] therefore disables AQE and derives the round-loop
-  * partition count FROM THE INPUT SIZE (guide §2: scale-adaptive
-  * partitioning, never a constant tuned for one deployment):
-  * ceil(inputRows / 1M rows) partitions, clamped to the session's
-  * shuffle.partitions — so a toy graph runs 1-2-task rounds, while at
-  * 100 TB the clamp keeps the session's production width.
-  *
-  * The toggle is a set/restore around the loop (graft.SessionConf.scoped).
+  * The loop body therefore runs with AQE off and a partition count
+  * derived FROM THE INPUT SIZE (guide §2: scale-adaptive partitioning,
+  * never a constant tuned for one deployment): ceil(inputRows /
+  * [[RowsPerPartition]]), clamped to [1, the session's
+  * shuffle.partitions] — so a toy graph runs 1-2-task rounds, while at
+  * 100 TB the clamp keeps the session's production width. The toggle
+  * is a set/restore around the body (graft.SessionConf.scoped).
   */
 object IterConf {
 
@@ -46,7 +48,29 @@ object IterConf {
     */
   val RowsPerPartition: Long = 65536L
 
-  def scoped[T](s: SparkSession, inputRows: Long)(body: => T): T = {
+  /** Run a round loop over `edges`, shaped by the caller (projection,
+    * src-partitioning, symmetrization). The frame is persisted and
+    * counted OUTSIDE the scoped conf, so its one corpus-scale exchange
+    * keeps AQE; `body` gets the persisted frame and its row count and
+    * runs under the conf that count sizes. The frame is released when
+    * `body` returns or throws — results must not read it lazily, which
+    * every engine guarantees by returning checkpointed frames.
+    */
+  def roundLoop[T](edges: DataFrame)(body: (DataFrame, Long) => T): T =
+    persisted(edges) { e =>
+      val n = e.count()
+      scoped(e.sparkSession, n)(body(e, n))
+    }
+
+  /** Persist `df` for the span of `body`, releasing it when `body`
+    * returns or throws.
+    */
+  def persisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist()
+    try body(p) finally p.unpersist()
+  }
+
+  private def scoped[T](s: SparkSession, inputRows: Long)(body: => T): T = {
     val sessionParts = s.conf.getOption("spark.sql.shuffle.partitions")
       .flatMap(p => scala.util.Try(p.toInt).toOption)
       .getOrElse(s.sparkContext.defaultParallelism)

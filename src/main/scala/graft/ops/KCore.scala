@@ -47,37 +47,35 @@ object KCore {
     */
   def run(edges: DataFrame, k: Int, rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 1, "rounds must be >= 1")
-    var cur = edges.select(col("src"), col("dst")).localCheckpoint()
-    val nEdges = cur.count()
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    var surv: DataFrame = null
-    val profile = Seq.newBuilder[(Long, Long, Long)]
-    var lastS = -1L
-    var lastE = -1L
-    var converged = false
-    for (r <- 1 to rounds) {
-      if (!converged) {
-        surv = cur.groupBy("src").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-          .select(col("src").as("node"), col("deg"))
-          .localCheckpoint()
-        cur = cur
-          .join(surv.select(col("node").as("src")), "src")
-          .join(surv.select(col("node").as("dst")), "dst")
-          .select(col("src"), col("dst"))
-          .localCheckpoint()
-        val ns = surv.count()
-        val ne = cur.count()
-        converged = ns == lastS && ne == lastE
-        lastS = ns
-        lastE = ne
+    IterConf.roundLoop(edges.select(col("src"), col("dst"))) { (e, _) =>
+      var cur = e
+      var surv: DataFrame = null
+      val profile = Seq.newBuilder[(Long, Long, Long)]
+      var lastS = -1L
+      var lastE = -1L
+      var converged = false
+      for (r <- 1 to rounds) {
+        if (!converged) {
+          surv = cur.groupBy("src").agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= k)
+            .select(col("src").as("node"), col("deg"))
+            .localCheckpoint()
+          cur = cur
+            .join(surv.select(col("node").as("src")), "src")
+            .join(surv.select(col("node").as("dst")), "dst")
+            .select(col("src"), col("dst"))
+            .localCheckpoint()
+          val ns = surv.count()
+          val ne = cur.count()
+          converged = ns == lastS && ne == lastE
+          lastS = ns
+          lastE = ne
+        }
+        profile += ((r.toLong, lastS, lastE))
       }
-      profile += ((r.toLong, lastS, lastE))
-    }
-    val spark = edges.sparkSession
-    val profileDf = spark.createDataFrame(profile.result())
-      .toDF("round", "survivors", "edges_left")
-    (profileDf, surv)
+      val profileDf = edges.sparkSession.createDataFrame(profile.result())
+        .toDF("round", "survivors", "edges_left")
+      (profileDf, surv)
     }
   }
 

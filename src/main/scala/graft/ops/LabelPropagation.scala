@@ -43,28 +43,24 @@ object LabelPropagation {
     */
   def run(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val nEdges = e.count()
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    var labels = e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val nbr = e.join(labels, e("src") === labels("node"))
-        .select(e("dst").as("node"), col("label"))
-      labels = nbr.unionAll(labels)
-        .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
-        .groupBy("node")
-        // argmax by (count desc, label asc) as one max(struct): labels
-        // are non-negative node ids, so negating gives the min-label
-        // tie-break inside a single max aggregate (no per-node window)
-        .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("label"))
+    IterConf.roundLoop(edges.select(col("src"), col("dst")).repartition(col("src"))) { (e, _) =>
+      var labels = e.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))
         .localCheckpoint()
-    }
-    e.unpersist()
-    labels
+      for (_ <- 1 to rounds) {
+        val nbr = e.join(labels, e("src") === labels("node"))
+          .select(e("dst").as("node"), col("label"))
+        labels = nbr.unionAll(labels)
+          .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
+          .groupBy("node")
+          // argmax by (count desc, label asc) as one max(struct): labels
+          // are non-negative node ids, so negating gives the min-label
+          // tie-break inside a single max aggregate (no per-node window)
+          .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl"))).as("m"))
+          .select(col("node"), (-col("m.nl")).as("label"))
+          .localCheckpoint()
+      }
+      labels
     }
   }
 

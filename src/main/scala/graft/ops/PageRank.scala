@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank over a directed edge list — the iterative
@@ -51,54 +51,23 @@ object PageRank {
       dampingNum: Long = 85,
       dampingDen: Long = 100): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    // the edge repartition materializes OUTSIDE the scope (the one
-    // corpus-scale exchange, AQE applies); its count sizes the
-    // round-loop partitions (IterConf.scoped)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    try {
-    val nEdges = e.count()
-    // no edges, no nodes: the empty (node, rank) frame, as the DuckDB
-    // mirror yields no rows over an empty `deg`
-    if (nEdges == 0L)
-      return edges.select(col("src").as("node"), lit(0L).as("rank")).limit(0)
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .select(col("src").as("node"), col("outdeg")).persist()
-    try {
-    // r14: node count folded to the driver as ONE long (the KMeans
-    // bounded-collect rule — a count, not a corpus collect), so the
-    // per-node constants (init rank, teleport) become LITERALS instead
-    // of a per-round crossJoin(broadcast(1-row agg)) — one fewer
-    // aggregate + broadcast job per round. Same integer arithmetic:
-    // Scala Long `/` is the same floor division as SQL `div` on the
-    // positive operands here.
-    val n = deg.count()
-    val r0 = scale / n
-    val teleport = ((dampingDen - dampingNum) * r0) / dampingDen
-    // r14 (VERDICT r13 item 9): the rank state CARRIES outdeg, so each
-    // round's contribution step is a pure projection (`rank div
-    // outdeg`) instead of a ranks⋈deg equi-join — one join per round
-    // (inflow attach) instead of two, with identical values (outdeg is
-    // the same persisted deg column, riding along unchanged).
-    var state = deg
-      .selectExpr("node", "outdeg", s"${r0}L AS rank")
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contrib = state.selectExpr("node", "rank div outdeg AS contrib")
-      val inflow = e.join(contrib, e("src") === contrib("node"))
-        .groupBy("dst").agg(sum("contrib").as("inflow"))
-      state = deg
-        .join(inflow, col("node") === col("dst"), "left")
-        .selectExpr("node", "outdeg",
-          s"${teleport}L " +
-            s"+ (($dampingNum * coalesce(inflow, 0L)) div $dampingDen) AS rank")
-        .localCheckpoint()
+    IterConf.roundLoop(srcPartitioned(edges)) { (e, nEdges) =>
+      // no edges, no nodes: the empty (node, rank) frame, as the DuckDB
+      // mirror yields no rows over an empty `deg`
+      if (nEdges == 0L) edges.select(col("src").as("node"), lit(0L).as("rank")).limit(0)
+      else IterConf.persisted(outDegrees(e)) { deg =>
+        // r14: node count folded to the driver as ONE long (the KMeans
+        // bounded-collect rule — a count, not a corpus collect), so the
+        // per-node constants (init rank, teleport) become LITERALS
+        // instead of a per-round crossJoin(broadcast(1-row agg)) — one
+        // fewer aggregate + broadcast job per round. Same integer
+        // arithmetic: Scala Long `/` is the same floor division as SQL
+        // `div` on the positive operands here.
+        val r0 = scale / deg.count()
+        val teleport = ((dampingDen - dampingNum) * r0) / dampingDen
+        iterate(e, deg, lit(r0), lit(teleport), iterations, dampingNum, dampingDen)
+      }
     }
-    state.select("node", "rank")
-    } finally deg.unpersist()
-    }
-    } finally e.unpersist()
   }
 
   /** PERSONALIZED PageRank (random walk with restart): identical
@@ -115,7 +84,9 @@ object PageRank {
     * as [[run]] — the seed set rides as a broadcast membership flag on
     * the node frame (no extra shuffle). Seeds without out-edges are
     * dangling like any other node (their mass leaks by the same
-    * documented contract).
+    * documented contract). An empty seed set ranks every node 0, as
+    * the DuckDB mirror does (its `scale // 0` is NULL inside a CASE
+    * branch no node takes).
     *
     * @param sources (node: long) seed rows — small (broadcast) by
     *                contract; duplicates are collapsed.
@@ -128,46 +99,74 @@ object PageRank {
       dampingNum: Long = 85,
       dampingDen: Long = 100): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val nEdges = e.count()
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .select(col("src").as("node"), col("outdeg")).persist()
-    val srcs = sources.select(col("node")).distinct()
-      .withColumn("is_src", lit(1L)).persist()
-    // r14: seed count folded to the driver as ONE long (see run()), and
-    // the rank state carries (outdeg, is_src) so each round is a pure
-    // contribution projection + ONE inflow attach join — the former
-    // shape re-joined srcs and re-aggregated the seed count per round.
-    val ns = srcs.count()
-    val r0 = scale / ns
-    val teleport = ((dampingDen - dampingNum) * r0) / dampingDen
-    val base = deg
-      .join(broadcast(srcs), Seq("node"), "left")
-      .selectExpr("node", "outdeg", "is_src IS NOT NULL AS is_src")
-      .persist()
-    var state = base
-      .selectExpr("node", "outdeg", "is_src",
-        s"CASE WHEN is_src THEN ${r0}L ELSE 0L END AS rank")
-      .localCheckpoint()
+    IterConf.roundLoop(srcPartitioned(edges)) { (e, _) =>
+      IterConf.persisted(outDegrees(e)) { deg =>
+        IterConf.persisted(sources.select(col("node")).distinct()
+            .withColumn("is_src", lit(1L))) { srcs =>
+          // r14: seed count folded to the driver as ONE long (see
+          // run()), and the base frame carries (outdeg, is_src) so each
+          // round is a pure contribution projection + ONE inflow
+          // attach join — the former shape re-joined srcs and
+          // re-aggregated the seed count per round.
+          val ns = srcs.count()
+          val r0 = if (ns == 0L) 0L else scale / ns
+          val teleport = ((dampingDen - dampingNum) * r0) / dampingDen
+          IterConf.persisted(deg
+              .join(broadcast(srcs), Seq("node"), "left")
+              .selectExpr("node", "outdeg", "is_src IS NOT NULL AS is_src")) { base =>
+            iterate(e, base,
+              expr(s"CASE WHEN is_src THEN ${r0}L ELSE 0L END"),
+              expr(s"CASE WHEN is_src THEN ${teleport}L ELSE 0L END"),
+              iterations, dampingNum, dampingDen)
+          }
+        }
+      }
+    }
+  }
+
+  /** The edge list as both loops persist it: (src, dst), src-partitioned. */
+  private def srcPartitioned(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst")).repartition(col("src"))
+
+  /** (node, outdeg) for every node with an out-edge. */
+  private def outDegrees(e: DataFrame): DataFrame =
+    e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      .select(col("src").as("node"), col("outdeg"))
+
+  /** The one iteration loop of [[run]] and [[runPersonalized]].
+    *
+    * r14 (VERDICT r13 item 9): the rank state CARRIES every column of
+    * `base` (node, outdeg, and whatever per-node flags the teleport
+    * reads), so each round's contribution step is a pure projection
+    * (`rank div outdeg`) instead of a ranks⋈deg equi-join — one join per
+    * round (inflow attach) instead of two.
+    *
+    * @param base     (node, outdeg, ...) for every node with an out-edge.
+    * @param rank0    the initial rank, over `base`'s columns.
+    * @param teleport the per-round teleport term, over `base`'s columns.
+    * @return (node, rank) after `iterations` rounds.
+    */
+  private def iterate(
+      e: DataFrame,
+      base: DataFrame,
+      rank0: Column,
+      teleport: Column,
+      iterations: Int,
+      dampingNum: Long,
+      dampingDen: Long): DataFrame = {
+    val carried = base.columns.toSeq.map(col)
+    var state = base.select(carried :+ rank0.as("rank"): _*).localCheckpoint()
     for (_ <- 1 to iterations) {
       val contrib = state.selectExpr("node", "rank div outdeg AS contrib")
       val inflow = e.join(contrib, e("src") === contrib("node"))
         .groupBy("dst").agg(sum("contrib").as("inflow"))
       state = base
         .join(inflow, col("node") === col("dst"), "left")
-        .selectExpr("node", "outdeg", "is_src",
-          s"(CASE WHEN is_src THEN ${teleport}L ELSE 0L END) " +
-            s"+ (($dampingNum * coalesce(inflow, 0L)) div $dampingDen) AS rank")
+        .select(carried :+ (teleport +
+          expr(s"($dampingNum * coalesce(inflow, 0L)) div $dampingDen")).as("rank"): _*)
         .localCheckpoint()
     }
-    e.unpersist()
-    deg.unpersist()
-    srcs.unpersist()
-    base.unpersist()
     state.select("node", "rank")
-    }
   }
 
   /** The DuckDB mirror of [[runPersonalized]] — callers splice

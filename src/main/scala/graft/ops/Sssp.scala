@@ -46,32 +46,29 @@ object Sssp {
     */
   def run(edges: DataFrame, sources: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src")).persist()
-    val nEdges = e.count()
-    IterConf.scoped(edges.sparkSession, nEdges) {
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var frontier = dist
-    var round = 0
-    var improving = true
-    while (improving && round < maxRounds) {
-      round += 1
-      val cand = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionAll(cand)
-        .groupBy("node").agg(min("dist").as("dist"))
+    IterConf.roundLoop(
+        edges.select(col("src"), col("dst"), col("w")).repartition(col("src"))) { (e, _) =>
+      var dist = sources.select(col("node"), lit(0L).as("dist"))
         .localCheckpoint()
-      frontier = next
-        .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
-        .filter(col("old").isNull || col("dist") < col("old"))
-        .select("node", "dist")
-        .localCheckpoint()
-      dist = next
-      improving = frontier.limit(1).count() > 0
-    }
-    e.unpersist()
-    dist
+      var frontier = dist
+      var round = 0
+      var improving = true
+      while (improving && round < maxRounds) {
+        round += 1
+        val cand = frontier.join(e, frontier("node") === e("src"))
+          .select(e("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        val next = dist.unionAll(cand)
+          .groupBy("node").agg(min("dist").as("dist"))
+          .localCheckpoint()
+        frontier = next
+          .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
+          .filter(col("old").isNull || col("dist") < col("old"))
+          .select("node", "dist")
+          .localCheckpoint()
+        dist = next
+        improving = frontier.limit(1).count() > 0
+      }
+      dist
     }
   }
 

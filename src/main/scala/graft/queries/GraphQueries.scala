@@ -113,6 +113,38 @@ object GraphQueries {
       .unionAll(pairs.select(col("sp").as("src"), col("c").as("dst"), col("w")))
   }
 
+  /** The seed of g04, g06 and g07: the trade graph's best-connected
+    * node (max degree, then min node id — a total argmax both engines
+    * compute identically), as one (node) row.
+    */
+  private def tradeHub(e: DataFrame): DataFrame =
+    e.groupBy("src").agg(count(lit(1)).as("dg"))
+      .agg(max(struct(col("dg").as("d"), (-col("src")).as("nn"))).as("m"))
+      .select((-col("m.nn")).as("node"))
+
+  /** g01's and g07's output: the top 25 (node, rank) rows, each node
+    * decoded to its side and id, rank also as a fraction of [[Scale]].
+    */
+  private def topRanks(ranks: DataFrame): DataFrame =
+    ranks
+      .select(
+        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
+          .as("node_type"),
+        expr("node div 2").as("node_id"),
+        col("rank"),
+        round6(col("rank").cast("double") / lit(Scale.toDouble)).as("rank_f"))
+      .orderBy(desc("rank"), col("node_type"), col("node_id"))
+      .limit(25)
+
+  /** g04's and g06's output: the node census per distance, split by side. */
+  private def distanceCensus(dists: DataFrame): DataFrame =
+    dists
+      .groupBy("dist")
+      .agg(count(lit(1)).as("nodes"),
+        sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("customers"),
+        sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("suppliers"))
+      .orderBy("dist")
+
   private val Iters = 5
   private val Scale = 1000000000000L
   private val LpRounds = 4
@@ -137,15 +169,7 @@ object GraphQueries {
     // canonical iterative-shuffle pattern, O(1) plan size via per-round
     // lineage truncation.
     "g01_pagerank" -> { (s, dir) =>
-      PageRank.run(tradeEdges(s, dir), Iters, Scale)
-        .select(
-          when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-            .as("node_type"),
-          expr("node div 2").as("node_id"),
-          col("rank"),
-          round6(col("rank").cast("double") / lit(Scale.toDouble)).as("rank_f"))
-        .orderBy(desc("rank"), col("node_type"), col("node_id"))
-        .limit(25)
+      topRanks(PageRank.run(tradeEdges(s, dir), Iters, Scale))
     },
 
     // Community detection over the same trade graph — 4 synchronous
@@ -238,16 +262,7 @@ object GraphQueries {
     // hops (or disconnected) carry no row by contract.
     "g04_bfs_reach" -> { (s, dir) =>
       val e = tradeEdges(s, dir)
-      val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-      val top = deg
-        .agg(max(struct(col("dg").as("d"), (-col("src")).as("nn"))).as("m"))
-        .select((-col("m.nn")).as("node"))
-      Bfs.run(e, top, BfsHops)
-        .groupBy("dist")
-        .agg(count(lit(1)).as("nodes"),
-          sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("customers"),
-          sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("suppliers"))
-        .orderBy("dist")
+      distanceCensus(Bfs.run(e, tradeHub(e), BfsHops))
     },
 
     // k-core peel profile over the support-thresholded part
@@ -286,16 +301,7 @@ object GraphQueries {
     // relaxation layers (equal per round — SsspSpec pins it).
     "g06_sssp" -> { (s, dir) =>
       val e = tradeEdgesW(s, dir)
-      val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-      val top = deg
-        .agg(max(struct(col("dg").as("d"), (-col("src")).as("nn"))).as("m"))
-        .select((-col("m.nn")).as("node"))
-      Sssp.run(e, top, SsspRounds)
-        .groupBy("dist")
-        .agg(count(lit(1)).as("nodes"),
-          sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("customers"),
-          sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("suppliers"))
-        .orderBy("dist")
+      distanceCensus(Sssp.run(e, tradeHub(e), SsspRounds))
     },
 
     // PERSONALIZED PageRank from the trade hub — random walk with
@@ -312,19 +318,7 @@ object GraphQueries {
     // (no extra shuffle). Top-25 by rank.
     "g07_ppr" -> { (s, dir) =>
       val e = tradeEdges(s, dir)
-      val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-      val top = deg
-        .agg(max(struct(col("dg").as("d"), (-col("src")).as("nn"))).as("m"))
-        .select((-col("m.nn")).as("node"))
-      PageRank.runPersonalized(e, top, Iters, Scale)
-        .select(
-          when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-            .as("node_type"),
-          expr("node div 2").as("node_id"),
-          col("rank"),
-          round6(col("rank").cast("double") / lit(Scale.toDouble)).as("rank_f"))
-        .orderBy(desc("rank"), col("node_type"), col("node_id"))
-        .limit(25)
+      topRanks(PageRank.runPersonalized(e, tradeHub(e), Iters, Scale))
     },
 
     // ADAMIC-ADAR link prediction over the support-thresholded part

@@ -9,7 +9,8 @@ import graft.SparkEntry
   * sf0.001) — the numbers PlanBudgetSpec pins, and the number a new
   * row's budget pin comes from.
   * Usage: runMain graft.tools.ShuffleCount [sfDir] [q1,q2,...]
-  * (no name list: every query).
+  * (no name list: every query). A row whose plan fails prints
+  * `ERR <exception>: <message>`, and the run then exits 1.
   */
 object ShuffleCount {
 
@@ -47,7 +48,7 @@ object ShuffleCount {
     val spark = graft.Sessions.local(4)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => names.forall(_.contains(name)) }
-    selected.foreach { case (name, fn) =>
+    val failed = selected.count { case (name, fn) =>
       try {
         // exchanges are inserted by EnsureRequirements during plan
         // preparation, so count on executedPlan (string form: AQE wraps
@@ -55,10 +56,15 @@ object ShuffleCount {
         val planStr = fn(spark, dir).queryExecution.executedPlan.toString
         val n = count(planStr)
         println(s"[shuffles] $name $n")
+        false
       } catch {
-        case e: Throwable => println(s"[shuffles] $name ERR ${e.getClass.getSimpleName}")
+        case e: Throwable =>
+          println(s"[shuffles] $name ERR ${e.getClass.getSimpleName}: ${e.getMessage}")
+          true
       }
     }
     spark.stop()
+    // a failed row has no count to compare, so the run as a whole fails
+    if (failed > 0) sys.exit(1)
   }
 }

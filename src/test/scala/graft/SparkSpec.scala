@@ -35,6 +35,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.io.Writers.deleteDir(spark, tmp)
   }
 
+  /** Runs `body` and returns its value with the ids of the cached RDDs
+    * it left persisted. Local-checkpoint RDDs are not counted: they
+    * back the frames the graph engines return.
+    */
+  protected def leftPersisted[T](body: => T): (T, Set[Int]) = {
+    def cached = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    val before = cached
+    val out = body
+    (out, cached -- before)
+  }
+
   override protected def afterAll(): Unit =
     try fixtureDirs.foreach(graft.io.Writers.deleteDir(spark, _)) finally super.afterAll()
 }

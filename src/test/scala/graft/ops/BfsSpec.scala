@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.AnalysisException
+
 import graft.SparkSpec
 
 /** The min-plus BFS must (a) produce exact hop distances on a known
@@ -60,5 +62,14 @@ class BfsSpec extends SparkSpec {
     val d5 = distsOf(edges, Seq(0L), 5)
     assert(d2.keySet.subsetOf(d5.keySet))
     d2.foreach { case (n, d) => assert(d5(n) <= d, s"node $n: ${d5(n)} > $d") }
+  }
+
+  test("a round that throws leaves nothing persisted") {
+    val edges = Seq(0L -> 1L, 1L -> 2L).toDF("src", "dst")
+    // no `node` column: the seed frame fails analysis after the edge
+    // list is persisted and counted
+    val (_, left) = leftPersisted(
+      intercept[AnalysisException](Bfs.run(edges, Seq(0L).toDF("id"), 3)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 }

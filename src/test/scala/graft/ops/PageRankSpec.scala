@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.AnalysisException
 
 import graft.SparkSpec
 
@@ -10,7 +10,9 @@ import graft.SparkSpec
   * (long sums commute; that is the whole point of the integer
   * contract), (c) match an independent driver-side replay of the same
   * integer recurrence on an irregular graph, (d) rank a hub above
-  * its spokes, and (e) return no ranks for no edges.
+  * its spokes, (e) return no ranks for no edges, and (f) rank every
+  * node 0 for an empty seed set, as the DuckDB mirror does. No run, not
+  * even a failing one, leaves a frame persisted.
   */
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
@@ -118,5 +120,23 @@ class PageRankSpec extends SparkSpec {
     val got = ranksOf(edges, 5)
     assert((1L to 12L).forall(k => got(0L) > got(k)),
       s"hub must dominate: $got")
+  }
+
+  test("personalized: an empty seed set ranks every out-edge node 0, leaving nothing persisted") {
+    // the DuckDB mirror's `scale // 0` is NULL inside a CASE branch no
+    // node takes, so every node ranks 0
+    val edges = Seq(0L -> 1L, 1L -> 2L, 2L -> 0L, 3L -> 0L)
+    val (got, left) = leftPersisted(pprOf(edges, Seq.empty, 3))
+    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
+
+  test("personalized: a round that throws leaves nothing persisted") {
+    val edges = Seq(0L -> 1L, 1L -> 0L).toDF("src", "dst")
+    // no `node` column: the seed frame fails analysis after the edge
+    // list is persisted and counted
+    val (_, left) = leftPersisted(intercept[AnalysisException](
+      PageRank.runPersonalized(edges, Seq(0L).toDF("id"), 3, Scale)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.AnalysisException
+
 import graft.SparkSpec
 
 /** Weighted min-plus SSSP must (a) prefer a cheaper many-hop path over
@@ -67,5 +69,14 @@ class SsspSpec extends SparkSpec {
   test("early stop at the fixpoint: extra rounds change nothing") {
     val edges = Seq((0L, 1L, 2L), (1L, 2L, 2L), (2L, 3L, 2L))
     assert(distsOf(edges, Seq(0L), 4) == distsOf(edges, Seq(0L), 20))
+  }
+
+  test("a round that throws leaves nothing persisted") {
+    val edges = Seq((0L, 1L, 1L), (1L, 2L, 1L)).toDF("src", "dst", "w")
+    // no `node` column: the seed frame fails analysis after the edge
+    // list is persisted and counted
+    val (_, left) = leftPersisted(
+      intercept[AnalysisException](Sssp.run(edges, Seq(0L).toDF("id"), 3)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 }
