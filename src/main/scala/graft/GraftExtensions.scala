@@ -34,6 +34,8 @@ object GraftExtensions {
   val functions: Seq[(String, FunctionBuilder)] = Seq(
     ("graft_dot", e => DotProductD(e(0), e(1))),
     ("graft_l2norm", e => L2NormalizeD(e(0))),
+    ("graft_vec_mean", e => VecMeanAgg(e(0)).toAggregateExpression()),
+    ("graft_tile_pairs", e => TilePairsExpr(e)),
     ("graft_topk", e => TopKAgg(e(0), e(1), e(2)).toAggregateExpression()),
     ("graft_md5p60", e => Md5Prefix60(e(0))),
     ("graft_minhash_slots", e => MinhashSlotsExpr(e(0))),

@@ -43,6 +43,13 @@ object VecFns {
   def l2normalize(v: Column): Column =
     call_function("graft_l2norm", v)
 
+  /** Exact elementwise mean of the double arrays in a group (aggregate):
+    * per element `CAST(SUM(CAST(x AS DECIMAL(28,9))) AS DOUBLE) / count`,
+    * from one long buffer (graft.expressions.VecMeanAgg).
+    */
+  def vecMean(v: Column): Column =
+    call_function("graft_vec_mean", v)
+
   /** Reference implementation with built-in higher-order functions —
     * kept for equivalence testing only: the lambda re-evaluates the
     * captured norm (a full dot product) PER ELEMENT, an O(n²)

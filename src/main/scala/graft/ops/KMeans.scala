@@ -1,9 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions.TextFns.h60
 import graft.functions.VecFns._
@@ -25,7 +24,8 @@ import graft.functions.VecFns._
   *     both engines share; ties (never observed, rule pinned anyway) keep
   *     the lowest cid;
   *   - update: elementwise DECIMAL(28,9) sums / count (the s03 centroid
-  *     trick — order-independent, bit-exact), then L2-normalized
+  *     trick — order-independent, bit-exact; one `graft_vec_mean`
+  *     aggregate adds the 9-decimal values as longs), then L2-normalized
   *     (spherical k-means: unnormalized means would bias the argmax
   *     toward long centroids); an emptied cluster keeps its previous
   *     centroid;
@@ -42,20 +42,19 @@ import graft.functions.VecFns._
   */
 object KMeans {
 
-  /** Deterministic seed centroids: cid ∈ 1..k in (h60(vec_id), vec_id)
-    * order. `v` must carry (vec_id, e) with e L2-normalized. The pick is
-    * TakeOrderedAndProject (top-k, no global sort); the row_number window
-    * then runs over k rows only.
+  /** Deterministic seed centroids, held on the driver: cid ∈ 1..k in
+    * (h60(vec_id), vec_id) order. `v` must carry (vec_id, e) with e
+    * L2-normalized. The pick is TakeOrderedAndProject (top-k, no global
+    * sort) and the k rows are collected; fewer than k vectors give fewer
+    * seeds, no vectors none.
     */
-  def seeds(v: DataFrame, k: Int): DataFrame = {
-    val picked = v
-      .select(col("vec_id"), col("e"), h60(col("vec_id").cast(StringType)).as("h"))
+  def seeds(v: DataFrame, k: Int): IndexedSeq[(Int, Array[Double])] =
+    v.select(col("vec_id"), col("e"), h60(col("vec_id").cast(StringType)).as("h"))
       .orderBy(col("h"), col("vec_id"))
       .limit(k)
-    picked
-      .withColumn("cid", row_number().over(Window.orderBy(col("h"), col("vec_id"))))
-      .select(col("cid"), col("e").as("c"))
-  }
+      .select(col("e"))
+      .collect().toIndexedSeq.zipWithIndex
+      .map { case (r, i) => (i + 1, r.getSeq[Double](0).toArray) }
 
   /** Assignment as a pure projection: collect the k centroid rows (the
     * sanctioned bounded collect — k×dim doubles, a few KB) and delegate
@@ -83,69 +82,58 @@ object KMeans {
     * and breaks ties toward the lowest cid — exactly the old fold's
     * strict `>` keep-first rule (positions are cid-ascending).
     */
-  def assignLit(v: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    val sorted = cents.sortBy(_._1)
-    val k = sorted.length
-    val centsDF = Seq(sorted.map { case (cid, c) => (cid, c.toSeq) })
-      .toDF("cents") // one row: array<struct<_1: cid, _2: c>>
-    val cc = col("cents")
-    def scored(i: Int) = {
-      val x = element_at(cc, i)
-      struct(dotSeq(x("_2"), col("e")).as("d"), lit(-i).as("m"))
+  def assignLit(v: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame =
+    if (cents.isEmpty) // no centroids: no vector is assigned
+      v.select(col("vec_id"), col("e"), lit(null).cast(IntegerType).as("cid")).where(lit(false))
+    else {
+      val spark = v.sparkSession
+      import spark.implicits._
+      val sorted = cents.sortBy(_._1)
+      val k = sorted.length
+      val centsDF = Seq(sorted.map { case (cid, c) => (cid, c.toSeq) })
+        .toDF("cents") // one row: array<struct<_1: cid, _2: c>>
+      val cc = col("cents")
+      def scored(i: Int) = {
+        val x = element_at(cc, i)
+        struct(dotSeq(x("_2"), col("e")).as("d"), lit(-i).as("m"))
+      }
+      val best =
+        if (k == 1) scored(1)
+        else greatest((1 to k).map(scored): _*)
+      v.crossJoin(broadcast(centsDF))
+        .select(col("vec_id"), col("e"),
+          element_at(cc, -best("m"))("_1").as("cid"))
     }
-    val best =
-      if (k == 1) scored(1)
-      else greatest((1 to k).map(scored): _*)
-    v.crossJoin(broadcast(centsDF))
-      .select(col("vec_id"), col("e"),
-        element_at(cc, -best("m"))("_1").as("cid"))
-  }
 
-  /** `iters` rounds of Lloyd's from the deterministic seeds. Returns the
-    * trained centroids (cid, c) as a local relation.
+  /** `iters` rounds of Lloyd's from the deterministic [[seeds]]. Returns
+    * the trained centroids (cid, c) as a local relation; no vectors give
+    * no centroids.
     *
-    * r13 shape: each round is ONE job — an assignment projection (the
-    * [[assignLit]] fold over literal centroids) into the cid-keyed
-    * decimal aggregate, whose ≤ k result rows are collected and folded
-    * into the next round's centroids ON THE DRIVER (k×dim values — the
-    * sanctioned bounded-collect pattern; at k=8, dim=64 that is 4 KB).
-    * The former DataFrame chain spent 4+ jobs per round (centroid-list
-    * fold, broadcast build, update aggregate, carry-over join,
-    * localCheckpoint) moving k-row frames. Arithmetic is bit-identical:
-    * the decimal sums commute (partition-invariant), the mean is the
-    * same decimal→double cast divided by the same long count, and the
-    * normalize mirrors L2NormalizeD's fold (Σx² left-to-right, sqrt,
-    * divide) — KMeansSpec pins fit/assign equality and the oracle
-    * replays the same rounds.
+    * Each round is ONE job: the [[assignLit]] projection into one
+    * cid-keyed `graft_vec_mean` aggregate (a long[dim + 1] buffer per
+    * cluster, VecMeanAgg), whose ≤ k result rows are collected and
+    * normalized into the next round's centroids ON THE DRIVER (k×dim
+    * values — the sanctioned bounded-collect pattern; at k=8, dim=64
+    * that is 4 KB). The mean is exactly the oracle's
+    * `CAST(SUM(CAST(x AS DECIMAL(28,9))) AS DOUBLE) / count(*)` (long
+    * sums commute: partition-invariant), and the normalize mirrors
+    * L2NormalizeD's fold (Σx² left-to-right, sqrt, divide) —
+    * KMeansSpec pins fit/assign equality and the oracle replays the
+    * same rounds.
     */
-  def fit(v: DataFrame, k: Int, iters: Int, dim: Int): DataFrame = {
-    // seed draw: k rows in (h60(vec_id), vec_id) order — TakeOrdered,
-    // collected; index order IS the former row_number (same total order)
-    var cents: IndexedSeq[(Int, Array[Double])] = v
-      .select(col("vec_id"), col("e"), h60(col("vec_id").cast(StringType)).as("h"))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(k)
-      .select(col("e"))
-      .collect().toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i + 1, r.getSeq[Double](0).toArray) }
-    val sums = (0 until dim).map(d =>
-      sum(element_at(col("e"), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
+  def fit(v: DataFrame, k: Int, iters: Int): DataFrame = {
+    var cents = seeds(v, k)
     for (_ <- 0 until iters) {
       val upd = assignLit(v, cents)
         .groupBy("cid")
-        .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
+        .agg(vecMean(col("e")))
         .collect()
         .map { r =>
-          val n = r.getLong(dim + 1)
-          // Decimal(38,9) -> double, / long: the same cast + division
-          // Spark's `s_d.cast(double) / n` performed per element
-          val mean = Array.tabulate(dim)(d => r.getDecimal(d + 1).doubleValue() / n)
+          val mean = r.getSeq[Double](1).toArray
           // L2NormalizeD's exact fold: Σx² left-to-right, sqrt, divide
           var ss = 0.0
           var i = 0
-          while (i < dim) { ss += mean(i) * mean(i); i += 1 }
+          while (i < mean.length) { ss += mean(i) * mean(i); i += 1 }
           val norm = math.sqrt(ss)
           (r.getInt(0), mean.map(_ / norm))
         }.toMap

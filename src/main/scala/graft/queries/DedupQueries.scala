@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.functions.NumFns.round6
 import graft.functions.TextFns._
 import graft.functions.VecFns._
+import graft.ops.TileJoin
 import graft.streaming.Streaming.drainToMemory
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
@@ -79,24 +80,14 @@ object DedupQueries {
     // trained coarse quantizer (d16/s11/s12)
     "quantizer" -> (() => { Quantizer.assignments(s, dir); () }))
 
-  /** Memoized EXACT embedding near-dup pairs (vec_a, vec_b, c) at the
-    * 0.4 cosine threshold over L2-normalized vectors — the shared exact
-    * reference: d06 IS this frame (rounded, ordered) and d15 scores each
-    * blocking config's proposals against it, so the all-pairs theta join
-    * (the documented exact spec, PlanHygieneSpec) runs ONCE per
-    * (session, dir) instead of once per consumer. Pair volume at the
-    * threshold is tiny (59 rows at sf0.01); the build is the quadratic
-    * part and at 100 TB runs on samples/partitions by contract.
-    */
-  /** Contract bound on the exact all-pairs reference: above this many
-    * vectors the quadratic build stops being an all-rows pass and runs
-    * on a deterministic 1-in-m subsample (m = ⌈n/bound⌉, selected by
-    * vec_id % m == 0 — reproducible across engines and runs, no global
-    * sort, no RNG). 32k vectors ≈ 5·10⁸ candidate pairs — the largest
-    * exact pass worth distributing; at 100 TB the blocked paths (d02,
-    * d15, s02…) are the operating shape and this reference measures
-    * their recall on the sample. Test SFs (≤ 2000 vectors) sit far
-    * below the bound, so d06/d15/d16/d17 parity is over ALL rows there.
+  /** Contract bound on the exact all-pairs reference: the quadratic
+    * build runs over every vector up to this many and is an ERROR above
+    * it — the oracles of every consumer (d06/d15/d16/d17) compute over
+    * all rows, so a sample would quietly change what those rows mean.
+    * 32k vectors ≈ 5·10⁸ candidate pairs, the largest exact pass worth
+    * distributing; at 100 TB the blocked paths (d02, d15, s02…) are the
+    * operating shape and this reference runs on an explicit sample of
+    * the caller's choosing. Test SFs (≤ 2000 vectors) sit far below it.
     */
   val MaxExactVectors: Long = 32768L
 
@@ -106,37 +97,30 @@ object DedupQueries {
     */
   private val md5Empty = "d41d8cd98f00b204e9800998ecf8427e"
 
-  /** The sample rule, factored for the spec: full frame at n ≤ bound,
-    * vec_id % ⌈n/bound⌉ == 0 above it.
+  /** EXACT embedding near-dup pairs (vec_a, vec_b, c) at the 0.4 cosine
+    * threshold over L2-normalized vectors (vec_id, e): the blocked tile
+    * join (ops.TileJoin), bit-identical to the all-pairs theta join
+    * with `graft_dot` (the documented exact spec, PlanHygieneSpec).
+    * More than `bound` vectors is an error.
     */
-  private[queries] def boundedExactInput(v: DataFrame, n: Long, bound: Long): DataFrame =
-    if (n <= bound) v
-    else v.filter(pmod(col("vec_id"), lit((n + bound - 1) / bound)) === 0)
+  private[queries] def exactPairs(v: DataFrame, bound: Long): DataFrame = {
+    val n = v.count()
+    if (n > bound)
+      throw new IllegalArgumentException(s"exact embedding pairs: $n vectors > bound $bound; " +
+        "the all-pairs reference (d06/d15/d16/d17) runs on all rows or not at all")
+    TileJoin.pairs(v.select(col("vec_id"), col("e")), n, 0.4)
+  }
 
+  /** Memoized exact pair reference: d06 IS this frame (rounded,
+    * ordered) and d15 scores each blocking config's proposals against
+    * it, so the quadratic build runs ONCE per (session, dir) instead of
+    * once per consumer. Pair volume at the threshold is tiny (59 rows at
+    * sf0.01). The input is the memoized widened norm frame
+    * (Quantizer.vecsNorm).
+    */
   private def embedPairsExact(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "embedpairs") {
-      // the memoized widened norm frame (Quantizer.vecsNorm): the
-      // quadratic stage's parallelism = stream-side partitions, so the
-      // single-split test file must not reach the join un-widened
-      val v0 = Quantizer.vecsNorm(s, dir)
-      val n = v0.count()
-      if (n > MaxExactVectors) {
-        // loud, not silent: the DuckDB oracles of every consumer
-        // (d06/d15/d16/d17) compute over ALL rows, so an engaged bound
-        // means parity checks at this SF are expected to FAIL — say so
-        // instead of letting the mismatch look like an engine bug
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"embedPairsExact: $n vectors > MaxExactVectors=$MaxExactVectors — " +
-            s"exact reference runs on a 1-in-${(n + MaxExactVectors - 1) / MaxExactVectors} " +
-            "subsample (vec_id % m == 0); d06/d15/d16/d17 oracle parity does NOT hold at this scale")
-      }
-      val v = boundedExactInput(v0, n, MaxExactVectors)
-      val a = v.as("a")
-      val b = v.as("b")
-      a.join(b, col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          dotSeq(col("a.e"), col("b.e")).as("c"))
-        .filter(col("c") >= 0.4)
+      exactPairs(Quantizer.vecsNorm(s, dir), MaxExactVectors)
     }
 
   /** Sign-LSH banding proposals (r, vec_a, vec_b) for the (2×8, 4×4,

@@ -51,7 +51,7 @@ object Quantizer {
   /** Trained centroids (cid, c), cid ∈ 1..K. */
   def centroids(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "kmCent") {
-      KMeans.fit(vecsNorm(s, dir), K, Iters, LshDim)
+      KMeans.fit(vecsNorm(s, dir), K, Iters)
     }
 
   /** Final full-corpus assignment (vec_id, e, cid) under the trained

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.NumFns.round6
 import graft.functions.VecFns._
@@ -48,30 +48,23 @@ object SimilarityQueries {
   private def vecsNorm(s: SparkSession, dir: String): DataFrame =
     Quantizer.vecsNorm(s, dir)
 
-  /** Elementwise mean of the `dim`-long arrays in `vec` per `keys` group,
-    * as the array column `out`: ONE keyed aggregate carrying `dim`
-    * decimal accumulators + a count, assembled into the array in a
-    * projection (an earlier posexplode form shuffled `dim`× the rows on
-    * (key, pos) and needed a second shuffle to re-collect the array;
-    * decimal sums are exact and order-independent, so values are
-    * bit-identical either way and replay in the oracle). The keys are
-    * re-aliased, so a frame built from `df` can join `df` unambiguously.
+  /** Elementwise mean of the arrays in `vec` per `keys` group, as the
+    * array column `out`: ONE keyed `graft_vec_mean` aggregate (a long
+    * buffer per group holding the 9-decimal sums and the count — exact
+    * and order-independent, so values are bit-identical to the oracle's
+    * per-element DECIMAL(28,9) sums / count). The keys are re-aliased,
+    * so a frame built from `df` can join `df` unambiguously.
     */
-  private def meanVecs(df: DataFrame, keys: Seq[String], vec: String, dim: Int,
-      out: String): DataFrame = {
-    val sums = (0 until dim).map(d =>
-      sum(element_at(col(vec), d + 1).cast(DecimalType(28, 9))).as(s"s$d"))
+  private def meanVecs(df: DataFrame, keys: Seq[String], vec: String, out: String): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-      .select(keys.map(k => col(k).as(k)) :+ array((0 until dim).map(d =>
-        col(s"s$d").cast(DoubleType) / col("n")): _*).as(out): _*)
-  }
+      .agg(vecMean(col(vec)).as(out))
+      .select(keys.map(k => col(k).as(k)) :+ col(out): _*)
 
   /** Per-label spherical centroids (label, c): the coarse quantizer of
     * the label-IVF tiers (s03, s10, s13, s18, s23, s24).
     */
   private def ivfCentroids(v: DataFrame): DataFrame =
-    meanVecs(v, Seq("label"), "e", LshDim, "c")
+    meanVecs(v, Seq("label"), "e", "c")
 
   /** The pair conditions of the all-pairs and bucketed tiers, over
     * frames aliased "q" (queries) and "c" (corpus).
@@ -172,7 +165,7 @@ object SimilarityQueries {
 
   /** Per-subspace codebook (m, b, cb): decimal-exact code-bucket means. */
   private def pqCodebook(sub: DataFrame): DataFrame =
-    meanVecs(sub, Seq("m", "b"), "sub", PqSubDim, "cb")
+    meanVecs(sub, Seq("m", "b"), "sub", "cb")
 
   /** The ADC lookup table (query_id, m, b, part): each query subvector's
     * dot with every codebook entry of its subspace.

@@ -5,12 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.TextFns.h60
 import graft.functions.VecFns._
 
 /** Deterministic spherical k-means (ops.KMeans): the learned coarse
   * quantizer under the s11/s12/d16 rows. Pins the properties the oracle
   * replay depends on — seed draw, argmax tie rule, partition invariance
-  * of the decimal centroid update, empty-cluster carry-over — plus a
+  * of the decimal centroid update, empty-cluster carry-over, the empty
+  * and the non-finite input — plus a
   * clusterable-fixture sanity check and the shuffle-free assignment
   * plan shape.
   */
@@ -34,14 +36,35 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("seeds: k rows, cid 1..k, in (h60, vec_id) order") {
-    val s = KMeans.seeds(fixture(20), 5).collect()
-    assert(s.length == 5)
-    assert(s.map(_.getInt(0)).sorted.toSeq == (1 to 5))
+    val v = fixture(20)
+    val s = KMeans.seeds(v, 5)
+    assert(s.map(_._1) == (1 to 5))
+    // the same draw on the driver: all (h60, vec_id) keys sorted, first 5
+    val byId = v.select(col("vec_id"), col("e"), h60(col("vec_id").cast("string")))
+      .as[(Long, Seq[Double], Long)].collect()
+    val want = byId.sortBy(r => (r._3, r._1)).take(5).map(_._2)
+    assert(s.map(_._2.toSeq) == want.toSeq)
+  }
+
+  test("no vectors: fit gives no centroids and assign no rows") {
+    val v = fixture(4).where(lit(false))
+    val cent = KMeans.fit(v, 3, 2)
+    assert(cent.columns.toSeq == Seq("cid", "c") && cent.count() == 0)
+    val asg = KMeans.assign(fixture(4), cent)
+    assert(asg.columns.toSeq == Seq("vec_id", "e", "cid") && asg.count() == 0)
+  }
+
+  test("a NaN coordinate fails the fit instead of publishing a null centroid") {
+    val v = (0 until 6).map(i => (i.toLong, Seq(1.0, i.toDouble, if (i == 3) Double.NaN else 0.0)))
+      .toDF("vec_id", "e")
+    val err = intercept[Exception](KMeans.fit(v, 2, 1))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("non-finite")), err)
   }
 
   test("assignment matches the explode-based argmax (lowest cid on ties)") {
     val v = fixture(30)
-    val cent = KMeans.fit(v, 3, 2, 4)
+    val cent = KMeans.fit(v, 3, 2)
     val got = KMeans.assign(v, cent)
       .select("vec_id", "cid").as[(Long, Int)].collect().toMap
     // independent argmax: explode all (vector, centroid) dots, window
@@ -56,7 +79,7 @@ class KMeansSpec extends SparkSpec {
   test("centroids are partition-invariant (decimal sums)") {
     val v = fixture(40)
     def cents(df: DataFrame): Map[Int, Seq[Double]] =
-      KMeans.fit(df, 4, 3, 4)
+      KMeans.fit(df, 4, 3)
         .select("cid", "c").as[(Int, Seq[Double])].collect().toMap
     assert(cents(v.repartition(7)) == cents(v.repartition(1)))
   }
@@ -68,7 +91,7 @@ class KMeansSpec extends SparkSpec {
     val v = (0 until 12).map(i => (i.toLong, Array(0.5, 0.5, 0.5, 0.5)))
       .toDF("vec_id", "raw")
       .select(col("vec_id"), l2normalize(col("raw")).as("e"))
-    val cent = KMeans.fit(v, 3, 2, 4)
+    val cent = KMeans.fit(v, 3, 2)
       .select("cid", "c").as[(Int, Seq[Double])].collect()
     assert(cent.length == 3)
     assert(cent.forall { case (_, c) => c.length == 4 && c.forall(x => !x.isNaN) })
@@ -76,7 +99,7 @@ class KMeansSpec extends SparkSpec {
 
   test("k=2 on a two-group fixture recovers the groups") {
     val v = fixture(40)
-    val asg = KMeans.assign(v, KMeans.fit(v, 2, 3, 4))
+    val asg = KMeans.assign(v, KMeans.fit(v, 2, 3))
       .select("vec_id", "cid").as[(Long, Int)].collect()
     val byGroup = asg.groupBy(_._1 % 2 == 0).map { case (g, xs) =>
       g -> xs.map(_._2).distinct.toSeq
@@ -88,7 +111,7 @@ class KMeansSpec extends SparkSpec {
 
   test("assignment never shuffles: one-row broadcast LocalRelation, no Exchange") {
     val v = fixture(30)
-    val cent = KMeans.fit(v, 3, 2, 4)
+    val cent = KMeans.fit(v, 3, 2)
     val plan = KMeans.assign(v, cent).queryExecution.executedPlan.toString
     // r14: the centroid list rides as a one-row broadcast LocalRelation
     // (bounded k-row collect), so there is NO shuffle exchange anywhere —

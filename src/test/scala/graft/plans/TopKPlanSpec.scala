@@ -201,7 +201,7 @@ class TopKPlanSpec extends SparkSpec {
     val vecs = fresh.createDataFrame(Seq(
       (1L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0)), (3L, Array(0.6, 0.8))))
       .toDF("vec_id", "e")
-    val asg = graft.ops.KMeans.assign(vecs, graft.ops.KMeans.fit(vecs, 2, 2, 2))
+    val asg = graft.ops.KMeans.assign(vecs, graft.ops.KMeans.fit(vecs, 2, 2))
     assert(asg.count() == 3)
     val top = TopKPlan.topKPerGroup(fresh.createDataFrame(Seq(
       ("a", 1L, 1.0), ("a", 2L, 2.0), ("b", 3L, 3.0))).toDF("grp", "id", "value"),

@@ -1,40 +1,28 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
-/** Pins the sample-bound contract of the exact embedding-pair reference
-  * (DedupQueries.boundedExactInput): the quadratic all-pairs build runs
-  * over every vector only up to MaxExactVectors; above the bound it must
-  * switch to the deterministic 1-in-m subsample (vec_id % ⌈n/bound⌉ == 0)
-  * instead of silently attempting an unbounded n² pass. The 100 TB story
-  * for d06/d15/d16/d17 depends on this bound actually engaging.
+/** Pins the bound contract of the exact embedding-pair reference
+  * (DedupQueries.exactPairs): the quadratic all-pairs build runs over
+  * every vector up to MaxExactVectors and is an error above it — never
+  * a silent sample, since the oracles of d06/d15/d16/d17 are all-rows.
   */
 class ExactBoundSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def vecs(n: Int) = (0L until n.toLong).toDF("vec_id")
+  /** n identical unit vectors: every pair has cosine 1. */
+  private def vecs(n: Int) =
+    (0L until n.toLong).map(i => (i, Seq(0.6, 0.8))).toDF("vec_id", "e")
 
   test("at or below the bound: the input passes through whole") {
-    val v = vecs(100)
-    val out = DedupQueries.boundedExactInput(v, 100L, 100L)
-    assert(out.count() === 100L)
-    assert(out.collect().map(_.getLong(0)).sorted.sameElements(0L until 100L))
+    val out = DedupQueries.exactPairs(vecs(100), 100L)
+    assert(out.count() === 100L * 99L / 2)
   }
 
-  test("above the bound: deterministic 1-in-m subsample, m = ceil(n/bound)") {
-    val v = vecs(1000)
-    val out = DedupQueries.boundedExactInput(v, 1000L, 300L)
-    // m = ceil(1000/300) = 4 -> vec_id % 4 == 0 -> 250 ids
-    val got = out.collect().map(_.getLong(0)).sorted
-    assert(got.sameElements(0L until 1000L by 4L), s"got ${got.length} ids")
-    assert(got.length <= 300, "sampled frame must fit the bound")
-    // re-evaluation yields the identical sample (no RNG anywhere)
-    val again = DedupQueries.boundedExactInput(v, 1000L, 300L)
-      .collect().map(_.getLong(0)).sorted
-    assert(got.sameElements(again))
+  test("above the bound: the exact reference is an error, not a sample") {
+    val err = intercept[IllegalArgumentException](DedupQueries.exactPairs(vecs(101), 100L))
+    assert(err.getMessage.contains("101 vectors > bound 100"), err.getMessage)
   }
 
   test("test-SF embeddings sit below the production bound (full parity)") {

@@ -55,7 +55,12 @@ class PlanBudgetSpec extends SparkSpec {
     // is one exchange, once per session)
     "d02_minhash_pairs" -> 10,
     "d03_minhash_lsh" -> 9, "d04_simhash" -> 2,
-    "d05_ngram_jaccard" -> 9, "d06_embed_neardup" -> 3,
+    // d06/d15/d16/d17 +4: the memoized exact pair build (embedded in
+    // each plan) is now the blocked tile join, whose one tile exchange
+    // prints 4 static plan_ids (both CartesianProduct sides, AQE
+    // initial and final print); the per-pair nested-loop join it
+    // replaced broadcast its input, which is not counted
+    "d05_ngram_jaccard" -> 9, "d06_embed_neardup" -> 7,
     "d07_dedup_clusters" -> 1, "d08_sig_dedup" -> 2,
     "d09_dedup_keep" -> 3, "d10_edit_verify" -> 9,
     // d11 embeds the quantizer memo's first-build plan when it is the
@@ -76,7 +81,7 @@ class PlanBudgetSpec extends SparkSpec {
     // d15/d17 pipeline the shared signProposals banding join inline
     // (deliberately not materialized — the 2-bit config proposes ~all
     // pairs, caching it would cost n²/4 rows)
-    "d15_blocking_eval" -> 6, "d17_threshold_sweep" -> 6,
+    "d15_blocking_eval" -> 10, "d17_threshold_sweep" -> 10,
     "d18_containment" -> 9, // d05's candidate-verify shape
     // e18: user-lag window + tiny (prev,next) matrix agg + present sort
     "e18_transitions" -> 4,
@@ -266,7 +271,7 @@ class PlanBudgetSpec extends SparkSpec {
     // k-means fit's centroid-fold and update exchanges printed on first
     // (uncached) planning. s12 composes s01+s03+s11.
     "s11_kmeans_topk" -> 6, "s12_quantizer_recall" -> 19,
-    "d16_blocking_compare" -> 12,
+    "d16_blocking_compare" -> 14,
     // d22: span-key aggregate + doc-islands window + presentation sort;
     // the dup-key set broadcasts back onto the spans side and the
     // run/per-doc aggregates ride the window's doc partitioning
